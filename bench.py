@@ -295,7 +295,8 @@ def main() -> None:
         "the r<=11 cold-suite artifacts. cpu_canary_s = wall of a "
         "fixed single-thread loop at suite start/end (box-speed "
         "reference for cross-round comparison); cpu_canary_mt_s "
-        "(r13+) = wall of 16 concurrent GIL-free numpy loops, "
+        "(r13+) = wall of 16 subprocesses running that pure-Python "
+        "loop at once, "
         "catching the host's multicore-degraded states that leave "
         "the single-thread canary normal"
     )

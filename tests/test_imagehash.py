@@ -119,6 +119,53 @@ def test_media_phash_df_mixed_payloads_quarantine(spark):
     assert got["corrupt"].phash is None
 
 
+def test_quarantine_row_keeps_batch_neighbour_hashes_exact(spark):
+    """A corrupt payload in the SAME Arrow batch as good ones (one
+    partition) must not change their 64-bit hashes: each equals the
+    row-by-row hash exactly, for the image and the video pass."""
+    from vectra_py_spark.operators.avi import synth_avi
+    from vectra_py_spark.operators.imagehash import _decode_pixels
+    from vectra_py_spark.operators.videohash import (
+        video_frame_hashes,
+        video_phash_df,
+    )
+
+    good = {
+        "png": mm.encode_png(_img(7)),
+        "jpeg": mm.encode_jpeg(_img(8)),
+        "gif": mm.synth_gif(3, 24, 16),
+        "avi": synth_avi(4, 24, 16),
+    }
+    rows = sorted(good.items()) + [("corrupt", b"\xff\xd8broken")]
+    df = spark.createDataFrame(rows, ["media_id", "data"]).coalesce(1)
+
+    expect_img = {
+        k: (phash64(_decode_pixels(p)), dhash64(_decode_pixels(p)))
+        for k, p in good.items()
+    }
+    got_img = {
+        r.media_id: (r.phash, r.dhash)
+        for r in media_phash_df(df).collect()
+        if r.error is None
+    }
+    assert got_img == expect_img
+
+    expect_vid = {
+        (k, fi, fp)
+        for k in ("avi", "gif")
+        for fi, fp in video_frame_hashes(good[k])
+    }
+    vid = video_phash_df(df).collect()
+    got_vid = {
+        (r.media_id, r.frame_idx, r.phash) for r in vid if r.error is None
+    }
+    assert got_vid == expect_vid
+    assert {r.media_id for r in vid if r.error is not None} >= {"corrupt"}
+    # the check has teeth: float64 cannot hold these hashes exactly
+    assert any(int(float(h)) != h for h, _ in expect_img.values())
+    assert any(int(float(fp)) != fp for _, _, fp in expect_vid)
+
+
 @pytest.mark.parametrize("radius", [3, 7])
 def test_phash_neardup_banded_equals_bruteforce(spark, radius):
     """Pigeonhole banding is exact for the Hamming ball: the banded

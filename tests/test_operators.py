@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_ORACLE, SF_SMOKE
 from vectra_py_spark.operators import dedup as dd
 from vectra_py_spark.operators import similarity as sim
 from vectra_py_spark.operators import text_analysis as ta
@@ -155,40 +156,6 @@ def test_cosine_topk(vecs):
     assert out[0].score == 1.0
 
 
-def test_cosine_topk_param_matches_literal_plan(vecs):
-    """The repeated-shape serving variant (broadcast 1-row query
-    relation, codegen-cache-friendly) is RESULT-identical to the
-    literal-vector plan — winners, scores, column order — and its plan
-    text is invariant across query vectors (the property the adhoc
-    plan-reuse row rests on)."""
-    for q in ([1.0, 0.0, 0.0, 0.0], [0.3, -0.2, 0.9, 0.1]):
-        a = sim.cosine_topk(vecs, q, k=3).collect()
-        b = sim.cosine_topk_param(vecs, q, k=3).collect()
-        assert a == b
-    # zero query norm: same 0.0-score contract as the literal path
-    z = sim.cosine_topk_param(vecs, [0.0] * 4, k=2).collect()
-    assert all(r.score == 0.0 for r in z)
-    # plan identical across vectors up to expression ids (codegen keys
-    # on ordinals, not ids) → generated code reusable; the literal plan
-    # by contrast embeds the vector in the plan text itself
-    import re
-
-    def shape(df):
-        s = df._jdf.queryExecution().executedPlan().toString()
-        # expression ids and lambda-variable counters are globally
-        # increasing cosmetic names; codegen's source uses its own
-        # per-compilation fresh names, so they don't affect reuse
-        s = re.sub(r"plan_id=\d+", "plan_id=n", s)
-        return re.sub(r"_\d+", "_n", re.sub(r"#\d+", "#x", s))
-
-    p1 = sim.cosine_topk_param(vecs, [1.0, 0.0, 0.0, 0.0], k=3)
-    p2 = sim.cosine_topk_param(vecs, [9.0, 8.0, 7.0, 6.0], k=3)
-    assert shape(p1) == shape(p2)
-    l1 = sim.cosine_topk(vecs, [1.0, 0.0, 0.0, 0.0], k=3)
-    l2 = sim.cosine_topk(vecs, [9.0, 8.0, 7.0, 6.0], k=3)
-    assert shape(l1) != shape(l2)
-
-
 def test_lsh_join_recall_vs_exact(vecs):
     exact = {(r.id_a, r.id_b) for r in
              sim.cosine_similarity_join(vecs, threshold=0.9).collect()}
@@ -303,13 +270,15 @@ def test_seeded_centroids_unit_norm():
         assert abs(sum(x * x for x in c) - 1.0) < 1e-12
 
 
-def test_ivf_indexed_partition_pruning(spark, tmp_path):
+@pytest.mark.parametrize("seed", [7, 11, 13])
+@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_ORACLE], ids=["sf0.001", "sf0.01"])
+def test_ivf_indexed_partition_pruning(spark, tmp_path, sf_dir, seed):
     """ivf_write_index + ivf_topk_indexed: results equal the inline
     ivf_topk, and the scan plan prunes to the probed cell partitions."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     from vectra_py_spark.plans.entry_queries import seeded_query_vector
 
-    q = seeded_query_vector(64, 7)
+    q = seeded_query_vector(64, seed)
     path = str(tmp_path / "ivf")
     sim.ivf_write_index(emb, path, n_cells=8)
     indexed = sim.ivf_topk_indexed(spark, path, q, k=10, n_cells=8, nprobe=2)

@@ -216,6 +216,10 @@ def media_phash_df(df, id_col: str = "media_id", payload_col: str = "data"):
                     rows["height"].append(None)
                     rows["width"].append(None)
                     rows["error"].append(str(exc) or "decode error")
+            # nullable Int64: a None next to a 64-bit hash would make
+            # pandas promote the column to float64 and round the hash
+            for k in ("phash", "dhash"):
+                rows[k] = pd.array(rows[k], dtype="Int64")
             yield pd.DataFrame(rows)
 
     return df.select(id_col, payload_col).mapInPandas(

@@ -476,23 +476,16 @@ def ivfpq_topk(
     and one ``TakeOrderedAndProject``.
     """
     from vectra_py_spark.operators.similarity import (
-        _seq_dot,
+        _probe_cells,
         cell_assignment_expr,
         seeded_centroids,
     )
 
-    dim = len(query)
-    cents = seeded_centroids(dim, n_cells, seed)
-    probe = [
-        cid
-        for _, cid in sorted(
-            (-_seq_dot(query, c), cid) for cid, c in enumerate(cents)
-        )[:nprobe]
-    ]
-    cand = (
-        df.withColumn("cell", cell_assignment_expr(cents, vector_col))
-        .filter(F.col("cell").isin(probe))
-        .drop("cell")
+    cents = seeded_centroids(len(query), n_cells, seed)
+    cand = df.filter(
+        cell_assignment_expr(cents, vector_col).isin(
+            _probe_cells(query, cents, nprobe)
+        )
     )
     return pq_topk(
         cand, query, k=k, codebook=codebook, id_col=id_col,
@@ -515,37 +508,17 @@ def ivfpq_topk_sql(
     centroids, probes, tie rule) feeding the SHARED pq encode/LUT/ADC
     tail (:func:`_pq_sql_tail`) over the cell-pruned survivors."""
     from vectra_py_spark.operators.similarity import (
-        _plane_lit_sql,
-        _seq_dot,
+        _cells_cte_sql,
+        _probe_cells,
         seeded_centroids,
     )
 
     cb = codebook or pq_codebook()
     cents = seeded_centroids(len(query), n_cells, seed)
-    probe = ", ".join(
-        str(cid)
-        for _, cid in sorted(
-            (-_seq_dot(query, c), cid) for cid, c in enumerate(cents)
-        )[:nprobe]
-    )
-    q = [float(x) for x in query]
-    qi = [_half_away(x * PQ_SCALE) for x in q]
-    v = f"{vector_expr}::DOUBLE[]"
-    dot_union = "\n            UNION ALL\n".join(
-        f"            SELECT {id_col} AS vid, {cid} AS cid, "
-        f"list_dot_product({v}, {_plane_lit_sql(c)}) AS d FROM {table}"
-        for cid, c in enumerate(cents)
-    )
+    probe = ", ".join(str(cid) for cid in _probe_cells(query, cents, nprobe))
+    qi = [_half_away(float(x) * PQ_SCALE) for x in query]
     return f"""
-        WITH dots AS (
-{dot_union}
-        ),
-        cells AS (
-            SELECT DISTINCT vid,
-                   first_value(cid) OVER
-                       (PARTITION BY vid ORDER BY d DESC, cid ASC) AS cell
-            FROM dots
-        ),
+        WITH {_cells_cte_sql(cents, table, id_col, vector_expr)},
         survivors AS (
             SELECT t.* FROM {table} t
             JOIN cells ON t.{id_col} = cells.vid

@@ -6,16 +6,20 @@ LSH-bucketed ANN (SURVEY.md §2.3 V8, BASELINE.json north star).
 - :func:`cosine_similarity_join` — exact N×M ≥-threshold pair join.
   Quadratic: the oracle/recall baseline, fine at test scale, NOT the
   100 TB path.
-- :func:`hyperplane_signatures` / :func:`lsh_similarity_join` — the
-  scale path: random-hyperplane LSH. Seeded hyperplanes are generated
-  driver-side (pure-integer LCG → portable doubles) and embedded as
-  plan literals; bucket = packed sign bits, candidates join per bucket
-  (equi-join, AQE-managed) and verify with exact cosine. Same algorithm
-  is emitted as DuckDB SQL from the same literals, so even the
-  *approximate* operator is oracle-checkable — identical candidates,
-  identical results.
+- :func:`lsh_similarity_join` / :func:`lsh_topk` — the scale path:
+  random-hyperplane LSH. Seeded hyperplanes are generated driver-side
+  (pure-integer LCG → portable doubles); one signature kernel packs the
+  sign bits into per-table bucket keys for both the pair join (equi-join
+  per bucket, AQE-managed, exact-cosine verify) and the top-k (a
+  semi-join on the query's keys). Same algorithm is emitted as DuckDB
+  SQL from the same literals, so even the *approximate* operators are
+  oracle-checkable — identical candidates, identical results.
 - :func:`ivf_topk` — IVF-style pruned top-k: k-means-lite centroids
   (seeded deterministic sample), probe the nearest ``nprobe`` cells.
+
+Every approximate top-k is a candidate source finished by
+:func:`cosine_topk`: LSH bucket keys, IVF cells
+(:func:`cell_assignment_expr`), or an IVF layout's cell partitions.
 
 100 TB notes: brute pair join is O(N²) — never ship; LSH bucket join
 shuffles on (bucket) with AQE skew splitting; signatures are one narrow
@@ -36,7 +40,6 @@ from vectra_py_spark.functions.vector import (
     cosine_to_query,
     cosine_to_query_sql,
     dot,
-    l2_norm,
     vector_literal,
 )
 from vectra_py_spark.session import spread
@@ -51,7 +54,6 @@ __all__ = [
     "cosine_similarity_join",
     "cosine_similarity_join_sql",
     "seeded_hyperplanes",
-    "hyperplane_signatures",
     "query_buckets",
     "lsh_topk",
     "lsh_topk_sql",
@@ -165,52 +167,6 @@ def cosine_topk(
         df.withColumn(
             "score", F.round(cosine_to_query(vector_col, query), _DP)
         )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def cosine_topk_param(
-    df: DataFrame,
-    query: Sequence[float],
-    k: int,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-) -> DataFrame:
-    """Repeated-shape adhoc variant (VERDICT r6 item 3) — the measured
-    plan-reuse EXPERIMENT, kept with its negative result: identical
-    results to :func:`cosine_topk`, but the query vector (and its norm)
-    enters the plan as a BROADCAST 1-row relation instead of a literal
-    array, making the physical plan byte-identical across query vectors
-    (pinned in tests/test_operators.py).
-
-    Measured outcome (scripts/adhoc_breakdown.py, ``repeated_*`` row,
-    sf0.1 local[32]): this is SLOWER than the literal plan (~300 vs
-    ~175 ms fresh), because (a) Spark 4.1 has no analyzed-plan cache —
-    the ~90 ms analysis/planning cost is re-paid for every new
-    DataFrame regardless of how the vector binds; (b) the binding
-    itself adds a BroadcastNestedLoopJoin + a per-query broadcast
-    exchange; and (c) there is no per-vector JIT to save — the HOF
-    cosine is CodegenFallback (interpreted), and complex-type literals
-    land in the codegen references array, not the source text, so even
-    literal plans share generated code. Spark's per-plan floor is
-    architectural; the serving answer for repeated queries is
-    :func:`cosine_topk_batch` (~1.9 ms/query warm). README
-    "Supported serving mode" documents the full finding."""
-    spark = df.sparkSession
-    q = [float(x) for x in query]
-    q_norm = float(sum(x * x for x in q) ** 0.5)
-    qdf = spark.createDataFrame(
-        [(q, q_norm)], "__q array<double>, __q_norm double"
-    )
-    vc = F.col(vector_col)
-    score = F.when(F.col("__q_norm") == 0.0, F.lit(0.0)).otherwise(
-        dot(vc, F.col("__q")) / (l2_norm(vc) * F.col("__q_norm"))
-    )
-    return (
-        df.crossJoin(F.broadcast(qdf))
-        .withColumn("score", F.round(score, _DP))
-        .drop("__q", "__q_norm")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )
@@ -464,20 +420,68 @@ def cosine_similarity_join_sql(
 
 
 # ---------------------------------------------------------------------------
-# LSH (random hyperplane) bucketed similarity join
+# LSH (random hyperplane) signatures, pair join and top-k
 # ---------------------------------------------------------------------------
-def hyperplane_signatures(
+def _lsh_signatures(
     df: DataFrame,
     planes: list[list[float]],
-    vector_col: str = "embedding",
-    out_col: str = "bucket",
+    bits_per_table: int,
+    id_col: str,
+    vector_col: str,
 ) -> DataFrame:
-    """Pack sign(v·p) bits into an integer bucket id (plan literals)."""
-    bits = [
-        F.when(dot(F.col(vector_col), vector_literal(p)) >= 0, 1 << i).otherwise(0)
-        for i, p in enumerate(planes)
-    ]
-    return df.withColumn(out_col, sum(bits).cast("int"))
+    """(vid, key) per row and table: the packed ``tbl·2^b + bucket`` key,
+    the candidate kernel of both :func:`lsh_similarity_join` and
+    :func:`lsh_topk`.
+
+    All b·L plane dots per row come from one vectorized numpy pass. The
+    fold is BIT-IDENTICAL to the HOF/oracle arithmetic: products first
+    (x·y per dimension, doubles), then a left-to-right sum in dimension
+    order — ``acc = (acc + p_i)`` per element, the exact IEEE sequence
+    ``aggregate(zip_with(vec, plane, *), 0.0, +)`` executes — so bucket
+    signs never diverge from the DuckDB twins or :func:`query_buckets`.
+    A vector whose length is not the planes' dimension (a ragged column
+    included) raises ``ValueError`` in every batch layout instead of
+    miscomputing.
+    """
+    planes_arr = np.array(planes, dtype=np.float64)  # (b·L, dim)
+    n_planes, pdim = planes_arr.shape
+    bits = bits_per_table
+    n_tables = n_planes // bits
+    tbl_base = np.arange(n_tables) * (1 << bits)
+    bit_vals = 1 << (np.arange(n_planes) % bits)
+
+    def signatures(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            lens = np.fromiter(
+                (len(v) for v in pdf["vec"]), dtype=np.int64,
+                count=len(pdf),
+            )
+            if lens.min() != pdim or lens.max() != pdim:
+                raise ValueError(
+                    "LSH signatures: ragged vector column or wrong "
+                    f"dimension (lengths {lens.min()}..{lens.max()}, "
+                    f"planes {pdim}); every vector must have the "
+                    "planes' dimension"
+                )
+            V = np.array(list(pdf["vec"]), dtype=np.float64)
+            acc = np.zeros((len(V), n_planes))
+            for i in range(pdim):
+                acc = acc + V[:, i][:, None] * planes_arr[None, :, i]
+            packed = np.where(acc >= 0.0, bit_vals[None, :], 0)
+            keys = packed.reshape(len(V), n_tables, bits).sum(axis=2)
+            keys += tbl_base[None, :]
+            yield pd.DataFrame({
+                "vid": np.repeat(pdf["vid"].to_numpy(), n_tables),
+                "key": keys.ravel().astype(np.int32),
+            })
+
+    vid_dt = dict(df.dtypes)[id_col]  # preserve the caller's id dtype
+    base = spread(
+        df.select(F.col(id_col).alias("vid"), F.col(vector_col).alias("vec"))
+    )
+    return base.mapInPandas(signatures, schema=f"vid {vid_dt}, key INT")
 
 
 def lsh_similarity_join(
@@ -500,13 +504,10 @@ def lsh_similarity_join(
     ~1.0 at near-dup thresholds. A single-table design (the naive
     construction) has ~2% recall at τ=0.4 — measured, not theoretical.
 
-    Plan shape (measured 11.7 s → ~3 s at sf0.1):
+    Plan shape:
 
-    - **signatures** via a broadcast join against a tiny
-      (tbl, bit, plane) table + partial-agg bit packing — the per-plane
-      dot is the SAME left-to-right HOF as the oracle, but on columns,
-      so the plan carries 36 rows instead of ~2,300 inlined literals
-      (literal blow-up made Catalyst codegen compile dominate runtime).
+    - **signatures** from :func:`_lsh_signatures` — one narrow Arrow
+      pass, cached for the self-join.
     - **candidates** equi-join on one packed int key
       ``tbl·2^b + bucket``; ids only — vectors never ride the banding
       explode (the 100 TB shuffle hazard); AQE splits skewed buckets.
@@ -522,66 +523,9 @@ def lsh_similarity_join(
     verify = resolve_similarity_strategy(
         df, verify, vector_col, small="broadcast", large="join"
     )
-    spark = df.sparkSession
     planes = seeded_hyperplanes(dim, bits_per_table * n_tables, seed)
-    # Signatures in ONE vectorized pass (guide §4.2): all b·L plane
-    # dots per row from a numpy loop over dimensions, replacing the
-    # broadcast-join row explode (×b·L rows) + interpreted HOF dot +
-    # partial-agg bit packing + a (vid, tbl) exchange. The fold is
-    # BIT-IDENTICAL to the HOF/oracle arithmetic: products first
-    # (x·y per dimension, doubles), then a left-to-right sum in
-    # dimension order — ``acc = (acc + p_i)`` per element, the exact
-    # IEEE sequence ``aggregate(zip_with(vec, plane, *), 0.0, +)``
-    # executes — so bucket signs can never diverge cross-engine.
-    # Measured 4.2 s → ~2 s for lsh_neardup_strict at sf0.1; one
-    # exchange fewer in the plan.
-    planes_arr = np.array(planes, dtype=np.float64)  # (b·L, dim)
-    n_planes, pdim = planes_arr.shape
-    bits = bits_per_table
-    tbl_base = (np.arange(n_planes) // bits) * (1 << bits)
-    bit_vals = 1 << (np.arange(n_planes) % bits)
-
-    def _signatures(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # cheap dim guard (VERDICT r12): on RAGGED vectors
-            # np.array would build an object array / raise an opaque
-            # numpy error mid-stage; upstream contracts make ragged
-            # input unlikely, so refuse it explicitly instead of
-            # miscomputing (one len() per row — trivial next to the
-            # b·L plane dots per row)
-            lens = np.fromiter(
-                (len(v) for v in pdf["vec"]), dtype=np.int64,
-                count=len(pdf),
-            )
-            if len(lens) and lens.min() != lens.max():
-                raise ValueError(
-                    "lsh_similarity_join: ragged vector column "
-                    f"(lengths {lens.min()}..{lens.max()}); all "
-                    "vectors must share one dimension"
-                )
-            V = np.array(list(pdf["vec"]), dtype=np.float64)
-            acc = np.zeros((len(V), n_planes))
-            for i in range(min(pdim, V.shape[1])):
-                acc = acc + V[:, i][:, None] * planes_arr[None, :, i]
-            packed = np.where(acc >= 0.0, bit_vals[None, :], 0)
-            keys = np.zeros((len(V), n_planes // bits), dtype=np.int64)
-            for t in range(n_planes // bits):
-                keys[:, t] = packed[:, t * bits:(t + 1) * bits].sum(axis=1)
-            keys += tbl_base[::bits][None, :]
-            ids = pdf["vid"].to_numpy()
-            yield pd.DataFrame({
-                "vid": np.repeat(ids, n_planes // bits),
-                "key": keys.ravel().astype(np.int32),
-            })
-
-    vid_dt = dict(df.dtypes)[id_col]  # preserve the caller's id dtype
-    base = spread(
-        df.select(F.col(id_col).alias("vid"), F.col(vector_col).alias("vec"))
-    )
-    sig = base.mapInPandas(
-        _signatures, schema=f"vid {vid_dt}, key INT"
+    sig = _lsh_signatures(
+        df, planes, bits_per_table, id_col, vector_col
     ).cache()
     a = sig.select(F.col("vid").alias("id_a"), "key")
     b = sig.select(F.col("vid").alias("id_b"), "key")
@@ -612,42 +556,8 @@ def lsh_similarity_join(
             .select("id_a", "id_b", "cosine")
         )
 
-    # streamed like _collect_unit_broadcast (VERDICT r12 item 9): the
-    # driver holds the numpy arrays (budget-bounded via the strategy
-    # resolution above) plus one chunk of Rows, not the whole vector
-    # set as Rows; then sorted by id for the searchsorted probe
-    it = df.select(id_col, vector_col).toLocalIterator(
-        prefetchPartitions=True
-    )
-    id_chunks: list = []
-    mat_chunks: list = []
-    buf_i: list = []
-    buf_v: list = []
-    for r in it:
-        buf_i.append(r[0])
-        buf_v.append(r[1])
-        if len(buf_i) >= _COLLECT_CHUNK:
-            id_chunks.append(np.array(buf_i, dtype=np.int64))
-            mat_chunks.append(np.array(buf_v, dtype=np.float64))
-            buf_i, buf_v = [], []
-    if buf_i:
-        id_chunks.append(np.array(buf_i, dtype=np.int64))
-        mat_chunks.append(np.array(buf_v, dtype=np.float64))
-    ids = (
-        np.concatenate(id_chunks)
-        if id_chunks
-        else np.zeros(0, dtype=np.int64)
-    )
-    mat = (
-        np.vstack(mat_chunks)
-        if mat_chunks
-        else np.zeros((0, 1), dtype=np.float64)
-    )
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    unit = mat / norms[:, None]
-    order = np.argsort(ids)
-    bc = spark.sparkContext.broadcast((ids[order], unit[order]))
+    # sorted by id for the searchsorted probe in check()
+    bc = _collect_unit_broadcast(df, id_col, vector_col, by_id=True)
 
     # A pair colliding in several tables appears several times; verifying
     # the duplicates is a few vectorized flops each, so the winning plan
@@ -717,47 +627,20 @@ def lsh_topk(
     """ANN top-k: LSH-bucket-pruned candidates, exact-cosine ranked.
 
     The query's bucket per table is computed once on the driver; rows
-    whose signature collides in ≥1 table become candidates (a semi-join
-    on the packed bucket key — at scale, with items Parquet-partitioned
-    by bucket prefix, this prunes entire partitions), then candidates
-    are scored exactly and ranked. Recall follows the same
-    1−(1−p^b)^L amplification as :func:`lsh_similarity_join`.
+    whose signature (:func:`_lsh_signatures`) collides in ≥1 table
+    become candidates (a semi-join on the packed bucket key — at scale,
+    with items Parquet-partitioned by bucket prefix, this prunes entire
+    partitions), and :func:`cosine_topk` ranks them. Recall follows the
+    same 1−(1−p^b)^L amplification as :func:`lsh_similarity_join`.
     """
     dim = len(query)
     planes = seeded_hyperplanes(dim, bits_per_table * n_tables, seed)
     qkeys = query_buckets(query, bits_per_table, n_tables, seed, dim)
-    spark = df.sparkSession
-    planes_df = spark.createDataFrame(
-        [
-            (p // bits_per_table, 1 << (p % bits_per_table), planes[p])
-            for p in range(len(planes))
-        ],
-        "tbl INT, bit INT, plane ARRAY<DOUBLE>",
-    )
-    base = df.select(F.col(id_col).alias("vid"), F.col(vector_col).alias("vec"))
-    sig = (
-        base.join(F.broadcast(planes_df))
-        .groupBy("vid", "tbl")
-        .agg(
-            F.sum(
-                F.when(dot(F.col("vec"), F.col("plane")) >= 0, F.col("bit"))
-                .otherwise(0)
-            ).cast("int").alias("bucket")
-        )
-        .select(
-            "vid",
-            (F.col("tbl") * (1 << bits_per_table) + F.col("bucket")).alias("key"),
-        )
-    )
-    cand_ids = sig.filter(F.col("key").isin(qkeys)).select("vid").distinct()
-    cand = df.join(cand_ids, df[id_col] == cand_ids["vid"], "left_semi")
-    return (
-        cand.withColumn(
-            "score", F.round(cosine_to_query(vector_col, query), _DP)
-        )
-        .select(id_col, *extra_cols, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    sig = _lsh_signatures(df, planes, bits_per_table, id_col, vector_col)
+    hits = sig.filter(F.col("key").isin(qkeys)).select("vid")
+    cand = df.join(hits, df[id_col] == hits["vid"], "left_semi")
+    return cosine_topk(cand, query, k, id_col, vector_col).select(
+        id_col, *extra_cols, "score"
     )
 
 
@@ -788,7 +671,7 @@ def kmeans_centroids(
     :func:`seeded_centroids` — tighter cells → fewer probes for the
     same recall). Unit-normalized so max-inner-product cell assignment
     ≈ spherical k-means. Train on a sample at scale; assignment stays
-    the same broadcast-join plan in :func:`ivf_topk`.
+    the same :func:`cell_assignment_expr` projection.
 
     Not oracle-able: MLlib's parallel k-means init + float accumulation
     isn't reproducible in SQL — recall is bounded against exact top-k
@@ -807,6 +690,63 @@ def kmeans_centroids(
     return out
 
 
+def cell_assignment_expr(
+    centroids: list[list[float]], vector_col: str = "embedding"
+):
+    """Nearest-centroid cell id as a pure projection (no shuffle) — the
+    one IVF cell assignment, shared by the inline probe, the layout
+    writers, the balance card, IVF-PQ and SemDeDup.
+
+    ``array_max`` over ``struct(dot, -cid)`` implements
+    ``argmax(dot) BREAK TIES BY min(cid)`` — the DuckDB twins'
+    ``first_value(cid) OVER (ORDER BY d DESC, cid ASC)`` — entirely
+    inside whole-stage codegen; nothing leaves the row. With C centroids
+    this is C literal dot products per row; centroids travel as
+    literals, so Catalyst constant-folds the vectors into the generated
+    code.
+    """
+    candidates = [
+        F.struct(
+            dot(F.col(vector_col), vector_literal(c)).alias("d"),
+            F.lit(-cid).alias("ncid"),
+        )
+        for cid, c in enumerate(centroids)
+    ]
+    return (-F.array_max(F.array(*candidates)).getField("ncid")).cast("int")
+
+
+def _probe_cells(
+    query: Sequence[float], centroids: list[list[float]], nprobe: int
+) -> list[int]:
+    """The ``nprobe`` cells nearest the query, computed on the driver
+    with the assignment's own (dot DESC, cid ASC) rule."""
+    ranked = sorted((-_seq_dot(query, c), cid) for cid, c in enumerate(centroids))
+    return [cid for _, cid in ranked[:nprobe]]
+
+
+def _cells_cte_sql(
+    centroids: list[list[float]], table: str, id_col: str, vector_col: str
+) -> str:
+    """The DuckDB twins' ``dots``/``cells`` CTEs: (vid, cell) by the
+    ``first_value`` window — the reference formulation of
+    :func:`cell_assignment_expr`."""
+    v = f"{vector_col}::DOUBLE[]"
+    dot_union = "\n            UNION ALL\n".join(
+        f"            SELECT {id_col} AS vid, {cid} AS cid, "
+        f"list_dot_product({v}, {_plane_lit_sql(c)}) AS d FROM {table}"
+        for cid, c in enumerate(centroids)
+    )
+    return f"""dots AS (
+{dot_union}
+        ),
+        cells AS (
+            SELECT DISTINCT vid,
+                   first_value(cid) OVER
+                       (PARTITION BY vid ORDER BY d DESC, cid ASC) AS cell
+            FROM dots
+        )"""
+
+
 def ivf_topk(
     df: DataFrame,
     query: Sequence[float],
@@ -819,51 +759,25 @@ def ivf_topk(
     extra_cols: Sequence[str] = ("label",),
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """IVF-style ANN top-k: assign every vector to its max-inner-product
-    centroid cell, probe only the ``nprobe`` cells nearest the query,
-    exact-score the survivors.
+    """IVF-style ANN top-k: keep the rows whose max-inner-product
+    centroid cell (:func:`cell_assignment_expr`) is one of the ``nprobe``
+    cells nearest the query, and rank them with :func:`cosine_topk`.
 
-    Cell assignment = ``first_value(cid) OVER (ORDER BY dot DESC, cid)``
-    — deterministic under dot ties, identical in the DuckDB twin. At
-    scale the assignment is precomputed at ingest and the items table is
-    partitioned by cell, so a query scans nprobe/n_cells of the data
-    (partition pruning); here it's computed inline for the oracle check.
-    ``centroids`` overrides the seeded defaults (pass
+    At scale the assignment is precomputed at ingest and the items table
+    is partitioned by cell (:func:`ivf_write_index`), so a query scans
+    nprobe/n_cells of the data; here it is computed inline for the
+    oracle check. Null ids are dropped, as the twin's equi-join drops
+    them. ``centroids`` overrides the seeded defaults (pass
     :func:`kmeans_centroids` output for trained cells).
     """
-    dim = len(query)
-    cents = centroids or seeded_centroids(dim, n_cells, seed)
-    # driver-side: the query's nprobe nearest cells (same tie rule)
-    qd = sorted(
-        ((-_seq_dot(query, c), cid) for cid, c in enumerate(cents))
-    )[:nprobe]
-    probe = [cid for _, cid in qd]
-
-    spark = df.sparkSession
-    cent_df = spark.createDataFrame(
-        [(cid, c) for cid, c in enumerate(cents)], "cid INT, cvec ARRAY<DOUBLE>"
+    cents = centroids or seeded_centroids(len(query), n_cells, seed)
+    cells = cell_assignment_expr(cents, vector_col)
+    cand = df.filter(
+        F.col(id_col).isNotNull()
+        & cells.isin(_probe_cells(query, cents, nprobe))
     )
-    base = df.select(F.col(id_col).alias("vid"), F.col(vector_col).alias("vec"))
-    dots = base.join(F.broadcast(cent_df)).select(
-        "vid", "cid", dot(F.col("vec"), F.col("cvec")).alias("d")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vid").orderBy(F.desc("d"), F.asc("cid"))
-    cells = (
-        dots.withColumn("cell", F.first("cid").over(w))
-        .select("vid", "cell")
-        .distinct()
-    )
-    probed = cells.filter(F.col("cell").isin(probe)).select("vid")
-    cand = df.join(probed, df[id_col] == probed["vid"], "left_semi")
-    return (
-        cand.withColumn(
-            "score", F.round(cosine_to_query(vector_col, query), _DP)
-        )
-        .select(id_col, *extra_cols, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    return cosine_topk(cand, query, k, id_col, vector_col).select(
+        id_col, *extra_cols, "score"
     )
 
 
@@ -873,61 +787,18 @@ def ivf_topk_sql(
     vector_col: str = "embedding", extra_cols: str = "label",
 ) -> str:
     """DuckDB twin of :func:`ivf_topk` (same centroids, probes, ties)."""
-    dim = len(query)
-    cents = seeded_centroids(dim, n_cells, seed)
-    qd = sorted(
-        ((-_seq_dot(query, c), cid) for cid, c in enumerate(cents))
-    )[:nprobe]
-    probe = ", ".join(str(cid) for _, cid in qd)
-    v = f"{vector_col}::DOUBLE[]"
-    dot_union = "\n            UNION ALL\n".join(
-        f"            SELECT {id_col} AS vid, {cid} AS cid, "
-        f"list_dot_product({v}, {_plane_lit_sql(c)}) AS d FROM {table}"
-        for cid, c in enumerate(cents)
-    )
+    cents = seeded_centroids(len(query), n_cells, seed)
+    probe = ", ".join(str(cid) for cid in _probe_cells(query, cents, nprobe))
     cos = cosine_to_query_sql(vector_col, query)
     cols = f"{id_col}, {extra_cols}, " if extra_cols else f"{id_col}, "
     return f"""
-        WITH dots AS (
-{dot_union}
-        ),
-        cells AS (
-            SELECT DISTINCT vid,
-                   first_value(cid) OVER
-                       (PARTITION BY vid ORDER BY d DESC, cid ASC) AS cell
-            FROM dots
-        )
+        WITH {_cells_cte_sql(cents, table, id_col, vector_col)}
         SELECT {cols}ROUND({cos}, {_DP}) AS score
         FROM {table}
         JOIN cells ON {id_col} = cells.vid AND cells.cell IN ({probe})
         ORDER BY ROUND({cos}, {_DP}) DESC, {id_col} ASC
         LIMIT {k}
     """
-
-
-def _ivf_cells(
-    df: DataFrame, cents, id_col: str, vector_col: str
-) -> DataFrame:
-    """(vid, cell) assignment — argmax-dot centroid with the
-    (d DESC, cid ASC) tie rule. The ONE place the assignment lives for
-    both the bootstrap build and incremental append (the
-    incremental-equals-fresh invariant depends on them agreeing)."""
-    spark = df.sparkSession
-    cent_df = spark.createDataFrame(
-        [(cid, c) for cid, c in enumerate(cents)], "cid INT, cvec ARRAY<DOUBLE>"
-    )
-    base = df.select(F.col(id_col).alias("vid"), F.col(vector_col).alias("vec"))
-    dots = base.join(F.broadcast(cent_df)).select(
-        "vid", "cid", dot(F.col("vec"), F.col("cvec")).alias("d")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vid").orderBy(F.desc("d"), F.asc("cid"))
-    return (
-        dots.withColumn("cell", F.first("cid").over(w))
-        .select("vid", "cell")
-        .distinct()
-    )
 
 
 def ivf_cell_balance(
@@ -946,15 +817,17 @@ def ivf_cell_balance(
     — sustained skew means the centroids no longer fit the data
     distribution: retrain (:func:`kmeans_centroids`) and rebuild.
 
-    100 TB design: assignment is the SAME broadcast-centroid argmax the
-    ingest path uses (`_ivf_cells`); the aggregate emits ``n_cells``
+    100 TB design: assignment is the SAME projection the ingest path
+    uses (:func:`cell_assignment_expr`); the aggregate emits ``n_cells``
     rows with map-side partial counts. Against a STANDING index this
     collapses to partition metadata (row counts per cell directory) —
     it is computed inline here so the DuckDB oracle can verify the
-    assignment itself.
+    assignment itself. ``id_col`` is unused (kept for callers).
     """
-    cells = _ivf_cells(
-        df, seeded_centroids(dim, n_cells, seed), id_col, vector_col
+    cells = df.select(
+        cell_assignment_expr(
+            seeded_centroids(dim, n_cells, seed), vector_col
+        ).alias("cell")
     )
     counts = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
     # Left-join onto the full cell spine: an EMPTY cell (n=0) is the
@@ -965,8 +838,6 @@ def ivf_cell_balance(
     full = spine.join(counts, "cell", "left").select(
         "cell", F.coalesce("n", F.lit(0)).alias("n")
     )
-    from pyspark.sql import Window
-
     tot = F.sum("n").over(Window.partitionBy())  # n_cells rows only
     return full.select(
         "cell",
@@ -987,22 +858,8 @@ def ivf_cell_balance_sql(
 ) -> str:
     """DuckDB twin of :func:`ivf_cell_balance` (same centroids/ties)."""
     cents = seeded_centroids(dim, n_cells, seed)
-    v = f"{vector_col}::DOUBLE[]"
-    dot_union = "\n            UNION ALL\n".join(
-        f"            SELECT {id_col} AS vid, {cid} AS cid, "
-        f"list_dot_product({v}, {_plane_lit_sql(c)}) AS d FROM {table}"
-        for cid, c in enumerate(cents)
-    )
     return f"""
-        WITH dots AS (
-{dot_union}
-        ),
-        cells AS (
-            SELECT DISTINCT vid,
-                   first_value(cid) OVER
-                       (PARTITION BY vid ORDER BY d DESC, cid ASC) AS cell
-            FROM dots
-        ),
+        WITH {_cells_cte_sql(cents, table, id_col, vector_col)},
         counts AS (SELECT cell, count(*) AS n FROM cells GROUP BY cell),
         spine AS (
             SELECT CAST(unnest(range(0, {n_cells})) AS INTEGER) AS cell
@@ -1019,6 +876,22 @@ def ivf_cell_balance_sql(
     """
 
 
+def _ivf_write(
+    df: DataFrame, path: str, mode: str, n_cells: int, seed: int,
+    id_col: str, vector_col: str, dim: int,
+) -> None:
+    """Write ``df`` partitioned by its cell; rows without an id are not
+    indexed (the inline :func:`ivf_topk` drops them too)."""
+    cents = seeded_centroids(dim, n_cells, seed)
+    (
+        df.filter(F.col(id_col).isNotNull())
+        .withColumn("cell", cell_assignment_expr(cents, vector_col))
+        .write.mode(mode)
+        .partitionBy("cell")
+        .parquet(path)
+    )
+
+
 def ivf_write_index(
     df: DataFrame,
     path: str,
@@ -1031,20 +904,14 @@ def ivf_write_index(
     """Materialize an IVF index: the table written partitioned by cell.
 
     This is the 100 TB layout behind :func:`ivf_topk`: cell assignment
-    happens ONCE at ingest, and ``partitionBy("cell")`` turns every
-    probe query into a partition-pruned scan — a query touching
-    ``nprobe`` of ``n_cells`` partitions reads ``nprobe/n_cells`` of
-    the bytes (verify: `PartitionFilters` in the scan node, see
-    :func:`ivf_topk_indexed` and BENCH.md).
+    (:func:`cell_assignment_expr`, a narrow projection) happens ONCE at
+    ingest, and ``partitionBy("cell")`` turns every probe query into a
+    partition-pruned scan — a query touching ``nprobe`` of ``n_cells``
+    partitions reads ``nprobe/n_cells`` of the bytes (verify:
+    `PartitionFilters` in the scan node, see :func:`ivf_topk_indexed`
+    and BENCH.md).
     """
-    cells = _ivf_cells(df, seeded_centroids(dim, n_cells, seed), id_col, vector_col)
-    (
-        df.join(cells, df[id_col] == cells["vid"])
-        .drop("vid")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
+    _ivf_write(df, path, "overwrite", n_cells, seed, id_col, vector_col, dim)
 
 
 def ivf_append_index(
@@ -1071,15 +938,8 @@ def ivf_append_index(
     ``sources/maintenance.compact_index``-style per-directory
     compaction on a schedule.
     """
-    cells = _ivf_cells(
-        df_new, seeded_centroids(dim, n_cells, seed), id_col, vector_col
-    )
-    (
-        df_new.join(cells, df_new[id_col] == cells["vid"])
-        .drop("vid")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(path)
+    _ivf_write(
+        df_new, path, "append", n_cells, seed, id_col, vector_col, dim
     )
 
 
@@ -1099,21 +959,14 @@ def ivf_topk_indexed(
 
     ``cell IN (probes)`` is a partition filter — Spark lists and reads
     only the probed directories; the other ``n_cells − nprobe`` cells
-    are never opened.
+    are never opened. :func:`cosine_topk` ranks the survivors.
     """
-    dim = len(query)
-    cents = seeded_centroids(dim, n_cells, seed)
-    qd = sorted(
-        ((-_seq_dot(query, c), cid) for cid, c in enumerate(cents))
-    )[:nprobe]
-    probe = [cid for _, cid in qd]
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin(probe))
-        .withColumn("score", F.round(cosine_to_query(vector_col, query), _DP))
-        .select(id_col, *extra_cols, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    cents = seeded_centroids(len(query), n_cells, seed)
+    cand = spark.read.parquet(path).filter(
+        F.col("cell").isin(_probe_cells(query, cents, nprobe))
+    )
+    return cosine_topk(cand, query, k, id_col, vector_col).select(
+        id_col, *extra_cols, "score"
     )
 
 
@@ -1166,9 +1019,6 @@ def lsh_similarity_join_sql(
 ) -> str:
     planes = seeded_hyperplanes(dim, bits_per_table * n_tables, seed)
     v = f"{vector_col}::DOUBLE[]"
-
-    def plane_lit(p: list[float]) -> str:
-        return _plane_lit_sql(p)
 
     def bucket_expr(t: int) -> str:
         return _bucket_expr_sql(planes, t, bits_per_table, v)
@@ -1276,28 +1126,6 @@ def group_centroids_sql(
 # ---------------------------------------------------------------------------
 # SemDeDup-style semantic near-duplicate pruning
 # ---------------------------------------------------------------------------
-def cell_assignment_expr(
-    centroids: list[list[float]], vector_col: str = "embedding"
-):
-    """Nearest-centroid cell id as a pure projection (no shuffle).
-
-    ``array_max`` over ``struct(dot, -cid)`` implements
-    ``argmax(dot) BREAK TIES BY min(cid)`` entirely inside whole-stage
-    codegen — unlike the explode + window formulation in
-    :func:`ivf_topk`, nothing leaves the row. With C centroids this is
-    C literal dot products per row; centroids travel as literals, so
-    Catalyst constant-folds the vectors into the generated code.
-    """
-    candidates = [
-        F.struct(
-            dot(F.col(vector_col), vector_literal(c)).alias("d"),
-            F.lit(-cid).alias("ncid"),
-        )
-        for cid, c in enumerate(centroids)
-    ]
-    return (-F.array_max(F.array(*candidates)).getField("ncid")).cast("int")
-
-
 def semantic_dedup(
     df: DataFrame,
     threshold: float = 0.85,
@@ -1885,8 +1713,9 @@ def margin_bitext_mine(
 _COLLECT_CHUNK = 8192  # rows of driver-side buffer per numpy conversion
 
 
-def _finish_unit(sc, id_chunks, mat_chunks):
-    """Concatenate streamed chunks and broadcast (ids, unit rows)."""
+def _finish_unit(sc, id_chunks, mat_chunks, by_id: bool = False):
+    """Concatenate streamed chunks and broadcast (ids, unit rows),
+    ordered by id when ``by_id``."""
     ids = (
         np.concatenate(id_chunks)
         if id_chunks
@@ -1899,16 +1728,22 @@ def _finish_unit(sc, id_chunks, mat_chunks):
     )
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0.0] = 1.0
-    return sc.broadcast((ids, mat / norms[:, None]))
+    unit = mat / norms[:, None]
+    if by_id:
+        order = np.argsort(ids)
+        ids, unit = ids[order], unit[order]
+    return sc.broadcast((ids, unit))
 
 
-def _collect_unit_broadcast(df, id_col: str, vector_col: str):
+def _collect_unit_broadcast(
+    df, id_col: str, vector_col: str, by_id: bool = False
+):
     """Collect (id, unit-vector) arrays for one matmul side and
     broadcast them once. Callers that mine many shard PAIRS reuse one
     broadcast per SHARD (see margin_bitext_mine_sharded) instead of
     re-collecting per pair.
 
-    Driver envelope (VERDICT r12 item 9): the side streams through
+    Driver envelope: the side streams through
     ``toLocalIterator`` in fixed-size chunks converted to numpy as they
     arrive, so the driver holds the numpy matrix itself (bounded by the
     broadcast budget the callers enforce) plus ONE ``_COLLECT_CHUNK``
@@ -1933,7 +1768,7 @@ def _collect_unit_broadcast(df, id_col: str, vector_col: str):
         id_chunks.append(np.array(buf_i, dtype=np.int64))
         mat_chunks.append(np.array(buf_v, dtype=np.float64))
     return _finish_unit(
-        df.sparkSession.sparkContext, id_chunks, mat_chunks
+        df.sparkSession.sparkContext, id_chunks, mat_chunks, by_id
     )
 
 

@@ -117,16 +117,17 @@ def video_phash_df(
                     for fi, fp in video_frame_hashes(payload, stride):
                         ids.append(mid)
                         idxs.append(fi)
-                        fps.append(np.int64(fp))
+                        fps.append(fp)
                         errs.append(None)
                 except ValueError as exc:
                     ids.append(mid)
                     idxs.append(None)
                     fps.append(None)
                     errs.append(str(exc) or "decode error")
+            # nullable Int64: see imagehash.media_phash_df
             yield pd.DataFrame({
-                id_col: ids, "frame_idx": idxs, "phash": fps,
-                "error": errs,
+                id_col: ids, "frame_idx": idxs,
+                "phash": pd.array(fps, dtype="Int64"), "error": errs,
             })
 
     return df.select(id_col, payload_col).mapInPandas(
