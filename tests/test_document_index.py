@@ -98,12 +98,20 @@ def test_render_sections_end_to_end(doc_index):
 
 def test_reupsert_replaces_chunks(doc_index):
     before = doc_index.get_catalog_stats()
-    doc_index.upsert_document(
+    old_id = doc_index.get_document_id("file:///corpus/space.txt")
+    n_old = doc_index.index.items().filter(F.col("document_id") == old_id).count()
+    assert n_old >= 1
+    new_id = doc_index.upsert_document(
         "file:///corpus/space.txt", "Rockets launch to orbit."
     )
     after = doc_index.get_catalog_stats()
     assert after["documents"] == before["documents"]
-    assert after["chunks"] <= before["chunks"]
+    # the list path gives the document a new uuid4 id, so its old chunks
+    # sit in another bucket: all of them go, and the new text (shorter
+    # than one chunk) adds exactly one
+    assert after["chunks"] == before["chunks"] - n_old + 1
+    ids = [r.document_id for r in doc_index.index.items().select("document_id").collect()]
+    assert old_id not in ids and ids.count(new_id) == 1
     res = doc_index.query_documents("rockets orbit", max_documents=1).collect()
     assert res[0].uri == "file:///corpus/space.txt"
 

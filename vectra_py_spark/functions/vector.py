@@ -7,11 +7,14 @@ higher-order functions (``zip_with`` / ``aggregate`` / ``transform``).
 
 Why expressions and not a pandas UDF: at query time the pattern is a
 1×N semi-join (one literal query vector against every row). A HOF
-expression stays in whole-stage codegen — no Python worker, no Arrow
-hop, no serialization of the vector column — and feeds directly into
-``TakeOrderedAndProject`` for top-k. A vectorized numpy matmul UDF wins
-only for N×M all-pairs scoring, which lives in
-:mod:`vectra_py_spark.operators.similarity`.
+expression runs in the JVM — no Python worker, no Arrow hop, no
+serialization of the vector column — and feeds directly into
+``TakeOrderedAndProject`` for top-k. It is interpreted, not compiled:
+``ZipWith``/``ArrayAggregate`` and their lambda variables are
+``CodegenFallback``, so the projection holding them runs outside
+whole-stage codegen (no ``*(n)`` marker in the physical plan). A
+vectorized numpy matmul UDF wins only for N×M all-pairs scoring, which
+lives in :mod:`vectra_py_spark.operators.similarity`.
 
 All math is done in DOUBLE regardless of the stored element type
 (test fixtures store FLOAT) so scores are engine-portable and match the
@@ -136,7 +139,7 @@ def project_expr(
     (Johnson–Lindenstrauss) as a pure shuffle-free projection. Planes
     come from :func:`vectra_py_spark.operators.similarity.seeded_hyperplanes`
     (or a trained PCA basis at production scale); either way they are
-    plan literals, so Catalyst constant-folds them into codegen.
+    plan literals, which Catalyst constant-folds once per plan.
     """
     # + 0.0 collapses IEEE −0.0 to +0.0 (cross-engine hash parity)
     return F.array(

@@ -21,21 +21,29 @@ commit — as a columnar Parquet table with declared schema (SURVEY.md
   than the reference's full sort at ``local_index.py:141``)
 
 Scale (100 TB): items live directory-partitioned by
-``_bucket = pmod(xxhash64(id), n_buckets)``; the scan parallelizes per
-file split; scoring is codegen'd per partition; top-k merges k rows per
-partition on the driver. Metadata filters prune row groups via Parquet
-min/max stats on the typed columns. DML is **partition-scoped**: a
-commit reads only the buckets containing touched ids (partition-pruned
-scan) and rewrites only those directories (dynamic partition
-overwrite) — untouched bucket files are never opened, so upsert cost
-is O(touched buckets), not O(table). ``n_buckets`` is pinned in a
-``_vectra_meta.json`` side-file at create time so every writer agrees
-on the id→bucket map for the table's lifetime.
+``_bucket = pmod(xxhash64(<bucket key>), n_buckets)``; the bucket key is
+``id`` unless the owner declares an indexed column (the document index
+keys its chunks by ``document_id``, so one document's chunks share a
+bucket). The scan parallelizes per file split; the HOF cosine is an
+interpreted projection per partition (``ZipWith`` and its lambda
+variables are ``CodegenFallback``); top-k merges k rows per partition
+on the driver. Metadata filters prune row groups via Parquet min/max
+stats on the typed columns. DML is **partition-scoped**: a commit reads
+only the buckets holding touched rows (partition-pruned scan) and
+rewrites only those directories (dynamic partition overwrite) —
+untouched bucket files are never opened, so upsert cost is O(touched
+buckets), not O(table). Deletes by key values get their buckets from
+the keys, with no table scan. ``n_buckets`` and the bucket key are
+pinned in a ``_vectra_meta.json`` side-file at create time so every
+writer agrees on the key→bucket map for the table's lifetime; a row's
+key value must never change, or an upsert of its id would land in a
+second bucket beside the old row.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import uuid
 from collections.abc import Mapping, Sequence
 from typing import Any
@@ -46,6 +54,7 @@ from pyspark.sql import types as T
 
 from vectra_py_spark.filters import compile_filter
 from vectra_py_spark.functions.vector import cosine_to_query, l2_norm
+from vectra_py_spark.session import local_frame
 
 __all__ = ["SparkVectorIndex", "ITEM_SCHEMA", "BUCKET_COL"]
 
@@ -55,6 +64,9 @@ __all__ = ["SparkVectorIndex", "ITEM_SCHEMA", "BUCKET_COL"]
 BUCKET_COL = "_bucket"
 META_FILE = "_vectra_meta.json"
 DEFAULT_N_BUCKETS = 64  # fixture-scale default; O(10k) at 100 TB
+LOG_KEYS = 5  # deleted keys named in a merge's log record; the rest are counted
+
+log = logging.getLogger(__name__)
 
 # IndexItem (``custom_types.py:43-49``): id, vector, norm, metadata.
 # metadata_ref (the side-file pointer, ``metadataFile``) is dropped —
@@ -89,6 +101,10 @@ class SparkVectorIndex:
     (``local_index.py:32-40,80-90``) maps to explicit staging: mutations
     accumulate in a driver-side batch and ``commit()`` runs ONE Spark
     write job (atomic by job commit). ``cancel_update`` = drop the batch.
+
+    ``bucket_key`` (``"id"`` or an indexed field) is the column whose hash
+    places a row in its bucket; it and ``n_buckets`` are pinned in the
+    meta file at create time, and a reopen adopts the pinned values.
     """
 
     def __init__(
@@ -98,12 +114,15 @@ class SparkVectorIndex:
         vector_dim: int | None = None,
         indexed_fields: Mapping[str, T.DataType] | None = None,
         n_buckets: int = DEFAULT_N_BUCKETS,
+        bucket_key: str = "id",
     ) -> None:
         self.spark = spark
         self.path = path
         self.vector_dim = vector_dim
         self.indexed_fields = dict(indexed_fields or {})
         self.n_buckets = int(n_buckets)
+        self.bucket_key = bucket_key
+        self._check_bucket_key()
         self._meta_loaded = False
         self._pending: list[dict[str, Any]] = []
         self._pending_deletes: list[str] = []
@@ -122,13 +141,33 @@ class SparkVectorIndex:
         return T.StructType(fields)
 
     # -- bucket layout ----------------------------------------------------
-    def _bucket_expr(self) -> Column:
-        """id → partition bucket. ``xxhash64`` is a deterministic Spark
-        built-in, so every writer (batch commit, streaming merge_batch,
-        document ingest) computes the same placement JVM-side — no Python
-        hash round-trip, no driver involvement."""
+    def _check_bucket_key(self) -> None:
+        if self.bucket_key != "id" and self.bucket_key not in self.indexed_fields:
+            raise ValueError(
+                f"bucket key {self.bucket_key!r} is neither 'id' nor an "
+                "indexed field"
+            )
+
+    def _bucket_expr(self, key: Column | None = None) -> Column:
+        """Bucket key → partition bucket. ``xxhash64`` is a deterministic
+        Spark built-in, so every writer (batch commit, streaming
+        merge_batch, document ingest) computes the same placement
+        JVM-side — no Python copy of the hash."""
         self._ensure_meta()
-        return F.pmod(F.xxhash64(F.col("id")), F.lit(self.n_buckets)).cast("int")
+        key = F.col(self.bucket_key) if key is None else key
+        return F.pmod(F.xxhash64(key), F.lit(self.n_buckets)).cast("int")
+
+    def _key_buckets(self, keys: Sequence[Any]) -> set[int]:
+        """The buckets of bucket-key values, by Spark's own hash over a
+        local relation of the keys: the projection folds on the driver
+        (``LocalTableScan``), so this runs no job and scans no table."""
+        if not keys:
+            return set()
+        self._ensure_meta()
+        field = self._schema()[self.bucket_key]
+        schema = T.StructType([T.StructField("k", field.dataType, True)])
+        frame = local_frame(self.spark, [{"k": k} for k in keys], schema)
+        return {int(r[0]) for r in frame.select(self._bucket_expr(F.col("k"))).collect()}
 
     def _hadoop_path(self, path_str: str):
         jvm = self.spark.sparkContext._jvm
@@ -139,27 +178,33 @@ class SparkVectorIndex:
         return jpath.getFileSystem(conf)
 
     def _write_meta(self) -> None:
-        """Pin the layout (``n_buckets``) in a side-file so a reopen with a
-        different default can't scatter one id across two buckets. Written
-        via the Hadoop FS API — works on any scheme (file/hdfs/s3a), and
-        the ``_`` prefix keeps it out of Spark's parquet file listing."""
+        """Pin the layout (``n_buckets``, bucket key) in a side-file so a
+        reopen with different defaults can't scatter one key across two
+        buckets. Written via the Hadoop FS API — works on any scheme
+        (file/hdfs/s3a), and the ``_`` prefix keeps it out of Spark's
+        parquet file listing."""
         jpath = self._hadoop_path(f"{self.path}/{META_FILE}")
         fs = self._hadoop_fs(jpath)
         out = fs.create(jpath, True)
-        out.write(bytearray(json.dumps({"version": 1, "n_buckets": self.n_buckets}), "utf-8"))
+        meta = {"version": 1, "n_buckets": self.n_buckets, "bucket_key": self.bucket_key}
+        out.write(bytearray(json.dumps(meta), "utf-8"))
         out.close()
         self._meta_loaded = True
 
     def _ensure_meta(self) -> None:
-        """Adopt the table's pinned ``n_buckets`` if a meta file exists."""
+        """Adopt the table's pinned layout. Only an absent meta file means
+        a fresh table (the constructor's values stand); a meta file that
+        cannot be read or parsed raises ``ValueError`` rather than
+        silently re-bucketing the table. A meta file without a bucket
+        key predates keyed layouts: its table is keyed by ``id``."""
         if self._meta_loaded:
             return
-        self._meta_loaded = True
+        jpath = self._hadoop_path(f"{self.path}/{META_FILE}")
+        fs = self._hadoop_fs(jpath)
+        if not fs.exists(jpath):
+            self._meta_loaded = True
+            return
         try:
-            jpath = self._hadoop_path(f"{self.path}/{META_FILE}")
-            fs = self._hadoop_fs(jpath)
-            if not fs.exists(jpath):
-                return
             jvm = self.spark.sparkContext._jvm
             reader = jvm.java.io.BufferedReader(
                 jvm.java.io.InputStreamReader(fs.open(jpath), "UTF-8")
@@ -171,10 +216,16 @@ class SparkVectorIndex:
                     break
                 chunks.append(line)
             reader.close()
-            meta = json.loads("".join(chunks) or "{}")
-            self.n_buckets = int(meta.get("n_buckets", self.n_buckets))
-        except Exception:
-            pass  # unreadable meta → keep ctor value (fresh table)
+            meta = json.loads("".join(chunks))
+            n_buckets = int(meta["n_buckets"])
+            bucket_key = meta.get("bucket_key", "id")
+            if n_buckets < 1 or not isinstance(bucket_key, str):
+                raise ValueError(f"bad layout {meta!r}")
+        except Exception as e:
+            raise ValueError(f"unreadable index meta file {self.path}/{META_FILE}: {e}") from e
+        self.n_buckets, self.bucket_key = n_buckets, bucket_key
+        self._check_bucket_key()
+        self._meta_loaded = True
 
     def _delete_bucket_dir(self, bucket: int) -> None:
         jpath = self._hadoop_path(f"{self.path}/{BUCKET_COL}={bucket}")
@@ -248,6 +299,16 @@ class SparkVectorIndex:
         return self.vector_dim
 
     def _stage(self, item: Mapping[str, Any]) -> dict[str, Any]:
+        self._ensure_meta()
+        if self.bucket_key != "id":
+            # The is-new-wins window and the unique check see only the
+            # touched buckets: an id staged under another key value than
+            # its stored row's would be kept twice.
+            raise ValueError(
+                f"insert_item/upsert_item need an id-keyed index; this one "
+                f"is keyed by {self.bucket_key!r} (use merge_batch with "
+                "fresh ids)"
+            )
         vec = [float(x) for x in item["vector"]]
         if self._resolved_dim() is None:
             self.vector_dim = len(vec)  # first vector defines the index dim
@@ -272,13 +333,15 @@ class SparkVectorIndex:
         return row
 
     def insert_item(self, item: Mapping[str, Any]) -> str:
-        """D1: stage an insert; duplicate ids rejected at commit."""
+        """D1: stage an insert; duplicate ids rejected at commit. Only on
+        an ``id``-keyed index (``ValueError`` otherwise)."""
         row = self._stage(item)
         self._pending.append({**row, "_op": "insert"})
         return row["id"]
 
     def upsert_item(self, item: Mapping[str, Any]) -> str:
-        """D2: stage an upsert; replaces an existing id at commit."""
+        """D2: stage an upsert; replaces an existing id at commit. Only on
+        an ``id``-keyed index (``ValueError`` otherwise)."""
         row = self._stage(item)
         self._pending.append({**row, "_op": "upsert"})
         return row["id"]
@@ -295,44 +358,57 @@ class SparkVectorIndex:
     def _merge(
         self,
         staged: DataFrame | None,
+        *,
+        staged_buckets: set[int] = frozenset(),
+        n_staged: int = 0,
+        delete_keys: Sequence[Any] | None = None,
+        key_col: str | None = None,
         delete_cond: Column | None = None,
         delete_scope: str = "existing",
         check_insert_ids: set[str] | None = None,
-        staged_is_materialized: bool = False,
     ) -> None:
         """Partition-scoped MERGE — the engine behind every mutation.
 
-        Plain-Parquet MERGE equivalent of a Delta ``MERGE INTO``: touched
-        buckets = buckets of staged ids ∪ buckets of rows matching
-        ``delete_cond``; read ONLY those buckets (``PartitionFilters``
-        prunes the rest); window-dedup ``row_number() over (partition by
-        id order by is_new desc) = 1`` (SURVEY.md §2.8 D2); rewrite ONLY
-        those directories (dynamic partition overwrite). Untouched bucket
+        Plain-Parquet MERGE equivalent of a Delta ``MERGE INTO``: read
+        ONLY the touched buckets (``PartitionFilters`` prunes the rest);
+        window-dedup ``row_number() over (partition by id order by
+        is_new desc) = 1`` (SURVEY.md §2.8 D2); rewrite ONLY those
+        directories (dynamic partition overwrite). Untouched bucket
         files are never opened for read or write, so commit cost is
-        O(touched data), not O(table) — the fix for VERDICT r1 weak #3.
+        O(touched data), not O(table).
+
+        ``staged`` (``n_staged`` rows) is already materialized (driver
+        rows or a checkpoint) and the caller has found its
+        ``staged_buckets``. The other touched buckets come from:
+        - ``delete_keys``, values of ``key_col`` (default: the bucket
+          key) whose rows are deleted: from the keys themselves when
+          ``key_col`` is the bucket key, else from a column-pruned scan;
+        - ``delete_cond``, an arbitrary delete predicate: from a
+          column-pruned scan of the rows it matches.
 
         ``delete_scope``: ``"existing"`` deletes only pre-existing rows
         (document re-ingest: old chunks match the same ``document_id`` as
         the fresh ones); ``"merged"`` applies the delete after the merge
         (driver ``commit()``: a delete staged alongside an upsert of the
-        same id wins, matching round-1 semantics).
+        same id wins).
+
+        Logs one record under ``vectra_py_spark.index`` per merge that
+        writes: the touched buckets, how they were found (``keys`` or a
+        table ``scan``), the staged row count, the number of deleted keys
+        and the first ``LOG_KEYS`` of them (or the delete predicate) and
+        the buckets the merge emptied.
         """
-        touched: set[int] = set()
-        if staged is not None:
-            staged = staged.withColumn(BUCKET_COL, self._bucket_expr())
-            if not staged_is_materialized:
-                # Materialize once: freezes non-deterministic defaults
-                # (uuid ids) and runs any expensive upstream pipeline
-                # (split+embed) exactly one time; bounded by the batch,
-                # not the table. commit() skips this: its staged rows
-                # are driver-literal (already frozen), so the extra
-                # checkpoint job bought nothing.
-                staged = staged.localCheckpoint(eager=True)
-            touched |= {
-                int(r[0]) for r in staged.select(BUCKET_COL).distinct().collect()
-            }
+        self._ensure_meta()  # the pinned bucket key decides keys vs scan
+        key_col = key_col or self.bucket_key
+        by_key = bool(delete_keys) and key_col == self.bucket_key
+        if delete_keys:
+            delete_cond = F.col(key_col).isin(*delete_keys)
+        touched = set(staged_buckets)
+        if by_key:
+            touched |= self._key_buckets(delete_keys)
         raw = self._raw_items()
-        if delete_cond is not None:
+        scanned = delete_cond is not None and not by_key
+        if scanned:
             # Column-pruned full scan over the predicate's columns only;
             # returns ≤ n_buckets ints.
             touched |= {
@@ -350,13 +426,11 @@ class SparkVectorIndex:
             # predicate must not delete the row)
             existing = existing.filter(~F.coalesce(delete_cond, F.lit(False)))
         if staged is not None:
-            # r12: the unique-insert check used to be a SEPARATE scan of
-            # the touched buckets before the merge. The merge's own
-            # is-new-wins window already sees every (existing, staged)
-            # id group, so the clash flag rides the same window pass as
-            # an extra aggregate (count of existing rows per id) and is
-            # checked on the CHECKPOINTED output below — before anything
-            # is written — one bucket scan instead of two (guide §1.2).
+            # The unique-insert check rides the merge's own is-new-wins
+            # window: it already sees every (existing, staged) id group,
+            # so the clash flag is one more aggregate over it (count of
+            # existing rows per id), checked on the CHECKPOINTED output
+            # below before anything is written — one bucket scan, not two.
             w_id = Window.partitionBy("id")
             clash_col = (
                 (F.sum(F.lit(1) - F.col("_new")).over(w_id) >= 1)
@@ -364,6 +438,7 @@ class SparkVectorIndex:
                 if check_insert_ids
                 else F.lit(False)
             )
+            staged = staged.withColumn(BUCKET_COL, self._bucket_expr())
             merged = (
                 existing.withColumn("_new", F.lit(0))
                 .unionByName(staged.withColumn("_new", F.lit(1)))
@@ -399,21 +474,46 @@ class SparkVectorIndex:
         )
         # Dynamic overwrite can't emit an EMPTY partition: a bucket whose
         # rows were all deleted produces no output directory, leaving the
-        # stale one behind — remove it explicitly. Without a delete
-        # predicate no touched bucket can empty (every staged row
-        # survives the is-new-wins window), so the kept-bucket job is
-        # skipped entirely on pure insert/upsert merges.
-        if delete_cond is not None:
+        # stale one behind — remove it explicitly. A bucket that received
+        # staged rows cannot empty unless the delete applies after the
+        # merge (every staged row survives the is-new-wins window), so
+        # the kept-bucket job runs only when some other bucket could
+        # have: never on pure inserts/upserts, nor on a re-ingest whose
+        # replaced documents all got new chunks.
+        emptied: set[int] = set()
+        may_empty = touched if delete_scope == "merged" else touched - staged_buckets
+        if delete_cond is not None and may_empty:
             kept = {
                 int(r[0])
                 for r in out.select(BUCKET_COL).distinct().collect()
             }
-            for bucket in touched - kept:
+            emptied = may_empty - kept
+            for bucket in emptied:
                 self._delete_bucket_dir(bucket)
         self._invalidate()
+        log.info(
+            "merge %(path)s: buckets %(buckets)s found by %(found)s, "
+            "%(staged)d staged rows, %(n_keys)d delete keys, deleted "
+            "%(deleted)s, emptied %(emptied)s",
+            {
+                "path": self.path,
+                "buckets": sorted(touched),
+                "found": "scan" if scanned else "keys",
+                "staged": n_staged,
+                "n_keys": len(delete_keys or ()),
+                "deleted": list(delete_keys)[:LOG_KEYS] if delete_keys else (
+                    None if delete_cond is None else str(delete_cond)
+                ),
+                "emptied": sorted(emptied),
+            },
+        )
 
     def commit(self) -> None:
         """D4/S4: apply staged mutations in one partition-scoped MERGE.
+
+        The staged rows enter Spark as a local relation, and their
+        buckets (and, on an ``id``-keyed index, the deleted ids'
+        buckets) come from their keys — no scan finds them.
 
         Concurrency caveat: plain parquet has no transaction log, so
         this MERGE assumes a SINGLE writer per index (readers are fine —
@@ -424,36 +524,39 @@ class SparkVectorIndex:
         """
         if not self._pending and not self._pending_deletes:
             return
+        self._ensure_meta()  # stage and delete under the pinned bucket key
         staged = None
-        check_ids: set[str] = set()
+        check_ids = {r["id"] for r in self._pending if r["_op"] == "insert"}
         if self._pending:
-            check_ids = {r["id"] for r in self._pending if r["_op"] == "insert"}
-            staged_rows = [
-                {k: v for k, v in r.items() if k != "_op"} for r in self._pending
-            ]
-            staged = self.spark.createDataFrame(staged_rows, self._schema())
-        delete_cond = (
-            F.col("id").isin(*self._pending_deletes)
-            if self._pending_deletes
-            else None
-        )
+            staged = local_frame(self.spark, self._pending, self._schema())
         self._merge(
             staged,
-            delete_cond=delete_cond,
+            staged_buckets=self._key_buckets([r[self.bucket_key] for r in self._pending]),
+            n_staged=len(self._pending),
+            delete_keys=self._pending_deletes,
+            key_col="id",
             delete_scope="merged",
             check_insert_ids=check_ids or None,
-            # staged rows are driver literals (values frozen in _stage),
-            # so the freeze-checkpoint would be a wasted job
-            staged_is_materialized=True,
         )
         self.cancel_update()
 
     def delete_where(self, cond: Column) -> None:
-        """Predicate delete (e.g. all chunks of a document): rewrites only
-        the buckets containing matching rows."""
-        self._merge(None, delete_cond=cond, delete_scope="existing")
+        """Predicate delete: a column-pruned scan finds the buckets holding
+        matching rows, and only those are rewritten."""
+        self._merge(None, delete_cond=cond)
 
-    def merge_batch(self, df: DataFrame, delete_cond: Column | None = None) -> None:
+    def delete_by_keys(self, keys: Sequence[Any], key_col: str | None = None) -> None:
+        """Delete every row whose ``key_col`` (default: the bucket key) is
+        in ``keys`` (e.g. all chunks of a document). On the bucket key
+        the buckets come from the keys, with no table scan."""
+        self._merge(None, delete_keys=list(keys), key_col=key_col)
+
+    def merge_batch(
+        self,
+        df: DataFrame,
+        delete_keys: Sequence[Any] | None = None,
+        key_col: str | None = None,
+    ) -> None:
         """Bulk upsert a DataFrame of items — the distributed twin of
         ``upsert_item``+``commit`` for batches too large to stage on the
         driver, and the sink for streaming ingest
@@ -464,9 +567,15 @@ class SparkVectorIndex:
         missing schema columns null-fill. Duplicate ids within the
         batch are rejected (which row should win is undefined), as are
         vectors of the wrong dimension — same ingest-time checks as the
-        row-at-a-time path. ``delete_cond`` additionally deletes matching
-        PRE-EXISTING rows in the same merge (document re-ingest drops the
+        row-at-a-time path. ``delete_keys`` additionally deletes the
+        PRE-EXISTING rows whose ``key_col`` (default: the bucket key) is
+        among them, in the same merge (document re-ingest drops the
         replaced doc's old chunks this way).
+
+        On an index not keyed by ``id``, an id already in the table must
+        keep its key value: the batch's rows are deduplicated only
+        against the buckets it touches. Fresh ids (the document index's
+        ``uuid()`` chunk ids) always hold.
         """
         staged = df.withColumn("vector", F.col("vector").cast("array<double>"))
         staged = staged.withColumn("norm", l2_norm(F.col("vector")))
@@ -479,16 +588,16 @@ class SparkVectorIndex:
         # check sees the same ids the merge will write.
         staged = staged.localCheckpoint(eager=True)
         # ONE aggregate answers every validation over the checkpointed
-        # batch (was 3 jobs: dup-count, dim head, bad-dim count — guide
-        # §1.2, fewer passes): duplicates exist iff count != distinct
-        # ids; the batch is dimension-uniform iff min==max of
-        # size(vector), which is exactly what "adopt the first row's
-        # dim, then require every row to match it" accepted.
+        # batch and finds its buckets: duplicates exist iff count !=
+        # distinct ids; the batch is dimension-uniform iff min==max of
+        # size(vector), which is exactly "adopt the first row's dim,
+        # then require every row to match it".
         stats = staged.agg(
             F.count(F.lit(1)).alias("n"),
             F.countDistinct("id").alias("n_ids"),
             F.min(F.size("vector")).alias("d_min"),
             F.max(F.size("vector")).alias("d_max"),
+            F.collect_set(self._bucket_expr()).alias("buckets"),
         ).head()
         if int(stats["n"] or 0):
             if int(stats["n"]) != int(stats["n_ids"]):
@@ -502,12 +611,12 @@ class SparkVectorIndex:
                     raise ValueError(
                         f"merge_batch: vector dimension != index dim {dim}"
                     )
-        # staged is already checkpointed above and the bucket column is
-        # a deterministic hash of id, so _merge must not checkpoint a
-        # second time (was: two materializations of the same batch).
         self._merge(
-            staged, delete_cond=delete_cond, delete_scope="existing",
-            staged_is_materialized=True,
+            staged,
+            staged_buckets=set(stats["buckets"]),
+            n_staged=int(stats["n"]),
+            delete_keys=delete_keys,
+            key_col=key_col,
         )
 
     # -- reads (P12-P14, A2) ---------------------------------------------
@@ -543,7 +652,8 @@ class SparkVectorIndex:
         """V5: filter → cosine score → top-k.
 
         Physical plan (verify with ``.explain``): Parquet scan with pushed
-        filter → codegen'd HOF cosine projection →
+        filter → HOF cosine projection (interpreted: ``ZipWith`` and its
+        lambda variables are ``CodegenFallback``) →
         ``TakeOrderedAndProject(k)``. The query vector + its norm are plan
         literals (computed once, ``local_index.py:135``). Ties broken by
         id for determinism (the reference's sort is unstable on ties).

@@ -78,6 +78,28 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def local_frame(spark: SparkSession, rows, schema):
+    """Driver rows (dicts) + a declared schema → a DataFrame that plans
+    as ``LocalTableScan``, so projections over it fold on the driver
+    and collecting them runs no job.
+
+    The rows become an Arrow table with the schema's own types (nullable
+    int64 for BIGINT, maps as maps), which Spark plans as a local
+    relation at driver-row sizes, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.
+    ``createDataFrame(list)`` would instead plan a pickled Python RDD
+    whose every read starts Python workers; a pandas frame would take
+    that same RDD route when Arrow is off, and Arrow's pandas form of a
+    map column (a list of pairs) makes PySpark fall back to it even when
+    Arrow is on.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def _parse_bytes(s: str) -> int:
     """Parse a Spark byte-size conf value ("134217728b", "128m",
     "1g", "512MB", plain digits) into bytes."""
