@@ -5,7 +5,15 @@ from __future__ import annotations
 
 import pytest
 
-from vectra_py_spark.filters import FilterCompileError, compile_filter, filter_to_sql
+import numpy as np
+
+from vectra_py_spark.filters import (
+    FilterCompileError,
+    NotExact,
+    compile_filter,
+    compile_mask,
+    filter_to_sql,
+)
 
 ROWS = [
     # (id, category, priority, flag)
@@ -210,16 +218,19 @@ _filter = st.one_of(
 )
 
 
+_PROP_ROWS = [
+    {"id": i, "a": a, "b": b}
+    for i, (a, b) in enumerate(
+        (a, b)
+        for a in [None, -2, 0, 1, 3]
+        for b in [None, -1, 0, 2]
+    )
+]
+
+
 @pytest.fixture(scope="module")
 def prop_rows(spark):
-    rows = [
-        {"id": i, "a": a, "b": b}
-        for i, (a, b) in enumerate(
-            (a, b)
-            for a in [None, -2, 0, 1, 3]
-            for b in [None, -1, 0, 2]
-        )
-    ]
+    rows = _PROP_ROWS
     df = spark.createDataFrame(
         [(r["id"], r["a"], r["b"]) for r in rows], "id int, a int, b int"
     ).cache()
@@ -235,3 +246,39 @@ def test_property_compiled_matches_python(prop_rows, flt):
     expected = {r["id"] for r in rows if _py_eval(flt, r)}
     got = {r.id for r in df.filter(compile_filter(flt)).collect()}
     assert got == expected, flt
+
+
+@settings(max_examples=300, deadline=None)
+@given(flt=_filter)
+def test_property_mask_matches_python(flt):
+    """The numpy-mask target of the same walk keeps the reference-intent
+    semantics, P11 included (the slow test above pins the Column target
+    to the same evaluator)."""
+    rows = _PROP_ROWS
+    columns = {
+        f: (
+            "num",
+            np.array([r[f] or 0 for r in rows], dtype=np.int64),
+            np.array([r[f] is not None for r in rows]),
+        )
+        for f in _FIELDS
+    }
+    mask = compile_mask(flt, columns, len(rows))
+    got = {r["id"] for r, hit in zip(rows, mask) if hit}
+    assert got == {r["id"] for r in rows if _py_eval(flt, r)}, flt
+
+
+def test_mask_refuses_what_it_cannot_match_exactly():
+    """Leaves whose Spark casts or NaN ordering a mask would not
+    reproduce raise NotExact; structural errors raise the same
+    FilterCompileError as compile_filter."""
+    columns = {"n": ("num", np.array([1, 2]), np.array([True, True]))}
+    for flt in ({"m": 1}, {"n": "1"}, {"n": True}, {"n": float("nan")}, {"n": {"$in": [1, "a"]}}):
+        with pytest.raises(NotExact):
+            compile_mask(flt, columns, 2)
+    for flt in ({"$nor": []}, {"n": {"$gt": "x"}}, {"n": {}}, [1]):
+        with pytest.raises(FilterCompileError) as mask_err:
+            compile_mask(flt, columns, 2)
+        with pytest.raises(FilterCompileError) as col_err:
+            compile_filter(flt)
+        assert str(mask_err.value) == str(col_err.value)

@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 from vectra_py_spark.embeddings import DeterministicEmbedder, embed_chunks, scrub_newlines
 from vectra_py_spark.index import SparkVectorIndex
 from vectra_py_spark.render import RenderedSection, ScoredChunk, render_sections
+from vectra_py_spark.session import local_frame
 from vectra_py_spark.text.splitter import split_documents
 from vectra_py_spark.text.tokenizers import get_tokenizer
 
@@ -103,8 +104,7 @@ class SparkDocumentIndex:
     # -- lifecycle --------------------------------------------------------
     def create(self, overwrite: bool = False) -> None:
         mode = "overwrite" if overwrite else "errorifexists"
-        empty = self.spark.createDataFrame([], DOCUMENT_SCHEMA)
-        empty.write.mode(mode).parquet(self.docs_path)
+        local_frame(self.spark, [], DOCUMENT_SCHEMA).write.mode(mode).parquet(self.docs_path)
         self.index.create(overwrite=overwrite)
 
     def documents(self) -> DataFrame:
@@ -155,8 +155,7 @@ class SparkDocumentIndex:
                     },
                 }
             )
-        staged = self.spark.createDataFrame(rows, DOCUMENT_SCHEMA)
-        self._ingest_staged(staged)
+        self._ingest_staged(local_frame(self.spark, rows, DOCUMENT_SCHEMA))
         return ids
 
     def upsert_documents_df(
@@ -363,7 +362,10 @@ class SparkDocumentIndex:
         """Returns (document_id, uri, doc_score, chunks ARRAY<STRUCT>)."""
         provider = self.embedder_factory()
         qvec = provider.create_embeddings([scrub_newlines(query_text)])[0]  # E5
-        topk = self.index.query_items(qvec, max_chunks, filter_ast)
+        # One partition, in rank order: ``avg`` then sums each document's
+        # scores in the same order whether the top-k is the Spark plan's
+        # (one partition already) or the snapshot's local relation.
+        topk = self.index.query_items(qvec, max_chunks, filter_ast).coalesce(1)
         grouped = (
             topk.groupBy("document_id")  # A4
             .agg(

@@ -36,6 +36,7 @@ __all__ = [
     "cosine_similarity",
     "normalized_cosine",
     "cosine_to_query",
+    "query_norm",
     "project_expr",
 ]
 
@@ -92,6 +93,12 @@ def normalized_cosine(
     return dot_col / (norm_a * norm_b)
 
 
+def query_norm(query: Sequence[float]) -> float:
+    """The query vector's L2 norm as every cosine-to-query scorer takes
+    it: a left-to-right Python sum of squares, then ``** 0.5``."""
+    return sum(x * x for x in query) ** 0.5
+
+
 def cosine_to_query(
     vector_col: Column | str,
     query: Sequence[float],
@@ -105,7 +112,7 @@ def cosine_to_query(
     """
     vc = F.col(vector_col) if isinstance(vector_col, str) else vector_col
     q = [float(x) for x in query]
-    q_norm = sum(x * x for x in q) ** 0.5
+    q_norm = query_norm(q)
     if q_norm == 0.0:
         return F.lit(0.0)
     d = dot(vc, vector_literal(q))
@@ -125,7 +132,7 @@ def cosine_to_query_sql(vector_expr: str, query: Sequence[float]) -> str:
     """DuckDB-oracle SQL mirroring :func:`cosine_to_query` (explicit
     dot/norms in DOUBLE so both engines sum in the same order)."""
     q = [float(x) for x in query]
-    q_norm = sum(x * x for x in q) ** 0.5
+    q_norm = query_norm(q)
     d = dot_sql(vector_expr, q)
     n = f"sqrt(list_dot_product({vector_expr}::DOUBLE[], {vector_expr}::DOUBLE[]))"
     return f"({d} / ({n} * {q_norm!r}))"

@@ -15,10 +15,16 @@ commit — as a columnar Parquet table with declared schema (SURVEY.md
   predicates push into the scan
 - insert/upsert/delete (D1–D3) → staged-batch union + window dedup
   (MERGE-equivalent on plain Parquet)
-- query_items (V5) → filter → HOF cosine → ``orderBy().limit(k)``
-  which Catalyst executes as ``TakeOrderedAndProject`` (per-partition
-  heap top-k + driver merge — no full shuffle sort, strictly better
-  than the reference's full sort at ``local_index.py:141``)
+- query_items (V5) → while the live vectors fit the broadcast budget,
+  a driver snapshot of the table (the reference's in-memory index,
+  ``local_index.py:161-172``) that writes keep current: a numpy filter
+  mask, a column-by-column dot product and a top-k, handed back as a
+  local relation (no Spark job). Otherwise, and whenever the snapshot
+  cannot promise Spark's exact answer: filter → HOF cosine →
+  ``orderBy().limit(k)``, which Catalyst executes as
+  ``TakeOrderedAndProject`` (per-partition heap top-k + driver merge —
+  no full shuffle sort, strictly better than the reference's full sort
+  at ``local_index.py:141``)
 
 Scale (100 TB): items live directory-partitioned by
 ``_bucket = pmod(xxhash64(<bucket key>), n_buckets)``; the bucket key is
@@ -44,16 +50,31 @@ from __future__ import annotations
 
 import json
 import logging
+import time
 import uuid
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from vectra_py_spark.filters import compile_filter
-from vectra_py_spark.functions.vector import cosine_to_query, l2_norm
+from vectra_py_spark.filters import (
+    FilterCompileError,
+    NotExact,
+    compile_filter,
+    compile_mask,
+)
+from vectra_py_spark.functions.vector import cosine_to_query, l2_norm, query_norm
+from vectra_py_spark.operators.similarity import (
+    BROADCAST_BYTES_CONF,
+    DEFAULT_BROADCAST_BYTES,
+    _vector_set_bytes,
+)
 from vectra_py_spark.session import local_frame
 
 __all__ = ["SparkVectorIndex", "ITEM_SCHEMA", "BUCKET_COL"]
@@ -94,6 +115,157 @@ def _metadata_resolver(df: DataFrame):
     return resolve
 
 
+def _valid(arr: pa.Array) -> np.ndarray:
+    return arr.is_valid().to_numpy(zero_copy_only=False)
+
+
+def _column_major(arr: pa.Array, dim: int | None) -> tuple[np.ndarray, np.ndarray]:
+    """A list<double> column → ``(Xt, bad)``: the vectors as a
+    ``(dim, n)`` float64 matrix (row ``j`` holds every vector's ``j``-th
+    component, contiguous) and the rows Spark would score null: a null
+    or ragged vector, or a null component."""
+    n = len(arr)
+    if dim is None:
+        return np.zeros((0, n)), np.ones(n, dtype=bool)
+    lengths = pc.fill_null(pc.list_value_length(arr), -1).to_numpy(zero_copy_only=False)
+    flat = arr.flatten()
+    if (lengths == dim).all() and flat.null_count == 0:
+        Xt = flat.to_numpy().reshape(n, dim).T
+        return np.ascontiguousarray(Xt), np.zeros(n, dtype=bool)
+    Xt, bad = np.zeros((dim, n)), np.ones(n, dtype=bool)
+    for i, v in enumerate(arr.to_pylist()):
+        if v is not None and len(v) == dim and None not in v:
+            Xt[:, i], bad[i] = v, False
+    return Xt, bad
+
+
+def _pick(x, keep: np.ndarray):
+    if isinstance(x, (pa.Array, pa.Table)):
+        return x.filter(pa.array(keep))
+    return x[..., keep]  # the last axis is the row axis (also of Xt)
+
+
+def _cat(a, b):
+    if isinstance(a, pa.Table):
+        return pa.concat_tables([a, b]).combine_chunks()
+    if isinstance(a, pa.Array):
+        return pa.concat_arrays([a, b])
+    return np.concatenate([a, b], axis=-1)
+
+
+def _rank(score: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the top ``k`` scores under (score DESC, id ASC),
+    in rank order. Python's ``str`` order is code-point order, which is
+    Spark's UTF-8 byte order."""
+    m = len(score)
+    k = min(k, m)
+    if k == 0:
+        return np.zeros(0, dtype=np.int64)
+    cand = range(m) if k == m else np.flatnonzero(score >= np.partition(score, m - k)[m - k])
+    return np.array(sorted(cand, key=lambda i: (-score[i], ids[i]))[:k], dtype=np.int64)
+
+
+class _Snapshot:
+    """A driver copy of an index's rows, for single-query top-k.
+
+    ``table`` holds the rows as Arrow (what a query hands back), ``Xt``
+    the vectors column-major as float64, ``norm`` and ``ids`` the stored
+    norms and ids, and ``columns`` the typed columns a filter mask reads
+    (:func:`~vectra_py_spark.filters.compile_mask`). A row Spark cannot
+    score (see :func:`_column_major`, or a null id) carries a NaN norm,
+    so a query whose candidates include it falls back to the Spark plan.
+    ``schema`` is the items DataFrame's schema, nullability included.
+    """
+
+    def __init__(self, table, Xt, norm, ids, columns, schema, dim) -> None:
+        self.table, self.Xt, self.norm, self.ids = table, Xt, norm, ids
+        self.columns, self.schema, self.dim = columns, schema, dim
+
+    @classmethod
+    def of(cls, table: pa.Table, dim: int | None, kinds: Mapping[str, str], schema):
+        table = table.combine_chunks()
+
+        def col(name: str) -> pa.Array:
+            return table.column(name).combine_chunks()
+
+        Xt, bad = _column_major(col("vector"), dim)
+        norm = np.array(pc.fill_null(col("norm"), np.nan).to_numpy(zero_copy_only=False), dtype=np.float64)
+        norm[bad | ~_valid(col("id"))] = np.nan
+        columns = {}
+        for name, kind in kinds.items():
+            arr = col(name)
+            data = arr if kind == "str" else pc.fill_null(arr, 0).to_numpy(zero_copy_only=False).astype(np.int64)
+            columns[name] = (kind, data, _valid(arr))
+        ids = col("id").to_numpy(zero_copy_only=False)
+        return cls(table, Xt, norm, ids, columns, schema, dim)
+
+    @property
+    def n(self) -> int:
+        return self.table.num_rows
+
+    def nbytes(self) -> int:
+        """The size estimate of ``_vector_set_bytes``: float64 payload +
+        row overhead + id."""
+        return self.n * ((self.dim or 0) * 8 + 24)
+
+    def keys_in(self, key_col: str, keys: Sequence[Any]) -> np.ndarray:
+        """Rows whose ``key_col`` is among ``keys``, as Spark's null-safe
+        ``isin`` delete sees them."""
+        try:
+            return compile_mask({key_col: {"$in": list(keys)}}, self.columns, self.n)
+        except FilterCompileError as e:
+            raise NotExact(f"delete keys on {key_col!r}: {e}") from e
+
+    def take(self, keep: np.ndarray) -> _Snapshot:
+        columns = {
+            name: (kind, _pick(data, keep), valid[keep])
+            for name, (kind, data, valid) in self.columns.items()
+        }
+        return _Snapshot(
+            _pick(self.table, keep), _pick(self.Xt, keep), self.norm[keep],
+            self.ids[keep], columns, self.schema, self.dim,
+        )
+
+    def concat(self, other: _Snapshot) -> _Snapshot:
+        if other.n == 0:
+            return self
+        if self.n == 0:
+            return other
+        if self.dim != other.dim:
+            raise NotExact(f"rows of dimension {other.dim} added to {self.dim}")
+        columns = {
+            name: (kind, _cat(data, other.columns[name][1]), _cat(valid, other.columns[name][2]))
+            for name, (kind, data, valid) in self.columns.items()
+        }
+        return _Snapshot(
+            _cat(self.table, other.table), _cat(self.Xt, other.Xt),
+            _cat(self.norm, other.norm), _cat(self.ids, other.ids),
+            columns, self.schema, self.dim,
+        )
+
+    def scores(self, q: list[float], rows: np.ndarray | None) -> np.ndarray:
+        """Spark's ``cosine_to_query`` over the candidate ``rows`` (all
+        rows when None), bit for bit: the dot product accumulates left
+        to right from 0.0 (``aggregate(zip_with)``), then divides by
+        ``norm * q_norm``. Raises :class:`NotExact` where Spark would
+        raise ``DIVIDE_BY_ZERO`` or score NaN."""
+        norm = self.norm if rows is None else self.norm[rows]
+        q_norm = query_norm(q)
+        if q_norm == 0.0 or len(norm) == 0:
+            return np.zeros(len(norm))  # cosine_to_query's literal 0.0
+        if (norm == 0.0).any():
+            raise NotExact("a candidate row has norm 0")
+        Xt = self.Xt if rows is None else self.Xt[:, rows]
+        acc, term = np.zeros(len(norm)), np.empty(len(norm))
+        for j, qj in enumerate(q):
+            np.multiply(Xt[j], qj, out=term)
+            acc += term
+        score = acc / (norm * q_norm)
+        if np.isnan(score).any():
+            raise NotExact("a candidate row scores NaN")
+        return score
+
+
 class SparkVectorIndex:
     """A vector index over a Parquet path (or a registered table name).
 
@@ -105,6 +277,11 @@ class SparkVectorIndex:
     ``bucket_key`` (``"id"`` or an indexed field) is the column whose hash
     places a row in its bucket; it and ``n_buckets`` are pinned in the
     meta file at create time, and a reopen adopts the pinned values.
+
+    ``query_items`` serves from a driver snapshot of the table (see
+    :meth:`query_items`), loaded on the first query and kept current by
+    this object's writes: like the ``items()`` cache, it assumes a single
+    writer per index object.
     """
 
     def __init__(
@@ -127,6 +304,8 @@ class SparkVectorIndex:
         self._pending: list[dict[str, Any]] = []
         self._pending_deletes: list[str] = []
         self._cached: DataFrame | None = None
+        self._snap: _Snapshot | None = None
+        self._snap_refused: str | None = None  # why no snapshot loads until the next write
 
     # -- schema ----------------------------------------------------------
     def _schema(self) -> T.StructType:
@@ -233,23 +412,24 @@ class SparkVectorIndex:
         fs.delete(jpath, True)
 
     # -- lifecycle (S2, S3) ----------------------------------------------
+    def _empty_table(self) -> DataFrame:
+        return local_frame(self.spark, [], self._schema()).withColumn(
+            BUCKET_COL, F.lit(None).cast("int")
+        )
+
     def create(self, overwrite: bool = False) -> None:
         """S2: write an empty table with the declared schema and pin the
         bucket layout in the meta side-file."""
         mode = "overwrite" if overwrite else "errorifexists"
-        empty = self.spark.createDataFrame([], self._schema()).withColumn(
-            BUCKET_COL, F.lit(None).cast("int")
-        )
-        empty.write.mode(mode).partitionBy(BUCKET_COL).parquet(self.path)
+        self._drop_snapshot("create")
+        self._empty_table().write.mode(mode).partitionBy(BUCKET_COL).parquet(self.path)
         self._write_meta()
         self._invalidate()
 
     def delete_index(self) -> None:
         """S3: drop the table (overwrite with nothing → empty dir)."""
-        empty = self.spark.createDataFrame([], self._schema()).withColumn(
-            BUCKET_COL, F.lit(None).cast("int")
-        )
-        empty.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(self.path)
+        self._drop_snapshot("delete_index")
+        self._empty_table().write.mode("overwrite").partitionBy(BUCKET_COL).parquet(self.path)
         self._write_meta()
         self._invalidate()
 
@@ -280,9 +460,76 @@ class SparkVectorIndex:
         return df
 
     def _invalidate(self) -> None:
+        self._snap_refused = None  # the table changed: its size may have too
         if self._cached is not None:
             self._cached.unpersist()
             self._cached = None
+
+    # -- serving snapshot ---------------------------------------------------
+    def _budget(self) -> int:
+        return int(self.spark.conf.get(BROADCAST_BYTES_CONF, str(DEFAULT_BROADCAST_BYTES)))
+
+    def _mask_kinds(self) -> dict[str, str]:
+        """The columns a filter mask can read exactly: ``id`` and the
+        BIGINT/INT/STRING indexed fields (a DOUBLE column is left out:
+        Spark orders NaN above every number)."""
+        kinds = {"id": "str"}
+        for name, dtype in self.indexed_fields.items():
+            if isinstance(dtype, (T.LongType, T.IntegerType)):
+                kinds[name] = "num"
+            elif isinstance(dtype, T.StringType):
+                kinds[name] = "str"
+        return kinds
+
+    def _serving_snapshot(self) -> _Snapshot:
+        """The loaded snapshot, else load it: one size check (count ×
+        dim, as ``_vector_set_bytes`` estimates it) against the broadcast
+        budget, then one ``toArrow()`` of the cached items. Raises
+        :class:`NotExact` when the table is over the budget; that answer
+        stands until the next write."""
+        if self._snap is not None:
+            return self._snap
+        if self._snap_refused is not None:
+            raise NotExact(self._snap_refused)
+        items = self.items()
+        size, budget = _vector_set_bytes(items, "vector"), self._budget()
+        if size > budget:
+            self._snap_refused = f"{size} bytes over the broadcast budget of {budget}"
+            log.info("snapshot of %s refused: %s", self.path, self._snap_refused)
+            raise NotExact(self._snap_refused)
+        t0 = time.perf_counter()
+        self._snap = _Snapshot.of(
+            items.toArrow(), self._resolved_dim(), self._mask_kinds(), items.schema
+        )
+        log.info(
+            "snapshot of %s loaded: %d rows, %d bytes in %.0f ms",
+            self.path, self._snap.n, size, (time.perf_counter() - t0) * 1e3,
+        )
+        return self._snap
+
+    def _drop_snapshot(self, by: str) -> None:
+        if self._snap is not None:
+            self._snap = None
+            log.info("snapshot of %s dropped by %s", self.path, by)
+
+    def _advance(self, snap: _Snapshot, delta: Callable[[_Snapshot], _Snapshot] | None) -> None:
+        """Apply a successful write's delta to the snapshot it was taken
+        from; drop the snapshot when the delta cannot say exactly what
+        the write did, or leaves it over the budget."""
+        try:
+            if delta is None:
+                raise NotExact("a write with no known delta")
+            new = delta(snap)
+            if new.nbytes() > self._budget():
+                raise NotExact(f"growing to {new.nbytes()} bytes, over the broadcast budget")
+        except NotExact as e:
+            log.info("snapshot of %s dropped by %s", self.path, e)
+            return
+        self._snap = new
+
+    def _staged_snapshot(self, table: pa.Table, snap: _Snapshot) -> _Snapshot:
+        table = table.select(snap.table.column_names).cast(snap.table.schema)
+        return _Snapshot.of(table, self.vector_dim, self._mask_kinds(), snap.schema)
 
     # -- mutations (D1-D4) ------------------------------------------------
     @staticmethod
@@ -318,11 +565,16 @@ class SparkVectorIndex:
             raise ValueError(
                 f"vector dim {len(vec)} != index dim {self.vector_dim}"
             )
+        # A1: norm precomputed at write time (``local_index.py:209``).
+        norm = self._norm(vec)
+        if norm == 0.0:
+            # Every cosine against it would divide by zero (Pinecone
+            # rejects all-zero dense vectors for cosine too).
+            raise ValueError("vector norm is 0 (all zeros): cosine is undefined")
         row = {
             "id": str(item.get("id") or uuid.uuid4()),
             "vector": vec,
-            # A1: norm precomputed at write time (``local_index.py:209``).
-            "norm": self._norm(vec),
+            "norm": norm,
             "metadata": {
                 str(k): str(v) for k, v in (item.get("metadata") or {}).items()
             },
@@ -366,6 +618,7 @@ class SparkVectorIndex:
         delete_cond: Column | None = None,
         delete_scope: str = "existing",
         check_insert_ids: set[str] | None = None,
+        delta: Callable[[_Snapshot], _Snapshot] | None = None,
     ) -> None:
         """Partition-scoped MERGE — the engine behind every mutation.
 
@@ -391,6 +644,10 @@ class SparkVectorIndex:
         the fresh ones); ``"merged"`` applies the delete after the merge
         (driver ``commit()``: a delete staged alongside an upsert of the
         same id wins).
+
+        ``delta`` maps a loaded serving snapshot to the table the write
+        leaves; it runs only after the write succeeded, and only while a
+        snapshot is loaded.
 
         Logs one record under ``vectra_py_spark.index`` per merge that
         writes: the touched buckets, how they were found (``keys`` or a
@@ -466,6 +723,8 @@ class SparkVectorIndex:
             if out.filter(F.col("_clash")).limit(1).count():
                 raise ValueError("insert_item: id already exists (unique=True)")
         out = out.drop("_clash")
+        # a write that fails part-way must not leave a stale snapshot
+        snap, self._snap = self._snap, None
         (
             out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -491,6 +750,8 @@ class SparkVectorIndex:
             for bucket in emptied:
                 self._delete_bucket_dir(bucket)
         self._invalidate()
+        if snap is not None:
+            self._advance(snap, delta)
         log.info(
             "merge %(path)s: buckets %(buckets)s found by %(found)s, "
             "%(staged)d staged rows, %(n_keys)d delete keys, deleted "
@@ -525,31 +786,83 @@ class SparkVectorIndex:
         if not self._pending and not self._pending_deletes:
             return
         self._ensure_meta()  # stage and delete under the pinned bucket key
-        staged = None
+        staged = added = None
         check_ids = {r["id"] for r in self._pending if r["_op"] == "insert"}
         if self._pending:
-            staged = local_frame(self.spark, self._pending, self._schema())
+            added = pa.Table.from_pylist(self._pending, schema=to_arrow_schema(self._schema()))
+            staged = local_frame(self.spark, added, self._schema())
+        ids, deleted = [r["id"] for r in self._pending], list(self._pending_deletes)
+
+        def delta(snap: _Snapshot) -> _Snapshot:
+            # delete_scope="merged": a staged row replaces every stored
+            # row of its id, then the deletes apply to both
+            if len(set(ids)) < len(ids):
+                raise NotExact("a commit that staged one id twice (either row may win)")
+            kept = snap.take(~snap.keys_in("id", ids + deleted))
+            if added is None:
+                return kept
+            new = self._staged_snapshot(added, snap)
+            return kept.concat(new.take(~new.keys_in("id", deleted)))
+
         self._merge(
             staged,
             staged_buckets=self._key_buckets([r[self.bucket_key] for r in self._pending]),
             n_staged=len(self._pending),
-            delete_keys=self._pending_deletes,
+            delete_keys=deleted,
             key_col="id",
             delete_scope="merged",
             check_insert_ids=check_ids or None,
+            delta=delta,
         )
         self.cancel_update()
 
     def delete_where(self, cond: Column) -> None:
         """Predicate delete: a column-pruned scan finds the buckets holding
-        matching rows, and only those are rewritten."""
+        matching rows, and only those are rewritten. Drops the serving
+        snapshot (a ``Column`` predicate has no driver twin)."""
+        self._drop_snapshot("delete_where")
         self._merge(None, delete_cond=cond)
+
+    def _keys_delta(
+        self,
+        keys: Sequence[Any] | None,
+        key_col: str | None,
+        staged: DataFrame | None = None,
+        n_staged: int = 0,
+    ) -> Callable[[_Snapshot], _Snapshot]:
+        """The ``delete_scope="existing"`` delta of a delete by key values,
+        plus an optional staged batch (``n_staged`` rows) that replaces
+        its ids' stored rows."""
+        key_col = key_col or self.bucket_key
+
+        def delta(snap: _Snapshot) -> _Snapshot:
+            keep = ~snap.keys_in(key_col, keys or [])
+            if staged is None:
+                return snap.take(keep)
+            grown = snap.nbytes() + n_staged * ((self.vector_dim or 0) * 8 + 24)
+            if grown > self._budget():  # never collect a batch that cannot fit
+                raise NotExact(f"a batch of {n_staged} rows, over the broadcast budget")
+            # the batch as written, norms included: collected only here,
+            # while a snapshot is loaded
+            new = self._staged_snapshot(staged.toArrow(), snap)
+            taken = keep & snap.keys_in("id", new.ids.tolist())
+            if self.bucket_key != "id" and taken.any():
+                # the table dedups ids within a bucket only: a stored row
+                # under another key value may stay beside the staged one
+                staged_key = dict(zip(new.ids.tolist(), new.table.column(self.bucket_key).to_pylist()))
+                stored = snap.table.column(self.bucket_key).filter(pa.array(taken)).to_pylist()
+                if any(staged_key[i] != k for i, k in zip(snap.ids[taken].tolist(), stored)):
+                    raise NotExact(f"a staged id stored under another {self.bucket_key!r}")
+            return snap.take(keep & ~taken).concat(new)
+
+        return delta
 
     def delete_by_keys(self, keys: Sequence[Any], key_col: str | None = None) -> None:
         """Delete every row whose ``key_col`` (default: the bucket key) is
         in ``keys`` (e.g. all chunks of a document). On the bucket key
         the buckets come from the keys, with no table scan."""
-        self._merge(None, delete_keys=list(keys), key_col=key_col)
+        keys = list(keys)
+        self._merge(None, delete_keys=keys, key_col=key_col, delta=self._keys_delta(keys, key_col))
 
     def merge_batch(
         self,
@@ -566,11 +879,11 @@ class SparkVectorIndex:
         ``df`` needs ``id`` and ``vector``; ``norm`` is (re)computed,
         missing schema columns null-fill. Duplicate ids within the
         batch are rejected (which row should win is undefined), as are
-        vectors of the wrong dimension — same ingest-time checks as the
-        row-at-a-time path. ``delete_keys`` additionally deletes the
-        PRE-EXISTING rows whose ``key_col`` (default: the bucket key) is
-        among them, in the same merge (document re-ingest drops the
-        replaced doc's old chunks this way).
+        vectors of the wrong dimension or of norm 0 — same ingest-time
+        checks as the row-at-a-time path. ``delete_keys`` additionally
+        deletes the PRE-EXISTING rows whose ``key_col`` (default: the
+        bucket key) is among them, in the same merge (document re-ingest
+        drops the replaced doc's old chunks this way).
 
         On an index not keyed by ``id``, an id already in the table must
         keep its key value: the batch's rows are deduplicated only
@@ -597,6 +910,7 @@ class SparkVectorIndex:
             F.countDistinct("id").alias("n_ids"),
             F.min(F.size("vector")).alias("d_min"),
             F.max(F.size("vector")).alias("d_max"),
+            F.min("norm").alias("norm_min"),
             F.collect_set(self._bucket_expr()).alias("buckets"),
         ).head()
         if int(stats["n"] or 0):
@@ -611,12 +925,15 @@ class SparkVectorIndex:
                     raise ValueError(
                         f"merge_batch: vector dimension != index dim {dim}"
                     )
+            if stats["norm_min"] == 0.0:
+                raise ValueError("merge_batch: vector norm is 0 (all zeros): cosine is undefined")
         self._merge(
             staged,
             staged_buckets=set(stats["buckets"]),
             n_staged=int(stats["n"]),
             delete_keys=delete_keys,
             key_col=key_col,
+            delta=self._keys_delta(delete_keys, key_col, staged, int(stats["n"])),
         )
 
     # -- reads (P12-P14, A2) ---------------------------------------------
@@ -649,19 +966,73 @@ class SparkVectorIndex:
         filter_ast: Mapping[str, Any] | None = None,
         score_decimals: int | None = None,
     ) -> DataFrame:
-        """V5: filter → cosine score → top-k.
+        """V5: filter → cosine score → top-k, ties broken by id (the
+        reference's sort is unstable on ties). A query vector whose
+        dimension is not the index's raises ``ValueError``.
 
-        Physical plan (verify with ``.explain``): Parquet scan with pushed
-        filter → HOF cosine projection (interpreted: ``ZipWith`` and its
-        lambda variables are ``CodegenFallback``) →
-        ``TakeOrderedAndProject(k)``. The query vector + its norm are plan
-        literals (computed once, ``local_index.py:135``). Ties broken by
-        id for determinism (the reference's sort is unstable on ties).
+        While the live vectors fit the broadcast budget
+        (``vectra_py_spark.similarity.broadcastBytes``), the query runs
+        on a driver snapshot of the table, loaded on the first call and
+        kept current by this object's writes: the filter compiles to a
+        numpy mask, the dot product accumulates column by column in
+        Spark's order, and the top-k rows come back as a local relation
+        (``LocalTableScan``: collecting it runs no job) with the Spark
+        plan's schema and bit-identical scores. The rows' order is rank
+        order.
+
+        The Spark plan answers instead when the table is over the
+        budget, a filter leaf is not on a BIGINT/INT/STRING indexed
+        column (or ``id``) with a literal of its kind, ``score_decimals``
+        is set, or a candidate row has norm 0 or scores NaN. Each such
+        query logs its reason at DEBUG under ``vectra_py_spark.index``.
+        Its physical plan (verify with ``.explain``): Parquet scan with
+        pushed filter → HOF cosine projection (interpreted: ``ZipWith``
+        and its lambda variables are ``CodegenFallback``) →
+        ``TakeOrderedAndProject(k)``. The query vector + its norm are
+        plan literals (computed once, ``local_index.py:135``).
         """
+        q = [float(x) for x in vector]
+        dim = self._resolved_dim()
+        if dim is not None and len(q) != dim:
+            raise ValueError(f"query vector dim {len(q)} != index dim {dim}")
+        try:
+            if score_decimals is not None:
+                raise NotExact("score_decimals rounds in Spark (HALF_UP on decimals)")
+            return self._snapshot_topk(q, top_k, filter_ast)
+        except NotExact as e:
+            log.debug("query_items on %s runs the Spark plan: %s", self.path, e)
+        return self._spark_topk(q, top_k, filter_ast, score_decimals)
+
+    def _snapshot_topk(
+        self, q: list[float], top_k: int, filter_ast: Mapping[str, Any] | None
+    ) -> DataFrame:
+        snap = self._serving_snapshot()
+        rows = None
+        if filter_ast:
+            rows = np.flatnonzero(compile_mask(filter_ast, snap.columns, snap.n))
+        if isinstance(top_k, bool) or not isinstance(top_k, int) or top_k < 0:
+            raise NotExact(f"top_k {top_k!r}")
+        score = snap.scores(q, rows)
+        pick = _rank(score, snap.ids if rows is None else snap.ids[rows], top_k)
+        out = snap.table.take(pick if rows is None else rows[pick])
+        out = out.append_column("score", pa.array(score[pick], pa.float64()))
+        nullable = query_norm(q) != 0.0  # a zero query scores the literal 0.0
+        schema = T.StructType(
+            snap.schema.fields + [T.StructField("score", T.DoubleType(), nullable)]
+        )
+        return local_frame(self.spark, out, schema)
+
+    def _spark_topk(
+        self,
+        q: list[float],
+        top_k: int,
+        filter_ast: Mapping[str, Any] | None,
+        score_decimals: int | None = None,
+    ) -> DataFrame:
         df = self.items()
         if filter_ast:
             df = df.filter(compile_filter(filter_ast, _metadata_resolver(df)))
-        score = cosine_to_query("vector", vector, norm_col="norm")
+        score = cosine_to_query("vector", q, norm_col="norm")
         if score_decimals is not None:
             score = F.round(score, score_decimals)
         return (

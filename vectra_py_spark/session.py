@@ -79,11 +79,12 @@ def get_spark(
 
 
 def local_frame(spark: SparkSession, rows, schema):
-    """Driver rows (dicts) + a declared schema → a DataFrame that plans
-    as ``LocalTableScan``, so projections over it fold on the driver
-    and collecting them runs no job.
+    """Driver rows (dicts, or an Arrow table whose columns are already in
+    the schema's order) + a declared schema → a DataFrame that plans as
+    ``LocalTableScan``, so projections over it fold on the driver and
+    collecting them runs no job.
 
-    The rows become an Arrow table with the schema's own types (nullable
+    Dict rows become an Arrow table with the schema's own types (nullable
     int64 for BIGINT, maps as maps), which Spark plans as a local
     relation at driver-row sizes, whatever
     ``spark.sql.execution.arrow.pyspark.enabled`` says.
@@ -91,13 +92,14 @@ def local_frame(spark: SparkSession, rows, schema):
     whose every read starts Python workers; a pandas frame would take
     that same RDD route when Arrow is off, and Arrow's pandas form of a
     map column (a list of pairs) makes PySpark fall back to it even when
-    Arrow is on.
+    Arrow is on. The frame's schema is ``schema``, nullability included.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    table = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
+    if not isinstance(rows, pa.Table):
+        rows = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
+    return spark.createDataFrame(rows, schema)
 
 
 def _parse_bytes(s: str) -> int:
