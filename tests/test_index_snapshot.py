@@ -1,11 +1,14 @@
-"""Serving snapshot of ``SparkVectorIndex.query_items``: the driver
-snapshot must answer exactly as the Spark plan does — same rows, same
+"""Serving snapshot of ``SparkVectorIndex.query_items``, and the document
+reads of ``SparkDocumentIndex`` built on it with a catalog snapshot: the
+driver must answer exactly as the Spark plan does — same rows, same
 schema (nullability included), same score bits — before and after every
 kind of write, and fall back where it cannot promise that."""
 
 from __future__ import annotations
 
 import logging
+import time
+import uuid
 import warnings
 
 import numpy as np
@@ -15,10 +18,10 @@ from pyspark.sql import types as T
 
 import vectra_py_spark.document_index as document_index_mod
 import vectra_py_spark.index as index_mod
-from vectra_py_spark.document_index import SparkDocumentIndex
+from vectra_py_spark.document_index import DOCUMENT_SCHEMA, SparkDocumentIndex
 from vectra_py_spark.filters import FilterCompileError
 from vectra_py_spark.index import SparkVectorIndex
-from vectra_py_spark.operators.similarity import BROADCAST_BYTES_CONF
+from vectra_py_spark.operators.similarity import BROADCAST_BYTES_CONF, DEFAULT_BROADCAST_BYTES
 from vectra_py_spark.session import local_frame
 
 from tests.conftest import SF_ORACLE
@@ -343,3 +346,214 @@ def test_render_parity(spark, tmp_path, budget):
         spark.createDataFrame([(uri, RAG_DOCS[uri] + " w3x1 w3x1")], "uri string, text string")
     )
     check()
+
+
+def _assert_same_documents(got, want):
+    """``query_documents`` frames: schema, rows in order, and the bits of
+    every document and chunk score."""
+    assert got.schema == want.schema
+    g, w = got.collect(), want.collect()
+    assert g == w
+
+    def bits(rows):
+        return [(r["doc_score"].hex(), [c["score"].hex() for c in r["chunks"]]) for r in rows]
+
+    assert bits(g) == bits(w)
+
+
+def test_document_queries_match_spark_plan(spark, tmp_path, budget):
+    """``query_documents`` and ``render_document_sections`` answered on
+    the driver from the two snapshots, kept current across every
+    document write, equal the Spark plan (budget 0, a fresh object) bit
+    for bit: rows, order, schema, doc_score."""
+    base = str(tmp_path / "dq")
+    di = SparkDocumentIndex(spark, base, vector_dim=16, chunk_size=24)
+    di.create()
+    twin = "w3x1 w5x2 w7x3"  # one chunk each: the twins' doc_scores tie
+    docs = sorted(RAG_DOCS.items()) + [("u://twin-b.txt", twin), ("u://twin-a.txt", twin)]
+    di.upsert_documents_df(spark.createDataFrame(docs, "uri string, text string"))
+    queries = [twin] + [f"w{i}x{i % 5} w{(3 * i + 1) % 23}x{i % 3}" for i in range(4)]
+    uris = {u for u, _ in docs}  # every uri ever ingested
+    seen_tie = False
+
+    def check(filter_ast=None, max_documents=3) -> None:
+        nonlocal seen_tie
+        got = [di.query_documents(q, max_documents, 40, filter_ast) for q in queries]
+        rendered = [
+            di.render_document_sections(q, max_documents, 40, filter_ast=filter_ast) for q in queries
+        ]
+        assert di._catalog is catalog  # kept current, never reloaded
+        budget(0)
+        try:
+            ref = SparkDocumentIndex(spark, base, vector_dim=16, chunk_size=24)
+            for q, g, r in zip(queries, got, rendered):
+                assert "LocalTableScan" in _plan(g)
+                want = ref.query_documents(q, max_documents, 40, filter_ast)
+                assert "LocalTableScan" not in _plan(want)
+                _assert_same_documents(g, want)
+                assert r == ref.render_document_sections(q, max_documents, 40, filter_ast=filter_ast)
+                scores = [row["doc_score"] for row in g.collect()]
+                seen_tie |= len(set(scores)) < len(scores)
+            for uri in sorted(uris) + ["u://absent.txt"]:
+                doc_id = di.get_document_id(uri)
+                assert doc_id == ref.get_document_id(uri)
+                assert di.get_document_uri(doc_id or "absent") == ref.get_document_uri(doc_id or "absent")
+            # the writes replaced every old chunk: one chunk per position
+            # of a catalog document (parity alone cannot see that: both
+            # sides read the same table)
+            chunks = [(r["document_id"], r["start_pos"]) for r in ref.index.items().collect()]
+            assert len(set(chunks)) == len(chunks)
+            assert {d for d, _ in chunks} - {"orphan"} == {r["document_id"] for r in ref.documents().collect()}
+        finally:
+            budget(DEFAULT_BROADCAST_BYTES)
+            # Spark matches cached reads by path: the writer's next read
+            # must not see this object's cache of the current files
+            ref.index._invalidate()
+
+    di.render_document_sections(queries[0])  # loads both snapshots
+    catalog = di._catalog
+    check()
+    assert seen_tie
+    ids = [di.get_document_id(u) for u in ("u://doc1.txt", "u://doc3.txt", "u://twin-a.txt")]
+    check({"document_id": {"$in": ids}}, max_documents=5)
+    # replace-by-uri on the DataFrame path (same id) and on the list path (a new id)
+    di.upsert_documents_df(
+        spark.createDataFrame([("u://doc2.txt", RAG_DOCS["u://doc2.txt"] + " w3x1 w3x1")], "uri string, text string")
+    )
+    di.upsert_documents([
+        {"uri": "u://doc3.txt", "text": "w9x4 w3x1 " * 20},
+        {"uri": "u://new.txt", "text": "w5x2 w7x3 w1x1"},
+    ])
+    uris.add("u://new.txt")
+    check()
+    di.delete_document("u://twin-b.txt")  # its lookups stay checked: None now
+    check()
+    # an orphan chunk (its document_id is in no catalog row): uri and
+    # text come back null, as from the Spark plan's left join
+    orphan = local_frame(
+        spark,
+        [{"id": "orphan-1", "vector": di._query_vector(queries[1]), "document_id": "orphan",
+          "start_pos": 0, "end_pos": 3}],
+        T.StructType([
+            T.StructField("id", T.StringType()),
+            T.StructField("vector", T.ArrayType(T.DoubleType())),
+            T.StructField("document_id", T.StringType()),
+            T.StructField("start_pos", T.LongType()),
+            T.StructField("end_pos", T.LongType()),
+        ]),
+    )
+    di.index.merge_batch(orphan)
+    check()
+    assert di.query_documents(queries[1], 3, 40).collect()[0]["uri"] is None
+
+
+def test_in_budget_render_runs_no_spark_job(spark, tmp_path, budget):
+    di = SparkDocumentIndex(spark, str(tmp_path / "nj"), vector_dim=16, chunk_size=24)
+    di.create()
+    di.upsert_documents_df(spark.createDataFrame(sorted(RAG_DOCS.items()), "uri string, text string"))
+    q = "w1x1 w8x3"
+    di.render_document_sections(q, max_documents=3)  # loads both snapshots
+    sc, tag = spark.sparkContext, uuid.uuid4().hex
+    sc.setJobGroup(f"driver-{tag}", "in-budget render")
+    try:
+        assert di.render_document_sections(q, max_documents=3)
+        assert di.query_documents(q, 3).collect()
+        assert di.get_document_uri(di.get_document_id("u://doc1.txt")) == "u://doc1.txt"
+        # the same render on the Spark plan, as a control that jobs show
+        budget(0)
+        sc.setJobGroup(f"spark-{tag}", "Spark-plan render")
+        SparkDocumentIndex(spark, di.base_path, vector_dim=16, chunk_size=24).render_document_sections(q, 3)
+    finally:
+        sc._jsc.clearJobGroup()
+    # job events reach the status tracker in order: once the control's
+    # jobs show, any job the driver path started would show too
+    st, deadline = sc.statusTracker(), time.monotonic() + 30
+    while not st.getJobIdsForGroup(f"spark-{tag}") and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert st.getJobIdsForGroup(f"spark-{tag}")
+    assert list(st.getJobIdsForGroup(f"driver-{tag}")) == []
+
+
+def test_list_path_rejects_a_repeated_uri_or_id(spark, tmp_path):
+    """Two documents with one uri in one call used to both be chunked
+    while the catalog kept one of them: the other's chunks were orphans
+    that ``delete_document`` could never remove."""
+    di = SparkDocumentIndex(spark, str(tmp_path / "dup"), vector_dim=8, chunk_size=16)
+    di.create()
+    with pytest.raises(ValueError, match="uri 'u://a.txt' appears twice"):
+        di.upsert_documents([{"uri": "u://a.txt", "text": "alpha"}, {"uri": "u://a.txt", "text": "beta gamma"}])
+    with pytest.raises(ValueError, match="document_id 'x' appears twice"):
+        di.upsert_documents([
+            {"uri": "u://a.txt", "text": "alpha", "document_id": "x"},
+            {"uri": "u://b.txt", "text": "beta", "document_id": "x"},
+        ])
+    assert di.documents().count() == 0
+    assert di.index.items(use_cache=False).count() == 0
+    di.upsert_documents([{"uri": "u://a.txt", "text": "alpha"}, {"uri": "u://b.txt", "text": "beta"}])
+    di.delete_document("u://a.txt")
+    catalog = {r["document_id"] for r in di.documents().collect()}
+    chunks = {r["document_id"] for r in di.index.items(use_cache=False).collect()}
+    assert chunks == catalog and len(catalog) == 1
+
+
+def test_catalog_and_render_decisions_are_logged(spark, tmp_path, caplog, budget):
+    base = str(tmp_path / "cl")
+    di = SparkDocumentIndex(spark, base, vector_dim=4, chunk_size=8)
+    di.create()
+    di.upsert_documents_df(
+        spark.createDataFrame([("u://a.txt", "w1 w2 w3"), ("u://b.txt", "w4 w5")], "uri string, text string")
+    )
+    render = di.render_document_sections
+    with caplog.at_level(logging.DEBUG, logger="vectra_py_spark.document_index"):
+        render("w1 w2")  # loads: 2 documents of 32 + 9 + 8 and 32 + 9 + 5 bytes
+        render("w1 w2", filter_ast={"foo": "x"})
+        c0, k0 = di.index._snap.nbytes(), di._catalog.nbytes
+        # one more document of one chunk: the chunks alone still fit
+        grown_c, grown_k = c0 + (4 * 8 + 24), k0 + 32 + 9 + 2
+        budget(grown_c + grown_k - 1)
+        di.upsert_documents_df(spark.createDataFrame([("u://c.txt", "w6")], "uri string, text string"))
+        render("w1 w2")  # refused: the next write retries
+        render("w1 w2")
+        budget(DEFAULT_BROADCAST_BYTES)
+        di.delete_document("u://c.txt")
+        render("w1 w2")  # loads again
+        budget(0)  # a fresh object: its chunk snapshot is over the budget
+        SparkDocumentIndex(spark, base, vector_dim=4, chunk_size=8).render_document_sections("w1")
+        budget(DEFAULT_BROADCAST_BYTES)
+        di.create(overwrite=True)
+        local_frame(
+            spark,
+            [{"document_id": i, "uri": "u://d.txt", "text": "w1"} for i in ("d1", "d2")],
+            DOCUMENT_SCHEMA,
+        ).write.mode("append").parquet(di.docs_path)
+        assert render("w1") == []
+        legacy = local_frame(
+            spark,
+            [{"id": "z", "vector": [0.0] * 4, "norm": 0.0, "document_id": "d1", "start_pos": 0, "end_pos": 1}],
+            di.index._schema(),
+        )
+        di.index._merge(legacy, staged_buckets=di.index._key_buckets(["d1"]), n_staged=1)
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            render("w1")
+    got = [(r.levelname, r.getMessage()) for r in caplog.records if r.name == "vectra_py_spark.document_index"]
+    info = [m for lvl, m in got if lvl == "INFO"]
+    assert len(info) == 6, "\n".join(info)
+    assert info[0].startswith(f"catalog of {base} loaded: 2 documents, 95 bytes in ")
+    assert info[0].endswith(" ms")
+    assert info[1].endswith(f"dropped by growing to {grown_c + grown_k} bytes with the chunks, over the broadcast budget")
+    assert info[2].endswith(
+        f"refused: {grown_k} bytes beside {grown_c} chunk bytes, over the broadcast budget of {grown_c + grown_k - 1}"
+    )
+    assert "loaded: 2 documents, 95 bytes in " in info[3]
+    assert info[4] == f"catalog of {base} dropped by create"
+    assert info[5] == f"catalog of {base} refused: uri 'u://d.txt' appears twice"
+    debug = [m for lvl, m in got if lvl == "DEBUG"]
+    prefix = f"render_document_sections on {base} runs the Spark plan: "
+    assert all(m.startswith(prefix) for m in debug), debug
+    reasons = [m[len(prefix):] for m in debug]
+    assert reasons[0] == "filter field 'foo' is not a typed indexed column"
+    assert reasons[1] == reasons[2] == info[2].split("refused: ")[1]
+    assert reasons[3].endswith(" bytes over the broadcast budget of 0")
+    assert reasons[4] == "uri 'u://d.txt' appears twice"
+    assert reasons[5] == "a candidate row has norm 0"
+    assert len(reasons) == 6

@@ -161,8 +161,8 @@ def _rank(score: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
     k = min(k, m)
     if k == 0:
         return np.zeros(0, dtype=np.int64)
-    cand = range(m) if k == m else np.flatnonzero(score >= np.partition(score, m - k)[m - k])
-    return np.array(sorted(cand, key=lambda i: (-score[i], ids[i]))[:k], dtype=np.int64)
+    cand = np.arange(m) if k == m else np.flatnonzero(score >= np.partition(score, m - k)[m - k])
+    return cand[np.lexsort((ids[cand], -score[cand]))][:k]
 
 
 class _Snapshot:
@@ -991,21 +991,31 @@ class SparkVectorIndex:
         ``TakeOrderedAndProject(k)``. The query vector + its norm are
         plan literals (computed once, ``local_index.py:135``).
         """
-        q = [float(x) for x in vector]
-        dim = self._resolved_dim()
-        if dim is not None and len(q) != dim:
-            raise ValueError(f"query vector dim {len(q)} != index dim {dim}")
+        q = self._query_vector(vector)
         try:
             if score_decimals is not None:
                 raise NotExact("score_decimals rounds in Spark (HALF_UP on decimals)")
-            return self._snapshot_topk(q, top_k, filter_ast)
+            rows = self._snapshot_rows(q, top_k, filter_ast)
+            return local_frame(self.spark, rows, self._snapshot_schema(q))
         except NotExact as e:
             log.debug("query_items on %s runs the Spark plan: %s", self.path, e)
         return self._spark_topk(q, top_k, filter_ast, score_decimals)
 
-    def _snapshot_topk(
+    def _query_vector(self, vector: Sequence[float]) -> list[float]:
+        """The query as floats; ``ValueError`` unless its dimension is
+        the index's."""
+        q = [float(x) for x in vector]
+        dim = self._resolved_dim()
+        if dim is not None and len(q) != dim:
+            raise ValueError(f"query vector dim {len(q)} != index dim {dim}")
+        return q
+
+    def _snapshot_rows(
         self, q: list[float], top_k: int, filter_ast: Mapping[str, Any] | None
-    ) -> DataFrame:
+    ) -> pa.Table:
+        """The top-k rows of the serving snapshot with their ``score``,
+        in rank order, bit for bit the Spark plan's. Raises
+        :class:`NotExact` where the snapshot cannot promise that."""
         snap = self._serving_snapshot()
         rows = None
         if filter_ast:
@@ -1015,12 +1025,15 @@ class SparkVectorIndex:
         score = snap.scores(q, rows)
         pick = _rank(score, snap.ids if rows is None else snap.ids[rows], top_k)
         out = snap.table.take(pick if rows is None else rows[pick])
-        out = out.append_column("score", pa.array(score[pick], pa.float64()))
+        return out.append_column("score", pa.array(score[pick], pa.float64()))
+
+    def _snapshot_schema(self, q: list[float]) -> T.StructType:
+        """The Spark plan's schema of :meth:`_snapshot_rows` (a loaded
+        snapshot's), nullability included."""
         nullable = query_norm(q) != 0.0  # a zero query scores the literal 0.0
-        schema = T.StructType(
-            snap.schema.fields + [T.StructField("score", T.DoubleType(), nullable)]
+        return T.StructType(
+            self._snap.schema.fields + [T.StructField("score", T.DoubleType(), nullable)]
         )
-        return local_frame(self.spark, out, schema)
 
     def _spark_topk(
         self,
