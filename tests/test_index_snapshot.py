@@ -557,3 +557,69 @@ def test_catalog_and_render_decisions_are_logged(spark, tmp_path, caplog, budget
     assert reasons[4] == "uri 'u://d.txt' appears twice"
     assert reasons[5] == "a candidate row has norm 0"
     assert len(reasons) == 6
+
+
+def test_ingest_over_the_budget_drops_the_catalog_uncollected(spark, tmp_path, caplog, budget, monkeypatch):
+    """A loaded catalog must not make an ingest collect a batch that
+    cannot fit beside both snapshots: the catalog is dropped, unread,
+    and the left-semi probe still finds the replaced ids."""
+    base = str(tmp_path / "big")
+    di = SparkDocumentIndex(spark, base, vector_dim=4, chunk_size=8)
+    di.create()
+    di.upsert_documents_df(
+        spark.createDataFrame([("u://a.txt", "w1 w2 w3"), ("u://b.txt", "w4 w5")], "uri string, text string")
+    )
+    di.render_document_sections("w1 w2")  # loads both snapshots
+    c0, k0 = di.index._snap.nbytes(), di._catalog.nbytes
+    batch = [("u://a.txt", "w6 " * 200), ("u://c.txt", "w7")]
+    size = sum(32 + len(u) + len(t) for u, t in batch)
+    budget(c0 + k0 + size - 1)
+    collected = []
+    real = type(di.documents()).toArrow
+
+    def spy(df):
+        collected.append(df.columns)
+        return real(df)
+
+    monkeypatch.setattr(type(di.documents()), "toArrow", spy)
+    with caplog.at_level(logging.INFO, logger="vectra_py_spark.document_index"):
+        di.upsert_documents_df(spark.createDataFrame(batch, "uri string, text string"))
+    monkeypatch.undo()
+    assert ["document_id", "uri", "text"] not in collected
+    assert di._catalog is None
+    got = [r.getMessage() for r in caplog.records if r.name == "vectra_py_spark.document_index"]
+    assert got == [
+        f"catalog of {base} dropped by a staged batch of {size} bytes: {k0 + size} bytes beside "
+        f"{c0} chunk bytes, over the broadcast budget of {c0 + k0 + size - 1}"
+    ]
+    catalog = {r["document_id"]: r["uri"] for r in di.documents().collect()}
+    chunks = {r["document_id"] for r in di.index.items(use_cache=False).collect()}
+    assert sorted(catalog.values()) == ["u://a.txt", "u://b.txt", "u://c.txt"]
+    assert chunks == set(catalog)
+    budget(DEFAULT_BROADCAST_BYTES)
+    assert di.render_document_sections("w6")[0][1] == "u://a.txt"  # loads again
+    assert di._catalog.by_uri == {u: d for d, u in catalog.items()}
+
+
+def test_a_loaded_catalog_over_the_budget_is_dropped(spark, tmp_path, caplog, budget):
+    """Both snapshots must fit the budget together on every read, not
+    only when the catalog loads."""
+    base = str(tmp_path / "shrink")
+    di = SparkDocumentIndex(spark, base, vector_dim=4, chunk_size=8)
+    di.create()
+    di.upsert_documents_df(
+        spark.createDataFrame([("u://a.txt", "w1 w2 w3"), ("u://b.txt", "w4 w5")], "uri string, text string")
+    )
+    want = di.render_document_sections("w1 w2")  # loads both snapshots
+    c0, k0 = di.index._snap.nbytes(), di._catalog.nbytes
+    budget(c0 + k0 - 1)  # the chunks alone still fit
+    with caplog.at_level(logging.DEBUG, logger="vectra_py_spark.document_index"):
+        assert di.render_document_sections("w1 w2") == want
+        assert di.render_document_sections("w1 w2") == want  # refused, with no job
+    assert di._catalog is None and di.index._snap is not None
+    reason = f"{k0} bytes beside {c0} chunk bytes, over the broadcast budget of {c0 + k0 - 1}"
+    got = [(r.levelname, r.getMessage()) for r in caplog.records if r.name == "vectra_py_spark.document_index"]
+    fallback = f"render_document_sections on {base} runs the Spark plan: {reason}"
+    assert got == [
+        ("INFO", f"catalog of {base} dropped by {reason}"), ("DEBUG", fallback), ("DEBUG", fallback),
+    ]

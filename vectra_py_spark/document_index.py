@@ -17,10 +17,12 @@ Spark jobs: checkpoints, the catalog rewrite and the items MERGE):
 documents → splitter ``mapInPandas`` (T1–T4) → embedding ``mapInPandas``
 (E1/E3, token-budget batched A6) → norm (A1) → partition-scoped MERGE
 into items. The chunks a batch replaces are found by document id: while
-the catalog snapshot (below) is loaded, the batch's checkpointed
-``(document_id, uri, text)`` rows are collected, their uris give the
-replaced ids and the rows keep the snapshot current, with no probe of
-the documents table; otherwise a left-semi probe finds them.
+the catalog snapshot (below) is loaded and a size aggregate over the
+batch's checkpoint shows its ``(document_id, uri, text)`` rows fit
+beside both snapshots in the budget, those rows are collected, their
+uris give the replaced ids and the rows keep the snapshot current, with
+no probe of the documents table; otherwise the catalog is dropped and
+a left-semi probe finds them.
 
 Query (D7, §3.3): embed the query driver-side (E5) → V5 top-k chunks →
 group by document (A4) → mean score (A5) → look up uri and text (V6) →
@@ -93,6 +95,10 @@ def infer_doc_type(uri: str, explicit: str | None = None) -> str | None:
 
 def _utf8(s: str | None) -> int:
     return len(s.encode()) if s is not None else 0
+
+
+def _over_budget(size: int, chunk_bytes: int, budget: int) -> str:
+    return f"{size} bytes beside {chunk_bytes} chunk bytes, over the broadcast budget of {budget}"
 
 
 def _row_bytes():
@@ -187,25 +193,30 @@ class SparkDocumentIndex:
 
     # -- catalog snapshot ---------------------------------------------------
     def _catalog_snapshot(self, chunk_bytes: int) -> _Catalog:
-        """The loaded catalog snapshot, else load it: one size aggregate
-        (id, uri and text bytes) against what the broadcast budget leaves
-        beside the ``chunk_bytes`` of the chunk snapshot, then one
-        ``toArrow()`` of ``(document_id, uri, text)``. Raises
-        :class:`NotExact` when it is over the budget or a uri or id
-        repeats; that answer stands until the next write."""
+        """The loaded catalog snapshot while it still fits beside the
+        ``chunk_bytes`` of the chunk snapshot in the broadcast budget,
+        else load it: one size aggregate (id, uri and text bytes) against
+        what the budget leaves beside the chunks, then one ``toArrow()``
+        of ``(document_id, uri, text)``. Raises :class:`NotExact` when it
+        is over the budget or a uri or id repeats; that answer stands
+        until the next write."""
+        budget = self.index._budget()
         if self._catalog is not None:
-            return self._catalog
+            if chunk_bytes + self._catalog.nbytes <= budget:
+                return self._catalog
+            # the chunk snapshot grew, or the budget shrank, since the load
+            self._catalog_refused = _over_budget(self._catalog.nbytes, chunk_bytes, budget)
+            self._catalog = None
+            log.info("catalog of %s dropped by %s", self.base_path, self._catalog_refused)
+            raise NotExact(self._catalog_refused)
         if self._catalog_refused is not None:
             raise NotExact(self._catalog_refused)
         t0 = time.perf_counter()
-        docs, budget = self.documents(), self.index._budget()
+        docs = self.documents()
         size = docs.agg(F.sum(_row_bytes())).head()[0] or 0
         try:
             if chunk_bytes + size > budget:
-                raise NotExact(
-                    f"{size} bytes beside {chunk_bytes} chunk bytes, over the "
-                    f"broadcast budget of {budget}"
-                )
+                raise NotExact(_over_budget(size, chunk_bytes, budget))
             cat = _Catalog()
             cat.add(docs.select("document_id", "uri", "text").toArrow())
         except NotExact as e:
@@ -225,6 +236,11 @@ class SparkDocumentIndex:
             self._catalog = None
             log.info("catalog of %s dropped by %s", self.base_path, by)
 
+    def _chunk_bytes(self) -> int:
+        """The bytes of the chunk table's serving snapshot, 0 unloaded."""
+        snap = self.index._snap
+        return snap.nbytes() if snap is not None else 0
+
     def _hold_catalog(self) -> _Catalog | None:
         """Take the catalog snapshot aside for a write, which must not
         leave it stale if it fails part-way; a refusal is retried after
@@ -236,10 +252,9 @@ class SparkDocumentIndex:
         """Apply a successful write's delta to the catalog snapshot it was
         taken from; drop it when the delta is not exact or leaves both
         snapshots over the budget."""
-        snap = self.index._snap
         try:
             delta(cat)
-            total = cat.nbytes + (snap.nbytes() if snap is not None else 0)
+            total = cat.nbytes + self._chunk_bytes()
             if total > self.index._budget():
                 raise NotExact(f"growing to {total} bytes with the chunks, over the broadcast budget")
         except NotExact as e:
@@ -324,8 +339,9 @@ class SparkDocumentIndex:
         """Corpus-scale D5: the exact split → embed → partition-scoped
         MERGE pipeline of :meth:`upsert_documents`, staged straight
         from a DataFrame — a JSONL/CSV dump read by
-        ``sources/textcorpus.py`` (or any corpus table) flows in with
-        nothing round-tripping the driver.
+        ``sources/textcorpus.py`` (or any corpus table) flows in without
+        the batch round-tripping the driver, except where the catalog
+        snapshot keeps it (below).
 
         ``document_id = md5(uri)``: deterministic, so re-ingesting a
         corpus REPLACES documents in place instead of duplicating them
@@ -346,9 +362,12 @@ class SparkDocumentIndex:
 
         Scale note: replace-by-uri deletion materializes the replaced
         ids driver-side — O(re-ingested docs that already exist), zero
-        on a fresh corpus load — and while the catalog snapshot is
-        loaded the whole batch's ``(document_id, uri, text)`` is
-        collected to keep it current. For a full-corpus RE-ingest,
+        on a fresh corpus load. While the catalog snapshot is loaded,
+        one size aggregate over the batch comes first: if the batch's
+        ``(document_id, uri, text)`` fits beside both snapshots in the
+        broadcast budget it is collected to keep the catalog current,
+        else the catalog is dropped (logged) and a left-semi probe finds
+        the replaced ids. For a full-corpus RE-ingest,
         recreate the index instead (strictly cheaper than merging 100%
         churn).
         """
@@ -423,8 +442,19 @@ class SparkDocumentIndex:
         cat = self._hold_catalog()
         existing = self.documents()
         if cat is not None:
+            # never collect a batch that cannot fit beside both snapshots
+            size = staged.agg(F.sum(_row_bytes())).head()[0] or 0
+            chunk_bytes, budget = self._chunk_bytes(), self.index._budget()
+            if cat.nbytes + size + chunk_bytes > budget:
+                log.info(
+                    "catalog of %s dropped by a staged batch of %d bytes: %s", self.base_path,
+                    size, _over_budget(cat.nbytes + size, chunk_bytes, budget),
+                )
+                cat = None
+        if cat is not None:
             # the batch as written, collected only while the catalog is
-            # loaded: its uris give the replaced ids, with no probe job
+            # loaded and it fits: its uris give the replaced ids, with no
+            # probe job
             added = staged.select("document_id", "uri", "text").toArrow()
             uris = added.column("uri").to_pylist()
             replaced_ids = [cat.by_uri[u] for u in uris if u in cat.by_uri]
@@ -548,7 +578,7 @@ class SparkDocumentIndex:
             if isinstance(max_documents, bool) or not isinstance(max_documents, int) or max_documents < 0:
                 raise NotExact(f"max_documents {max_documents!r}")
             top = self.index._snapshot_rows(q, max_chunks, filter_ast)
-            catalog = self._catalog_snapshot(self.index._snap.nbytes())
+            catalog = self._catalog_snapshot(self._chunk_bytes())
             # A4: group in rank order, the order Spark's one-partition avg sums in
             groups: dict[str, list[tuple]] = {}
             cols = (top.column(c).to_pylist() for c in ("document_id", *_CHUNK_FIELDS))
@@ -689,8 +719,7 @@ class SparkDocumentIndex:
 
         from vectra_py_spark.operators import ranking as rk
 
-        provider = self.embedder_factory()
-        qvec = provider.create_embeddings([scrub_newlines(query_text)])[0]
+        qvec = self._query_vector(query_text)
 
         wa = Window.orderBy(F.desc("score"), F.asc("id"))
         dense = (
