@@ -114,6 +114,33 @@ class TestPartitionScopedMerge:
         assert f"{BUCKET_COL}={target}" not in _snapshot(idx.path)
         assert idx.items().count() == 32 - len(doomed)
 
+    def test_emptied_bucket_leaves_no_stale_cache(self, spark, idx):
+        # Another handle cached items(); the commit that empties a bucket
+        # deletes its directory after the write refreshed Spark's caches
+        # of the path. Neither that handle's read nor a fresh handle's
+        # (Spark reuses a cached read of the same path) may list the
+        # deleted files.
+        other = SparkVectorIndex(spark, idx.path, vector_dim=2)
+        assert other.items().count() == 32
+        target = _bucket_of(spark, "k00", 8)
+        doomed = [
+            r.id
+            for r in idx._raw_items()
+            .filter(F.col(BUCKET_COL) == target)
+            .select("id")
+            .collect()
+        ]
+        for i in doomed:
+            idx.delete_item(i)
+        idx.commit()
+        assert f"{BUCKET_COL}={target}" not in _snapshot(idx.path)
+        left = 32 - len(doomed)
+        assert other.items().count() == left
+        fresh = SparkVectorIndex(spark, idx.path, vector_dim=2)
+        assert fresh.items().count() == left
+        other._invalidate()
+        fresh._invalidate()
+
     def test_delete_where_predicate(self, idx):
         idx.delete_where(F.col("id") < F.lit("k10"))
         assert idx.items().count() == 22

@@ -749,6 +749,12 @@ class SparkVectorIndex:
             emptied = may_empty - kept
             for bucket in emptied:
                 self._delete_bucket_dir(bucket)
+        if emptied:
+            # the write refreshed Spark's caches of this path before
+            # these deletes; a cached read elsewhere (another handle's
+            # items(), or a fresh read that reuses its cache) would
+            # still list the deleted files
+            self.spark.catalog.refreshByPath(self.path)
         self._invalidate()
         if snap is not None:
             self._advance(snap, delta)

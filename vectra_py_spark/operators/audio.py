@@ -17,7 +17,7 @@ sinks. Steps (applied in this order when combined):
 
 Contract: malformed payloads raise ValueError (quarantine upstream or
 use ``on_error='quarantine'`` here — same policy as feature
-extraction). Plan shape: narrow ``mapInPandas``, payloads never enter a
+extraction). Plan shape: narrow ``map_rows``, payloads never enter a
 shuffle, linear scale-out; per-row cost is proportional to the clip.
 """
 
@@ -26,10 +26,8 @@ from __future__ import annotations
 import io
 import struct
 import wave
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from vectra_py_spark.operators.flac import decode_flac, encode_flac
@@ -139,33 +137,32 @@ def transform_audio(
         raise ValueError("transform_audio: no transform requested")
     if target_sr is not None and not 1 <= target_sr < (1 << 20):
         raise ValueError(f"unsupported target sample rate {target_sr}")
-    if on_error not in ("fail", "quarantine"):
-        raise ValueError(f"on_error must be fail|quarantine, got {on_error!r}")
-    quarantine = on_error == "quarantine"
+    from vectra_py_spark.session import map_rows, quarantine_rows
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            datas: list = []
-            metas: list = []
-            for b, m in zip(pdf[data_col], pdf["meta"]):
-                payload = bytes(b) if b is not None else b""
-                try:
-                    samples, sr, kind = decode_audio_payload(payload)
-                    s2, sr2 = _apply(samples, sr, mono, target_sr, trim_db)
-                    datas.append(encode_audio_payload(s2, sr2, kind))
-                    metas.append(
-                        {**(m or {}), "out_sr": str(sr2),
-                         "out_ch": str(s2.shape[1]),
-                         "out_samples": str(s2.shape[0])}
-                    )
-                except ValueError as exc:
-                    if not quarantine:
-                        raise
-                    datas.append(None)
-                    metas.append({**(m or {}), "audio_error": str(exc)})
-            out[data_col] = datas
-            out["meta"] = metas
-            yield out
+    cols = df.columns
+    di, mi = cols.index(data_col), cols.index("meta")
 
-    return df.mapInPandas(run, schema=df.schema)
+    def replaced(values, data, meta):
+        out = list(values)
+        out[di], out[mi] = data, meta
+        return tuple(out)
+
+    def row(*values):
+        b, m = values[di], values[mi]
+        payload = bytes(b) if b is not None else b""
+        samples, sr, kind = decode_audio_payload(payload)
+        s2, sr2 = _apply(samples, sr, mono, target_sr, trim_db)
+        return [replaced(
+            values, encode_audio_payload(s2, sr2, kind),
+            {**(m or {}), "out_sr": str(sr2), "out_ch": str(s2.shape[1]),
+             "out_samples": str(s2.shape[0])},
+        )]
+
+    def error_row(values, exc):
+        return replaced(
+            values, None, {**(values[mi] or {}), "audio_error": str(exc)}
+        )
+
+    return map_rows(
+        df, cols, row, df.schema, on_error=quarantine_rows(on_error, error_row)
+    )

@@ -21,7 +21,7 @@ Construction, from the paper:
 Everything is pure numpy over this repo's own decoders (WAV via the
 stdlib, FLAC via `operators/flac.py`), deterministic across machines.
 
-Spark surface: `audio_fingerprint_df` (narrow ``mapInPandas``,
+Spark surface: `audio_fingerprint_df` (narrow ``map_rows``,
 payloads never shuffle, per-row ValueError quarantine) and
 `audio_match_pairs` (equi-join on the 64-bit hash → one aggregate on
 (pair, offset) → max per pair): the match never compares waveforms —
@@ -110,34 +110,18 @@ def audio_fingerprint_df(df, id_col: str = "media_id",
     """(id, WAV/FLAC payload) rows → (id, hash, t) fingerprint rows,
     one narrow Arrow pass with per-row quarantine (corrupt payloads
     emit a single (id, NULL, NULL, error) row)."""
-    import pandas as pd
+    from vectra_py_spark.operators.audio import decode_audio_payload
+    from vectra_py_spark.session import map_rows
 
-    def run(batches):
-        from vectra_py_spark.operators.audio import decode_audio_payload
+    def rows(mid, payload):
+        samples, sr, _kind = decode_audio_payload(bytes(payload))
+        mono = samples.astype(np.float64).mean(axis=1) / 32768.0
+        return [(mid, h, t, None) for h, t in fingerprints(mono, sr)]
 
-        for pdf in batches:
-            rows = {k: [] for k in (id_col, "hash", "t", "error")}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    samples, sr, _kind = decode_audio_payload(
-                        bytes(payload)
-                    )
-                    mono = samples.astype(np.float64).mean(axis=1) / 32768.0
-                    for h, t in fingerprints(mono, sr):
-                        rows[id_col].append(mid)
-                        rows["hash"].append(h)
-                        rows["t"].append(t)
-                        rows["error"].append(None)
-                except ValueError as exc:
-                    rows[id_col].append(mid)
-                    rows["hash"].append(None)
-                    rows["t"].append(None)
-                    rows["error"].append(str(exc) or "decode error")
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run,
-        schema=f"{id_col} STRING, hash BIGINT, t INT, error STRING",
+    return map_rows(
+        df, [id_col, payload_col], rows,
+        f"{id_col} STRING, hash BIGINT, t INT, error STRING",
+        on_error=lambda v, exc: (v[0], None, None, str(exc) or "decode error"),
     )
 
 
@@ -236,7 +220,7 @@ def audio_probe(
     it just scales the observed counts down by the sampling factor.
     Pass ``None`` to disable (full-recall probe, full-scan cost).
 
-    Threshold + output semantics (ADVICE r10 / VERDICT r10 item 5):
+    Threshold + output semantics:
     ``min_matches`` is in FULL (unsampled) units — directly comparable
     with :func:`audio_match_pairs` tuning — and is scaled internally
     to the sampled counts (``max(1, min_matches // stride)``), so a

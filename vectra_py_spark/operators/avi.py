@@ -1,5 +1,5 @@
-"""MJPEG-in-AVI container codec — zero new codec work (VERDICT r6
-item 4): the RIFF/AVI 'movi' list is parsed from the public spec
+"""MJPEG-in-AVI container codec — zero new codec work: the RIFF/AVI
+'movi' list is parsed from the public spec
 (Microsoft "AVI RIFF File Reference"; RIFF chunking per the original
 IBM/Microsoft RIFF spec), and every ``00dc`` frame is a standalone
 baseline/progressive JPEG handed to :func:`jpeg.decode_jpeg`. This is

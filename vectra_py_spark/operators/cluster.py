@@ -349,7 +349,7 @@ def lloyd_kmeans(
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     dec = "decimal(28,10)"
-    # r12: a one-file table arrives as ONE partition, serializing every
+    # a one-file table arrives as ONE partition, serializing every
     # per-iteration projection (8 interpreted HOF distance folds per
     # row) and the posexplode update onto a single task; spread() is a
     # no-op at real scale (guide §2 — scale-adaptive partitioning)

@@ -182,7 +182,7 @@ def gopher_quality(
     rules evaluated in the same whole-stage-codegen stage as the scan.
     No shuffle, no UDF, survives any scale the scan survives.
     """
-    # stage the split arrays once per row (r12: the rules reference
+    # stage the split arrays once per row (the rules reference
     # words 5x and lines 3x, and HOF-bearing projections evaluate
     # interpreted without subexpression elimination — inlining re-split
     # the text per reference; see text_analysis.bigrams_col's note).
@@ -579,52 +579,27 @@ def nfc_normalize(
     import re
     import unicodedata
 
-    import pandas as pd
+    from vectra_py_spark.session import map_rows, spread
 
-    id_type = df.schema[id_col].dataType.simpleString()
     ctrl = re.compile(_CTRL_PATTERN)
     spaces = re.compile(" +")
 
-    def gen(batches):
-        for pdf in batches:
-            ids, hs, ns, ch = [], [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                ids.append(i)
-                if t is None:
-                    # NULL text stays a (NULL-featured) row — dropping
-                    # it would silently lose the doc from every
-                    # downstream dedup, and diverge from the SQL twin
-                    hs.append(None)
-                    ns.append(None)
-                    ch.append(None)
-                    continue
-                norm = spaces.sub(
-                    " ", ctrl.sub("", unicodedata.normalize("NFC", str(t)))
-                )
-                hs.append(hashlib.md5(norm.encode()).hexdigest())
-                ns.append(len(norm))
-                ch.append(norm != t)
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "norm_hash": hs,
-                    "n_chars_norm": ns,
-                    "changed": ch,
-                }
-            )
-
-    from vectra_py_spark.session import spread
-
-    return (
-        spread(df.select(id_col, text_col))
-        .mapInPandas(
-            gen,
-            schema=(
-                f"id {id_type}, norm_hash string, n_chars_norm int,"
-                " changed boolean"
-            ),
+    def row(i, t):
+        if t is None:
+            # NULL text stays a (NULL-featured) row — dropping it would
+            # silently lose the doc from every downstream dedup, and
+            # diverge from the SQL twin
+            return [(i, None, None, None)]
+        norm = spaces.sub(
+            " ", ctrl.sub("", unicodedata.normalize("NFC", str(t)))
         )
-        .withColumnRenamed("id", id_col)
+        return [(i, hashlib.md5(norm.encode()).hexdigest(), len(norm),
+                 norm != t)]
+
+    return map_rows(
+        spread(df.select(id_col, text_col)), [id_col, text_col], row,
+        f"{df.select(id_col).schema.toDDL()}, norm_hash STRING, "
+        "n_chars_norm INT, changed BOOLEAN",
     )
 
 

@@ -921,7 +921,7 @@ def incremental_dedup_against_store(
     width = SIMHASH_BITS // n_blocks
     mask = (1 << width) - 1
     batch_fp = simhash(batch, id_col=id_col, text_col=text_col)
-    # r12: batch_fp feeds both the banding union and the final anti-join
+    # batch_fp feeds both the banding union and the final anti-join
     # with different exchange shapes, so the Python simhash pass ran
     # twice; one checkpoint of the (id, fp) rows pins it to one
     # execution (batch-sized — the incremental contract).
@@ -1443,7 +1443,7 @@ def winnow_span_cut(
             (F.col("pos") + (k - 1) + pad).alias("hi"),
         )
         .distinct()
-        # r12: spans feeds two separate broadcasts (hit ids + the span
+        # spans feeds two separate broadcasts (hit ids + the span
         # anti-join) — without materialization each broadcast re-ran
         # the full corpus winnowing pass underneath. The checkpointed
         # frame is contaminated-span-sized (tiny by the decontamination

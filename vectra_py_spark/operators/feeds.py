@@ -31,6 +31,14 @@ def _text(node) -> str | None:
     return t or None
 
 
+def _xml_arg(xml) -> str | bytes:
+    """A payload cell → what the XML parsers take: binary stays bytes
+    (its declared encoding decides), anything else is stringified."""
+    if isinstance(xml, (bytes, bytearray, memoryview)):
+        return bytes(xml)
+    return str(xml)
+
+
 def parse_feed(xml_text: str | bytes) -> dict:
     """Feed XML → {kind: 'rss'|'atom', title, entries: [{title, link,
     published, id}]}."""
@@ -106,47 +114,21 @@ def parse_feed(xml_text: str | bytes) -> dict:
 def feed_entries_df(df, xml_col: str = "payload", src_col: str = "url"):
     """Fetched feed payloads → one row per entry: (feed_url, kind,
     feed_title, title, link, published, entry_id); malformed feeds
-    quarantine as kind='error' rows carrying the message. Narrow
-    mapInPandas; the feed set is host-sized."""
-    import pandas as pd
+    quarantine as kind='error' rows carrying the message. One narrow
+    ``map_rows`` pass; the feed set is host-sized."""
+    from vectra_py_spark.session import map_rows
 
-    cols = ("feed_url", "kind", "feed_title", "title", "link",
-            "published", "entry_id")
+    def rows(src, xml):
+        feed = parse_feed(_xml_arg(xml))
+        return [(str(src), feed["kind"], feed["title"], e["title"],
+                 e["link"], e["published"], e["id"])
+                for e in feed["entries"]]
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for src, xml in zip(pdf[src_col], pdf[xml_col]):
-                try:
-                    feed = parse_feed(
-                        bytes(xml)
-                        if isinstance(xml, (bytes, bytearray, memoryview))
-                        else str(xml)
-                    )
-                except ValueError as exc:
-                    rows["feed_url"].append(str(src))
-                    rows["kind"].append("error")
-                    rows["feed_title"].append(str(exc))
-                    for k in ("title", "link", "published", "entry_id"):
-                        rows[k].append(None)
-                    continue
-                for e in feed["entries"]:
-                    rows["feed_url"].append(str(src))
-                    rows["kind"].append(feed["kind"])
-                    rows["feed_title"].append(feed["title"])
-                    rows["title"].append(e["title"])
-                    rows["link"].append(e["link"])
-                    rows["published"].append(e["published"])
-                    rows["entry_id"].append(e["id"])
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype=object) for k, v in rows.items()}
-            )
-
-    return df.select(src_col, xml_col).mapInPandas(
-        run,
-        schema=(
-            "feed_url STRING, kind STRING, feed_title STRING, "
-            "title STRING, link STRING, published STRING, "
-            "entry_id STRING"
+    return map_rows(
+        df, [src_col, xml_col], rows,
+        "feed_url STRING, kind STRING, feed_title STRING, "
+        "title STRING, link STRING, published STRING, entry_id STRING",
+        on_error=lambda v, exc: (
+            str(v[0]), "error", str(exc), None, None, None, None
         ),
     )

@@ -1,6 +1,6 @@
 """FLAC lossless audio codec — pure stdlib/numpy, from the public
 format spec (xiph.org "FLAC format" / RFC 9639): closes the
-compressed-AUDIO gap the MP3 gate leaves (VERDICT r6 item 8), the way
+compressed-AUDIO gap the MP3 gate leaves, the way
 JPEG/GIF closed the image side in round 6. The reference delegates
 compressed audio to codec libraries; here the container and codec are
 re-implemented: Rice-coded residuals, fixed AND LPC predictors,

@@ -22,7 +22,7 @@ block MEAN-POOLING (``np.array_split`` bands), not an interpolating
 resampler: deterministic, exactly scale-invariant for integer scale
 factors, and close enough for hash purposes otherwise.
 
-Spark surface: `media_phash_df` (narrow ``mapInPandas`` — payloads
+Spark surface: `media_phash_df` (narrow ``map_rows`` — payloads
 never shuffle, per-row ValueError quarantine like every extractor
 here) and `phash_neardup_pairs` (block-banded Hamming equi-join —
 the pigeonhole construction `dedup.simhash_neardup` uses, generic
@@ -194,39 +194,19 @@ def media_phash_df(df, id_col: str = "media_id", payload_col: str = "data"):
     """(id, payload) rows → (id, phash, dhash, height, width, error):
     one narrow Arrow pass, per-row ValueError quarantine (corrupt or
     non-image payloads land in ``error``, never fail the stage)."""
-    import pandas as pd
+    from vectra_py_spark.session import map_rows
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in (
-                id_col, "phash", "dhash", "height", "width", "error",
-            )}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows[id_col].append(mid)
-                try:
-                    img = _decode_pixels(payload)
-                    rows["phash"].append(phash64(img))
-                    rows["dhash"].append(dhash64(img))
-                    rows["height"].append(int(img.shape[0]))
-                    rows["width"].append(int(img.shape[1]))
-                    rows["error"].append(None)
-                except ValueError as exc:
-                    rows["phash"].append(None)
-                    rows["dhash"].append(None)
-                    rows["height"].append(None)
-                    rows["width"].append(None)
-                    rows["error"].append(str(exc) or "decode error")
-            # nullable Int64: a None next to a 64-bit hash would make
-            # pandas promote the column to float64 and round the hash
-            for k in ("phash", "dhash"):
-                rows[k] = pd.array(rows[k], dtype="Int64")
-            yield pd.DataFrame(rows)
+    def row(mid, payload):
+        img = _decode_pixels(payload)
+        return [(mid, phash64(img), dhash64(img),
+                 int(img.shape[0]), int(img.shape[1]), None)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run,
-        schema=(
-            f"{id_col} STRING, phash BIGINT, dhash BIGINT, "
-            "height INT, width INT, error STRING"
+    return map_rows(
+        df, [id_col, payload_col], row,
+        f"{id_col} STRING, phash BIGINT, dhash BIGINT, "
+        "height INT, width INT, error STRING",
+        on_error=lambda v, exc: (
+            v[0], None, None, None, None, str(exc) or "decode error"
         ),
     )
 

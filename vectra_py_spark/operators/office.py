@@ -20,7 +20,7 @@ bombs quarantine instead of OOMing the stage (same contract as the
 PDF/WARC parsers).
 
 Contract: malformed payloads raise :class:`ValueError` only. Scale
-shape: per-payload parse inside the worker (``mapInPandas``), linear
+shape: per-payload parse inside the worker (``map_rows``), linear
 in member bytes; payloads never shuffle.
 """
 
@@ -720,40 +720,19 @@ def extract_office_text_df(
 ):
     """Binary office payloads → (media_id, doc_type, text [, error]) —
     the same fail/quarantine contract as ``extract_pdf_text_df``.
-    Narrow ``mapInPandas``, no shuffle."""
-    from collections.abc import Iterator
+    One narrow ``map_rows`` pass, no shuffle."""
+    from vectra_py_spark.session import map_rows, quarantine_rows
 
-    import pandas as pd
+    def row(mid, b):
+        kind, text = office_extract_text(bytes(b) if b is not None else b"")
+        return [(str(mid), kind, text, None)]
 
-    if on_error not in ("fail", "quarantine"):
-        raise ValueError(
-            f"on_error must be fail|quarantine, got {on_error!r}"
-        )
-    quarantine = on_error == "quarantine"
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for batch in batches:
-            rows = {"media_id": [], "doc_type": [], "text": [],
-                    "error": []}
-            for mid, b in zip(batch[id_col], batch[data_col]):
-                payload = bytes(b) if b is not None else b""
-                try:
-                    kind, text = office_extract_text(payload)
-                    err = None
-                except ValueError as exc:
-                    if not quarantine:
-                        raise
-                    kind, text, err = None, None, str(exc)
-                rows["media_id"].append(str(mid))
-                rows["doc_type"].append(kind)
-                rows["text"].append(text)
-                rows["error"].append(err)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(
-        run,
-        schema="media_id STRING, doc_type STRING, text STRING, "
-               "error STRING",
+    return map_rows(
+        df, [id_col, data_col], row,
+        "media_id STRING, doc_type STRING, text STRING, error STRING",
+        on_error=quarantine_rows(
+            on_error, lambda v, exc: (str(v[0]), None, None, str(exc))
+        ),
     )
 
 
@@ -766,28 +745,10 @@ def read_office_documents(
     doc_type) rows ready for
     ``SparkDocumentIndex.upsert_documents_df`` — symmetric with
     ``read_pdf_documents``; unsupported/corrupt files skip quietly.
-    One narrow ``mapInPandas`` over the ``binaryFile`` scan."""
-    from collections.abc import Iterator
+    One narrow ``map_rows`` pass over the ``binaryFile`` scan."""
+    from vectra_py_spark.sources.documents import _documents_df
 
-    import pandas as pd
-
-    raw = spark.read.format("binaryFile").load(path)
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for batch in batches:
-            rows = {"uri": [], "text": [], "doc_type": []}
-            for fpath, content in zip(batch["path"], batch["content"]):
-                try:
-                    kind, text = office_extract_text(bytes(content))
-                except ValueError:
-                    continue
-                if len(text.strip()) < min_chars:
-                    continue
-                rows["uri"].append(str(fpath))
-                rows["text"].append(text)
-                rows["doc_type"].append(kind)
-            yield pd.DataFrame(rows)
-
-    return raw.select("path", "content").mapInPandas(
-        run, schema="uri STRING, text STRING, doc_type STRING"
+    return _documents_df(
+        spark.read.format("binaryFile").load(path), office_extract_text,
+        min_chars,
     )

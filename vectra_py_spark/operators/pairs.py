@@ -219,7 +219,7 @@ def fetch_images_df(
     task, SLEEPING to honor each slot's offset against a per-task
     clock (``pace=True``, the default) — the inter-access delays
     `schedule_fetches` encoded are actually enforced, not just sorted
-    by (review r12: sorting alone fired requests back-to-back).
+    by (sorting alone fired requests back-to-back).
     ``pace=False`` turns the schedule back into a pure ordering for
     hermetic replays. Without a worker column the input partitioning
     is used as-is (caller owns the request rate). ``transport`` is any
@@ -236,7 +236,10 @@ def fetch_images_df(
 
     Scale shape: payloads are BORN here (nothing large shuffles in);
     the single repartition moves URL strings only."""
-    import pandas as pd
+    import time
+
+    from vectra_py_spark.session import map_rows
+    from vectra_py_spark.sources.fetchers import _fetch_error_row
 
     fetch = transport if transport is not None \
         else _http_image_transport(timeout)
@@ -250,51 +253,39 @@ def fetch_images_df(
         if "fetch_at_s" in src.columns:
             src = src.sortWithinPartitions("fetch_at_s")
 
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in src.schema.fields
-    )
-    out_schema = (
-        f"{fields}, payload BINARY, content_type STRING, "
-        f"fetch_error STRING"
-    )
+    cols = src.columns
+    ui = cols.index(url_col)
+    si = cols.index("fetch_at_s") if pace and "fetch_at_s" in cols else None
 
-    do_pace = pace and "fetch_at_s" in src.columns
-
-    def run(batches):
-        import time
-
-        # pacing clock spans Arrow batches within the task: slot
-        # offsets are honored against the FIRST slot seen, so
-        # consecutive same-host requests keep their scheduled gap
+    def make_row():
+        # pacing clock per task: slot offsets are honored against the
+        # FIRST slot the task sees, so consecutive same-host requests
+        # keep their scheduled gap
         t0 = s0 = None
-        for pdf in batches:
-            slots = pdf["fetch_at_s"] if do_pace else None
-            payloads, ctypes, errors = [], [], []
-            for k, url in enumerate(pdf[url_col]):
-                if do_pace:
-                    slot = float(slots.iloc[k])
-                    if t0 is None:
-                        t0, s0 = time.monotonic(), slot
-                    else:
-                        wait = (slot - s0) - (time.monotonic() - t0)
-                        if wait > 0:
-                            time.sleep(wait)
-                try:
-                    data, ctype = fetch(str(url))
-                    payloads.append(data)
-                    ctypes.append(ctype)
-                    errors.append(None)
-                except Exception as exc:  # quarantine, don't crash
-                    payloads.append(None)
-                    ctypes.append(None)
-                    errors.append(f"{type(exc).__name__}: {exc}")
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["content_type"] = ctypes
-            out["fetch_error"] = errors
-            yield out
 
-    return src.mapInPandas(run, schema=out_schema)
+        def row(*values):
+            nonlocal t0, s0
+            if si is not None:
+                slot = values[si]
+                slot = float("nan") if slot is None else float(slot)
+                if t0 is None:
+                    t0, s0 = time.monotonic(), slot
+                else:
+                    wait = (slot - s0) - (time.monotonic() - t0)
+                    if wait > 0:
+                        time.sleep(wait)
+            data, ctype = fetch(str(values[ui]))
+            return [(*values, data, ctype, None)]
+
+        return row
+
+    return map_rows(
+        src, cols, make_row,
+        f"{src.schema.toDDL()}, payload BINARY, content_type STRING, "
+        "fetch_error STRING",
+        on_error=_fetch_error_row,  # quarantine, don't crash
+        catch=(Exception,), per_task=True,
+    )
 
 
 def mine_image_corpus(

@@ -55,7 +55,7 @@ bombs quarantine instead of failing the stage.
 
 Contract: malformed payloads raise :class:`ValueError`
 (fuzz-hardened). Scale shape: per-payload parse inside the worker
-(mapInPandas callers), linear in payload bytes; PDFs never enter a
+(``map_rows`` callers), linear in payload bytes; PDFs never enter a
 shuffle.
 """
 
@@ -888,7 +888,7 @@ class _Pdf:
     authoritative map, each claimed offset validated against the 'N G
     obj' header actually present there; only when the chain is absent
     or inconsistent does the reader fall back to a full-payload scan
-    (ADVICE r7: a bare last-match-wins scan let 'N G obj' byte
+    (a bare last-match-wins scan let 'N G obj' byte
     sequences inside stream bodies shadow real objects)."""
 
     def __init__(
@@ -2053,40 +2053,21 @@ def extract_pdf_text_df(
     'quarantine' keeps a single error row per bad payload (page -1,
     NULL text) and the stage flows on. ``password`` applies to every
     payload (the per-corpus password of a protected drop; the empty
-    user password remains the fallback per payload). Narrow
-    ``mapInPandas``, no shuffle, payloads stay in the worker."""
-    from collections.abc import Iterator
+    user password remains the fallback per payload). One narrow
+    ``map_rows`` pass, no shuffle, payloads stay in the worker."""
+    from vectra_py_spark.session import map_rows, quarantine_rows
 
-    import pandas as pd
+    def rows(mid, b):
+        payload = bytes(b) if b is not None else b""
+        return [(str(mid), p, text, None) for p, text in
+                enumerate(pdf_extract_text(payload, password=password))]
 
-    if on_error not in ("fail", "quarantine"):
-        raise ValueError(f"on_error must be fail|quarantine, got {on_error!r}")
-    quarantine = on_error == "quarantine"
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf_batch in batches:
-            rows = {"media_id": [], "page": [], "text": [], "error": []}
-            for mid, b in zip(pdf_batch[id_col], pdf_batch[data_col]):
-                payload = bytes(b) if b is not None else b""
-                try:
-                    for p, text in enumerate(
-                        pdf_extract_text(payload, password=password)
-                    ):
-                        rows["media_id"].append(str(mid))
-                        rows["page"].append(p)
-                        rows["text"].append(text)
-                        rows["error"].append(None)
-                except ValueError as exc:
-                    if not quarantine:
-                        raise
-                    rows["media_id"].append(str(mid))
-                    rows["page"].append(-1)
-                    rows["text"].append(None)
-                    rows["error"].append(str(exc))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(
-        run, schema="media_id STRING, page INT, text STRING, error STRING"
+    return map_rows(
+        df, [id_col, data_col], rows,
+        "media_id STRING, page INT, text STRING, error STRING",
+        on_error=quarantine_rows(
+            on_error, lambda v, exc: (str(v[0]), -1, None, str(exc))
+        ),
     )
 
 
@@ -2114,38 +2095,24 @@ def pdf_triage_lanes(
     The probe is ~2000× cheaper than an R6 decrypt (BENCH.md), so the
     split costs nothing measurable. Join the winners back to the
     payloads and feed each lane to :func:`extract_pdf_text_df` at its
-    own budget. Narrow ``mapInPandas``, payloads never shuffle."""
-    from collections.abc import Iterator
-
-    import pandas as pd
+    own budget. One narrow ``map_rows`` pass, payloads never shuffle."""
+    from vectra_py_spark.session import map_rows
 
     flavors = set(budget_flavors)
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf_batch in batches:
-            rows = {"media_id": [], "lane": [], "encryption": [],
-                    "n_pages": [], "error": []}
-            for mid, b in zip(pdf_batch[id_col], pdf_batch[data_col]):
-                payload = bytes(b) if b is not None else b""
-                try:
-                    info = pdf_probe(payload)
-                    enc = info["encryption"]
-                    lane = "budgeted" if enc in flavors else "fast"
-                    err = None
-                except ValueError as exc:
-                    enc, lane, err = None, "quarantine", str(exc)
-                    info = {"n_pages": None}
-                rows["media_id"].append(str(mid))
-                rows["lane"].append(lane)
-                rows["encryption"].append(enc)
-                rows["n_pages"].append(info["n_pages"])
-                rows["error"].append(err)
-            yield pd.DataFrame(rows)
+    def row(mid, b):
+        info = pdf_probe(bytes(b) if b is not None else b"")
+        enc = info["encryption"]
+        lane = "budgeted" if enc in flavors else "fast"
+        return [(str(mid), lane, enc, info["n_pages"], None)]
 
-    return df.mapInPandas(
-        run,
-        schema="media_id STRING, lane STRING, encryption STRING, "
-               "n_pages INT, error STRING",
+    return map_rows(
+        df, [id_col, data_col], row,
+        "media_id STRING, lane STRING, encryption STRING, "
+        "n_pages INT, error STRING",
+        on_error=lambda v, exc: (
+            str(v[0]), "quarantine", None, None, str(exc)
+        ),
     )
 
 
@@ -2160,32 +2127,12 @@ def read_pdf_documents(
     (`sources/warc.py::warc_documents`). Pages join with blank lines;
     unsupported/corrupt files skip quietly (best-effort corpus builder
     — the strict per-page path is :func:`extract_pdf_text_df` with
-    ``on_error='quarantine'``). One narrow ``mapInPandas`` over the
+    ``on_error='quarantine'``). One narrow ``map_rows`` pass over the
     ``binaryFile`` scan: file count is the parallelism unit, payloads
     never shuffle."""
-    from collections.abc import Iterator
+    from vectra_py_spark.sources.documents import _documents_df
 
-    import pandas as pd
-
-    raw = spark.read.format("binaryFile").load(path)
-
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf_batch in batches:
-            rows = {"uri": [], "text": [], "doc_type": []}
-            for fpath, content in zip(
-                pdf_batch["path"], pdf_batch["content"]
-            ):
-                try:
-                    text = "\n\n".join(pdf_extract_text(bytes(content)))
-                except ValueError:
-                    continue
-                if len(text.strip()) < min_chars:
-                    continue
-                rows["uri"].append(str(fpath))
-                rows["text"].append(text)
-                rows["doc_type"].append("pdf")
-            yield pd.DataFrame(rows)
-
-    return raw.select("path", "content").mapInPandas(
-        run, schema="uri STRING, text STRING, doc_type STRING"
+    return _documents_df(
+        spark.read.format("binaryFile").load(path),
+        lambda b: ("pdf", "\n\n".join(pdf_extract_text(b))), min_chars,
     )

@@ -20,9 +20,7 @@ from __future__ import annotations
 import io
 import struct
 import wave
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 __all__ = ["probe_payload", "probe_media", "triage_media", "PROBE_SCHEMA"]
@@ -269,38 +267,26 @@ def probe_media(
     frames, sample rate, duration), header-only. Per-row quarantine is
     the DEFAULT here — triage exists precisely because crawl payloads
     are dirty; failures land in the ``error`` column, never fail the
-    stage. Narrow ``mapInPandas``: no shuffle, payloads stay in the
-    worker, per-row cost is a header walk."""
+    stage. One narrow ``map_rows`` pass: no shuffle, payloads stay in
+    the worker, per-row cost is a header walk."""
+    from vectra_py_spark.session import map_rows
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "media_id", "kind", "width", "height", "n_frames",
-                "sample_rate", "duration_s", "n_bytes", "error",
-            )}
-            for mid, b in zip(pdf[id_col], pdf[data_col]):
-                payload = bytes(b) if b is not None else b""
-                try:
-                    info = probe_payload(payload)
-                    err = None
-                except ValueError as exc:
-                    info = {}
-                    err = str(exc)
-                rows["media_id"].append(str(mid))
-                rows["kind"].append(info.get("kind"))
-                rows["width"].append(info.get("width"))
-                rows["height"].append(info.get("height"))
-                rows["n_frames"].append(info.get("n_frames"))
-                rows["sample_rate"].append(info.get("sample_rate"))
-                rows["duration_s"].append(info.get("duration_s"))
-                rows["n_bytes"].append(len(payload))
-                rows["error"].append(err)
-            out = pd.DataFrame(rows)
-            for col in ("width", "height", "n_frames", "sample_rate"):
-                out[col] = out[col].astype("Int32")
-            yield out
+    def rec(mid, b, info, err):
+        return (
+            str(mid), *(info.get(k) for k in (
+                "kind", "width", "height", "n_frames", "sample_rate",
+                "duration_s",
+            )), len(b) if b is not None else 0, err,
+        )
 
-    return df.mapInPandas(run, schema=PROBE_SCHEMA)
+    def row(mid, b):
+        info = probe_payload(bytes(b) if b is not None else b"")
+        return [rec(mid, b, info, None)]
+
+    return map_rows(
+        df, [id_col, data_col], row, PROBE_SCHEMA,
+        on_error=lambda v, exc: rec(*v, {}, str(exc)),
+    )
 
 
 def triage_media(
@@ -325,14 +311,11 @@ def triage_media(
     tens of header bytes, a decode touches all of them, and crawl
     corpora are dominated by payloads you do NOT want (corrupt files,
     oversized videos, the wrong modality). Fusing probe + filter in
-    one narrow ``mapInPandas`` means payloads never enter a shuffle,
+    one narrow ``map_rows`` pass means payloads never enter a shuffle,
     never hit a join, and rejected files never reach the decoder —
     the bytes-decoded saving is quantified in BENCH.md.
     """
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    out_schema = f"{fields}, kind STRING, n_bytes BIGINT"
+    from vectra_py_spark.session import map_rows
 
     def keep(info: dict, n_bytes: int) -> bool:
         if kinds is not None and info.get("kind") not in kinds:
@@ -351,26 +334,18 @@ def triage_media(
             return False
         return True
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mask = []
-            kind_col = []
-            nbytes_col = []
-            for b in pdf[data_col]:
-                payload = bytes(b) if b is not None else b""
-                try:
-                    info = probe_payload(payload)
-                except ValueError:
-                    mask.append(False)
-                    continue
-                ok = keep(info, len(payload))
-                mask.append(ok)
-                if ok:
-                    kind_col.append(info["kind"])
-                    nbytes_col.append(len(payload))
-            out = pdf[mask].reset_index(drop=True)
-            out["kind"] = pd.Series(kind_col, dtype="string")
-            out["n_bytes"] = pd.Series(nbytes_col, dtype="int64")
-            yield out
+    di = df.columns.index(data_col)
 
-    return df.mapInPandas(run, schema=out_schema)
+    def row(*values):
+        b = values[di]
+        payload = bytes(b) if b is not None else b""
+        info = probe_payload(payload)
+        if not keep(info, len(payload)):
+            return []
+        return [(*values, info["kind"], len(payload))]
+
+    return map_rows(
+        df, df.columns, row,
+        f"{df.schema.toDDL()}, kind STRING, n_bytes BIGINT",
+        on_error=lambda v, exc: None,
+    )

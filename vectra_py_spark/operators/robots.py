@@ -198,12 +198,14 @@ def filter_robots_df(
     the protocol. The robots side is one row per host — broadcast it.
 
     Scale shape: broadcast hash join on host + one narrow pandas pass;
-    rules compile once per host per batch (frontiers arrive
+    rules compile once per host per task (frontiers arrive
     host-clustered after the politeness repartition)."""
-    import pandas as pd
+    from urllib.parse import urlparse
+
     from pyspark.sql import functions as F
 
     from vectra_py_spark.functions.urls import host_of
+    from vectra_py_spark.session import map_rows
 
     joined = frontier.withColumn(
         "__host", host_of(F.col(url_col))
@@ -217,46 +219,31 @@ def filter_robots_df(
         "__host",
         "left",
     )
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in frontier.schema.fields
-    )
-    schema = fields + ", crawl_delay DOUBLE"
-    out_cols = [f.name for f in frontier.schema.fields]
+    cols = frontier.columns
+    ui = cols.index(url_col)
 
-    def run(batches):
+    def make_row():
         cache: dict[str, RobotsRules] = {}
-        for pdf in batches:
-            keep_mask = []
-            delays = []
-            for _, r in pdf.iterrows():
-                body = r["__robots"]
-                if body is None or (
-                    isinstance(body, float) and pd.isna(body)
-                ):
-                    keep_mask.append(True)
-                    delays.append(None)
-                    continue
-                host = r["__host"]
-                rules = cache.get(host)
-                if rules is None:
-                    rules = parse_robots(str(body), agent)
-                    cache[host] = rules
-                from urllib.parse import urlparse
 
-                parsed = urlparse(str(r[url_col]))
-                path = parsed.path or "/"
-                if parsed.query:
-                    path += "?" + parsed.query
-                keep_mask.append(rules.allowed(path))
-                delays.append(rules.delay)
-            out = pdf.loc[keep_mask, out_cols].copy()
-            out["crawl_delay"] = [
-                d for k, d in zip(keep_mask, delays) if k
-            ]
-            yield out
+        def row(*values):
+            *kept, host, body = values
+            if body is None:
+                return [(*kept, None)]
+            rules = cache.get(host)
+            if rules is None:
+                rules = cache[host] = parse_robots(str(body), agent)
+            parsed = urlparse(str(kept[ui]))
+            path = parsed.path or "/"
+            if parsed.query:
+                path += "?" + parsed.query
+            return [(*kept, rules.delay)] if rules.allowed(path) else []
 
-    return joined.mapInPandas(run, schema=schema)
+        return row
+
+    return map_rows(
+        joined, [*cols, "__host", "__robots"], make_row,
+        f"{frontier.schema.toDDL()}, crawl_delay DOUBLE", per_task=True,
+    )
 
 
 def sitemap_entries_df(df, xml_col: str = "payload", src_col: str = "url"):
@@ -264,35 +251,19 @@ def sitemap_entries_df(df, xml_col: str = "payload", src_col: str = "url"):
     one row per entry: (sitemap_url, kind, loc, lastmod), where
     kind='sitemap' rows are child indexes the caller feeds back to the
     fetcher and kind='url' rows are frontier seeds. Malformed XML
-    quarantines as a kind='error' row carrying the message. Narrow
-    mapInPandas; the sitemap set is host-sized."""
-    import pandas as pd
+    quarantines as a kind='error' row carrying the message. One narrow
+    ``map_rows`` pass; the sitemap set is host-sized."""
+    from vectra_py_spark.operators.feeds import _xml_arg
+    from vectra_py_spark.session import map_rows
 
-    def run(batches):
-        for pdf in batches:
-            rows = {"sitemap_url": [], "kind": [], "loc": [], "lastmod": []}
-            for src, xml in zip(pdf[src_col], pdf[xml_col]):
-                try:
-                    entries = parse_sitemap(
-                        bytes(xml) if isinstance(xml, (bytes, bytearray, memoryview))
-                        else str(xml)
-                    )
-                except ValueError as exc:
-                    rows["sitemap_url"].append(str(src))
-                    rows["kind"].append("error")
-                    rows["loc"].append(None)
-                    rows["lastmod"].append(str(exc))
-                    continue
-                for e in entries:
-                    rows["sitemap_url"].append(str(src))
-                    rows["kind"].append(e["kind"])
-                    rows["loc"].append(e["loc"])
-                    rows["lastmod"].append(e["lastmod"])
-            yield pd.DataFrame(rows)
+    def rows(src, xml):
+        return [(str(src), e["kind"], e["loc"], e["lastmod"])
+                for e in parse_sitemap(_xml_arg(xml))]
 
-    return df.select(src_col, xml_col).mapInPandas(
-        run,
-        schema="sitemap_url STRING, kind STRING, loc STRING, lastmod STRING",
+    return map_rows(
+        df, [src_col, xml_col], rows,
+        "sitemap_url STRING, kind STRING, loc STRING, lastmod STRING",
+        on_error=lambda v, exc: (str(v[0]), "error", None, str(exc)),
     )
 
 

@@ -1957,7 +1957,7 @@ def margin_bitext_mine_sharded(
                     f"exceeds the driver broadcast budget "
                     f"({BROADCAST_BYTES_CONF}); raise the shard count."
                 )
-        # ONE pass over the side, streamed (VERDICT r12 item 9): the
+        # ONE pass over the side, streamed: the
         # budget check above bounds every shard's BROADCAST, but a
         # full .collect() would additionally hold the whole side as a
         # transient Row list — several times the numpy footprint.

@@ -25,7 +25,7 @@ malformed block beats dropping the file. Per-file failures quarantine
 to an ``error`` row, never kill the job (the decoder contract every
 extractor in this repo follows).
 
-Spark surface: ``subtitle_cues_df`` is one narrow ``mapInPandas``
+Spark surface: ``subtitle_cues_df`` is one narrow ``map_rows``
 pass (subtitle payloads never shuffle); ``align_cues_to_frames`` is a
 media-id equi-join with the span predicate pushed into the join — the
 only shuffle is on the id key both sides already carry.
@@ -34,7 +34,6 @@ only shuffle is on the id key both sides already carry.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -108,41 +107,17 @@ def subtitle_cues_df(
     end_ms, cue_text, error): one narrow Arrow pass, one output row
     per cue; a file that fails entirely yields ONE quarantine row
     with ``error`` set and NULL cue fields. Payloads never shuffle."""
-    import pandas as pd
+    from vectra_py_spark.session import map_rows
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = {k: [] for k in (
-                "media_id", "cue_idx", "start_ms", "end_ms",
-                "cue_text", "error",
-            )}
+    def rows(mid, txt):
+        cues = parse_cues(txt if txt is None else str(txt))
+        return [(str(mid), idx, s, e, t, None) for idx, s, e, t in cues]
 
-            def emit(mid, idx, s, e, t, err):
-                recs["media_id"].append(mid)
-                recs["cue_idx"].append(idx)
-                recs["start_ms"].append(s)
-                recs["end_ms"].append(e)
-                recs["cue_text"].append(t)
-                recs["error"].append(err)
-
-            for mid, txt in zip(pdf[id_col], pdf[text_col]):
-                try:
-                    for idx, s, e, t in parse_cues(
-                        txt if txt is None else str(txt)
-                    ):
-                        emit(str(mid), idx, s, e, t, None)
-                except ValueError as exc:
-                    emit(str(mid), None, None, None, None, str(exc))
-            yield pd.DataFrame(
-                {k: pd.Series(v, dtype=object) for k, v in recs.items()}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        run,
-        schema=(
-            "media_id STRING, cue_idx INT, start_ms BIGINT, "
-            "end_ms BIGINT, cue_text STRING, error STRING"
-        ),
+    return map_rows(
+        df, [id_col, text_col], rows,
+        "media_id STRING, cue_idx INT, start_ms BIGINT, "
+        "end_ms BIGINT, cue_text STRING, error STRING",
+        on_error=lambda v, exc: (str(v[0]), None, None, None, None, str(exc)),
     )
 
 

@@ -1208,8 +1208,8 @@ def bpe_train(
     (word, cnt) table — bounded by ``vocab_cap`` by construction — with
     Sennrich-style incremental pair updates + a lazy max-heap
     (:func:`_bpe_loop_local`), so a production 32k-merge train is one
-    Spark job plus seconds of driver CPU, not 32k tiny jobs (VERDICT r6
-    `_bpe_loop` finding). ``distributed=True`` keeps the all-Spark
+    Spark job plus seconds of driver CPU, not 32k tiny jobs.
+    ``distributed=True`` keeps the all-Spark
     round loop (pair explode ≈ |V|·avg_len rows, alphabet²-sized agg,
     re-segmentation a narrow JVM ``aggregate`` fold, one-row driver
     round-trip per round) as the cross-engine-checked twin; the two
@@ -1546,7 +1546,7 @@ def dup_shingle_ratio(
     from vectra_py_spark.operators.dedup import shingle_df
 
     sh = shingle_df(df, id_col=id_col, text_col=text_col, k=k)
-    # r12: ``sh`` (a Python shingling pass) feeds the doc-count
+    # ``sh`` (a Python shingling pass) feeds the doc-count
     # aggregate and the rejoin with different exchange inputs, so it
     # executed twice; checkpoint the narrow (id, shingle) stream once
     # (same rows the shuffles already carry).
@@ -1712,7 +1712,7 @@ def duplicate_ngram_spans(
             )
         ).alias("pos", "h"),
     )
-    # r12: ``wins`` feeds both the count aggregate and the rejoin with
+    # ``wins`` feeds both the count aggregate and the rejoin with
     # DIFFERENT exchange inputs (partial-agg rows vs raw rows), so
     # ReuseExchange cannot dedupe and the md5-window explode ran twice;
     # ``j`` likewise feeds the per-doc aggregate and the span window.

@@ -2,8 +2,8 @@
 enough font parsing to recover text from PDF Type0/Identity-H fonts
 that carry NO /ToUnicode CMap (reference parity surface: the D5
 document-ingest path, ``local_document_index.py:127-219``, generalized
-to real corpus PDFs; VERDICT r8 item 4 decided implement-over-refuse
-for this shape).
+to real corpus PDFs; implemented rather than refused for this
+shape).
 
 Background: in an Identity-H composite font the 2-byte codes in the
 content stream are CIDs; /CIDToGIDMap turns CIDs into GLYPH INDEXES

@@ -107,34 +107,16 @@ def video_phash_df(
     """(id, payload) rows → (id, frame_idx, phash, error): one narrow
     Arrow pass, per-row ValueError quarantine (a corrupt clip lands as
     ONE error row, never fails the stage), payloads never shuffle."""
-    import pandas as pd
+    from vectra_py_spark.session import map_rows
 
-    def run(batches):
-        for pdf in batches:
-            ids, idxs, fps, errs = [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    for fi, fp in video_frame_hashes(payload, stride):
-                        ids.append(mid)
-                        idxs.append(fi)
-                        fps.append(fp)
-                        errs.append(None)
-                except ValueError as exc:
-                    ids.append(mid)
-                    idxs.append(None)
-                    fps.append(None)
-                    errs.append(str(exc) or "decode error")
-            # nullable Int64: see imagehash.media_phash_df
-            yield pd.DataFrame({
-                id_col: ids, "frame_idx": idxs,
-                "phash": pd.array(fps, dtype="Int64"), "error": errs,
-            })
+    def rows(mid, payload):
+        return [(mid, fi, fp, None)
+                for fi, fp in video_frame_hashes(payload, stride)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run,
-        schema=(
-            f"{id_col} STRING, frame_idx INT, phash BIGINT, error STRING"
-        ),
+    return map_rows(
+        df, [id_col, payload_col], rows,
+        f"{id_col} STRING, frame_idx INT, phash BIGINT, error STRING",
+        on_error=lambda v, exc: (v[0], None, None, str(exc) or "decode error"),
     )
 
 

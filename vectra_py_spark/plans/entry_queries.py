@@ -1201,7 +1201,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lsh_neardup_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """τ=0.4 DEMO regime — output-quadratic by construction (at this
     threshold most of the near-isotropic fixture collides), so it was
-    DEMOTED from the registry in round 7 (VERDICT r6 item 6): the
+    DEMOTED from the registry: the
     headline artifact carries only the production regime
     (`lsh_neardup_strict`, τ=0.85, vs_10x 0.21). Kept callable for
     scripts and the operator's own tests."""
@@ -1616,7 +1616,7 @@ _MJPEG_K = 2  # sampled frames per payload
 
 
 def q_mjpeg_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video-container e2e (VERDICT r6 item 4): per doc, synthesize an
+    """Video-container e2e: per doc, synthesize an
     MJPEG AVI of 2 + doc_id%5 flat grayscale JPEG frames (alternating
     baseline/progressive, value (doc_id·31 + i·17) % 256), then run the
     REAL :func:`sample_avi_frames` operator (RIFF 'movi' parse →
@@ -1974,7 +1974,7 @@ def q_warc_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes every output from the closed-form bodies, so the record
     framing, the HTTP header peel, the markdown reduction, and the PDF
     text join are value-checked cross-engine — the glue itself, not
-    just the byte math (VERDICT r7 item 4).
+    just the byte math.
 
     Plan shape: pushed-down filter → three chained narrow
     ``mapInPandas`` stages (synth → explode → route), no shuffle;
@@ -2069,7 +2069,7 @@ def q_office_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     every output from the closed forms, so ZIP/OLE container walks, XML
     text assembly, SST/piece-table/text-atom decoding, the RTF group
     machine, and the EPUB spine→markdown path are all value-checked
-    cross-engine (VERDICT r8 item 2; reference tie-in: the D5 ingest
+    cross-engine (reference tie-in: the D5 ingest
     surface, local_document_index.py:127-219, generalized to real
     corpus formats).
 
@@ -2731,7 +2731,7 @@ ORDER BY url
 
 
 # ---------------------------------------------------------------------------
-# PRE-STAGED round-11 entries (VERDICT r9 items 2 + 4): written and
+# PRE-STAGED entries: written and
 # harness-validated (tests/test_prestaged_oracle.py) one round before
 # registration, per the COVERAGE.md budget policy.
 # ---------------------------------------------------------------------------
@@ -2999,8 +2999,7 @@ def q_textclf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin aggregate, sigmoid residual, gradient aggregate,
     decay-and-step update — mirroring the operator's arithmetic shape
     term for term, so the whole training loop is value-checked
-    cross-engine (the unrolled-CTE treatment host_pagerank got, per
-    VERDICT r9 item 4's recipe).
+    cross-engine (the unrolled-CTE treatment host_pagerank got).
 
     Plan shape: 2 GD rounds = two (feature-key, doc-key) shuffle pairs
     on the active-feature frame; scoring is one broadcast join."""
@@ -3706,7 +3705,7 @@ def q_host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     report (host, hub, authority) to 6 dp. The oracle UNROLLS the same
     N iterations as a CTE chain — weighted authority aggregate, L1
     total, normalize, weighted hub aggregate, L1 total, normalize —
-    the same treatment `host_pagerank`'s twin got (VERDICT r9 item 4).
+    the same treatment `host_pagerank`'s twin got.
 
     Plan shape: host-pair aggregate → N (join + agg + one-row
     broadcast) pairs on the HOST-sized graph; the corpus never
@@ -4112,7 +4111,7 @@ _FLAC_DOCS = 300
 
 
 def q_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-audio codec e2e (VERDICT r6 item 8): per doc,
+    """Compressed-audio codec e2e: per doc,
     synthesize a deterministic 16-bit PCM clip (n = 64 + doc_id%32
     samples, s_i = ((doc_id·7 + i·13) % 65536) − 32768 — a full-range
     pseudo-noise pattern), encode it as FLAC (fixed predictors + Rice
@@ -4249,8 +4248,8 @@ _SIMPLE_CHUNK_K = 8
 
 
 def q_chunk_spans_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First driver-hash evidence on the splitter path (VERDICT r6
-    item 5): the REAL `TextSplitter` machinery — recursion, len/6
+    """First driver-hash evidence on the splitter path: the REAL
+    `TextSplitter` machinery — recursion, len/6
     heuristic, P16 alphanumeric guard, greedy packing, position
     bookkeeping — run in a restricted regime whose behavior is exactly
     SQL-expressible: single-space-normalized text (so the separator
@@ -5512,7 +5511,7 @@ def _sql_range_join() -> str:
 
 
 # ---------------------------------------------------------------------------
-# D1-D3/D6 — oracle-gated DML lifecycle (VERDICT r1 #5)
+# D1-D3/D6 — oracle-gated DML lifecycle
 #
 # Each query materializes a scratch index from the embeddings table,
 # runs DML through the REAL API (insert_item / upsert_item / delete_item
@@ -6927,7 +6926,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 # ---------------------------------------------------------------------------
-# Retired registry entries (round 11, VERDICT r10 item 2).
+# Retired registry entries.
 #
 # At 180 registered entries a 50-slot driver window can no longer honor
 # the N−3 staleness SLO once anything new is added (the rotation backlog
@@ -6951,7 +6950,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 #   events_windowed     — tumbling = sliding with step == width
 #                         (events_sliding registered)
 #
-# Round-12 retirements (VERDICT r11 item 2 — the pairing policy's
+# Further retirements (the pairing policy's
 # three named candidates, each strictly subsumed by a registered
 # superset entry; ledger rows in COVERAGE.md):
 #
@@ -6990,8 +6989,8 @@ RETIRED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 #
 # The correctness driver oracles only the FIRST 50 registry entries per
 # round, so registry order is evidence policy: queries that most need a
-# fresh driver row go first. Round-13 rotation (VERDICT r12 item 3,
-# executed verbatim): lead with the 28 surviving r9-vintage rows — the
+# fresh driver row go first. The rotation leads with the 28 surviving
+# r9-vintage rows — the
 # staleness-SLO edge at round 13 (r9 = N−4 without a fresh row) — in
 # CORRECTNESS_r09 recording order, then the NINE queries whose plans
 # were restructured in the r12 optimization round without landing in
@@ -7020,7 +7019,7 @@ RETIRED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # than N-3 rounds.
 # ---------------------------------------------------------------------------
 _CHECK_FIRST: list[str] = [
-    # Round-13 window (VERDICT r12 item 3, executed verbatim):
+    # The check window, in order:
     # (a) the 28 r9-vintage survivors — exactly N−3 at r12, the SLO
     # edge this round — in CORRECTNESS_r09 recording order;
     "lloyd_kmeans",

@@ -102,6 +102,71 @@ def local_frame(spark: SparkSession, rows, schema):
     return spark.createDataFrame(rows, schema)
 
 
+def map_rows(df, in_cols, row_fn, schema, on_error=None,
+             catch=(ValueError,), per_task=False):
+    """Per-row Python over ``in_cols`` → a frame of ``schema``: the one
+    builder behind every per-payload decoder, as one narrow
+    ``mapInArrow`` (payloads never shuffle; streaming frames too).
+
+    ``row_fn(*values)`` returns the output rows of one input row, as
+    tuples in ``schema`` order (MAP inputs arrive as dicts). They are
+    materialized before any is kept, so a payload that fails partway
+    contributes only its error row. When ``row_fn`` raises one of
+    ``catch``, ``on_error(values, exc)`` returns that error row, or
+    ``None`` to drop the input row; with ``on_error=None`` the exception
+    propagates. With ``per_task=True``, ``row_fn`` is a zero-argument
+    factory called once per task (Spark reuses Python workers, so state
+    such as a connection pool or a pacing clock must not outlive one).
+
+    Output batches are Arrow-typed by the same mapping as
+    :func:`local_frame`, so INT/BIGINT, MAP and BINARY columns come back
+    exact: no pandas dtype inference rounds a BIGINT beside a NULL.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    fields = list(to_arrow_schema(schema))
+
+    def pylist(col):
+        vals = col.to_pylist()
+        if pa.types.is_map(col.type):
+            return [v if v is None else dict(v) for v in vals]
+        return vals
+
+    def run(batches):
+        fn = row_fn() if per_task else row_fn
+        for batch in batches:
+            out = []
+            for values in zip(*map(pylist, batch.columns)):
+                try:
+                    out.extend(list(fn(*values)))
+                except catch as exc:
+                    if on_error is None:
+                        raise
+                    err = on_error(values, exc)
+                    if err is not None:
+                        out.append(err)
+            cols = list(zip(*out)) or [()] * len(fields)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, fields)],
+                schema=pa.schema(fields),
+            )
+
+    return df.select(*in_cols).mapInArrow(run, schema)
+
+
+def quarantine_rows(on_error: str, error_row):
+    """A decoder's public ``on_error`` switch → :func:`map_rows`'
+    ``on_error``: ``'fail'`` propagates the ValueError (``None``),
+    ``'quarantine'`` keeps ``error_row(values, exc)`` in its place."""
+    if on_error not in ("fail", "quarantine"):
+        raise ValueError(f"on_error must be fail|quarantine, got {on_error!r}")
+    return error_row if on_error == "quarantine" else None
+
+
 def _parse_bytes(s: str) -> int:
     """Parse a Spark byte-size conf value ("134217728b", "128m",
     "1g", "512MB", plain digits) into bytes."""
@@ -143,9 +208,9 @@ def spread(df, target: int | None = None):
     parallelism — the 100 TB case, where adding a shuffle here would be
     pure loss.
 
-    The guard estimates the scan's SPLIT count, not just its file count
-    (VERDICT r12 item 4): ``len(df.inputFiles()) >= target`` short-
-    circuits the many-files case for free, and a FEW-huge-files table
+    The guard estimates the scan's SPLIT count, not just its file count:
+    ``len(df.inputFiles()) >= target`` short-circuits the many-files
+    case for free, and a FEW-huge-files table
     (say 40×10 GB — thousands of scan splits but 40 files) is sized via
     the Hadoop FileSystem and left alone when
     ``total_bytes / maxPartitionBytes >= target``, because each scan

@@ -33,7 +33,7 @@ Surface:
 
 Scale shape: the index scan is line-split parallel text; selection is
 one window over SURT groups (index-sized, not archive-sized); fetches
-are payload-local in ``mapInPandas`` with per-row quarantine, sorted
+are payload-local in ``map_rows`` with per-row quarantine, sorted
 by offset within each archive for sequential access.
 """
 
@@ -423,65 +423,34 @@ def fetch_cdx_records(spark_or_df, df=None, max_bytes: int | None = None):
 
     Accepts ``fetch_cdx_records(df)`` or the (spark, df) form for
     symmetry with the other sources."""
-    import pandas as pd
+    from vectra_py_spark.session import map_rows
 
     sel = df if df is not None else spark_or_df
     ceiling = DECOMPRESS_CEILING if max_bytes is None else max_bytes
 
-    def run(batches):
-        for pdf in batches:
-            pdf = pdf.sort_values(["filename", "offset"])
-            rows = {k: [] for k in (
-                "archive", "offset", "warc_type", "url", "warc_date",
-                "http_status", "content_type", "payload", "n_bytes",
-                "error",
-            )}
-            handles: dict[str, object] = {}
-            try:
-                for fname, off, length in zip(
-                    pdf["filename"], pdf["offset"], pdf["length"]
-                ):
-                    rows["archive"].append(fname)
-                    rows["offset"].append(int(off))
-                    try:
-                        fh = handles.get(fname)
-                        if fh is None:
-                            fh = open(fname, "rb")
-                            handles[fname] = fh
-                        fh.seek(int(off))
-                        raw = fh.read(int(length))
-                        if len(raw) != int(length):
-                            raise ValueError(
-                                "range read truncated "
-                                f"({len(raw)}/{int(length)} bytes)"
-                            )
-                        recs = parse_warc(raw, max_bytes=ceiling)
-                        if len(recs) != 1:
-                            raise ValueError(
-                                f"range holds {len(recs)} records, expected 1"
-                            )
-                        r = recs[0]
-                        rows["warc_type"].append(r["warc_type"])
-                        rows["url"].append(r["url"])
-                        rows["warc_date"].append(r["warc_date"])
-                        rows["http_status"].append(r["http_status"])
-                        rows["content_type"].append(r["content_type"])
-                        rows["payload"].append(r["payload"])
-                        rows["n_bytes"].append(len(r["payload"]))
-                        rows["error"].append(None)
-                    except (ValueError, OSError) as exc:
-                        for k in ("warc_type", "url", "warc_date",
-                                  "http_status", "content_type", "payload"):
-                            rows[k].append(None)
-                        rows["n_bytes"].append(0)
-                        rows["error"].append(str(exc) or type(exc).__name__)
-            finally:
-                for fh in handles.values():
-                    fh.close()
-            yield pd.DataFrame(rows)
+    def row(fname, off, length):
+        with open(fname, "rb") as fh:
+            fh.seek(int(off))
+            raw = fh.read(int(length))
+        if len(raw) != int(length):
+            raise ValueError(
+                f"range read truncated ({len(raw)}/{int(length)} bytes)"
+            )
+        recs = parse_warc(raw, max_bytes=ceiling)
+        if len(recs) != 1:
+            raise ValueError(f"range holds {len(recs)} records, expected 1")
+        r = recs[0]
+        return [(fname, int(off), r["warc_type"], r["url"], r["warc_date"],
+                 r["http_status"], r["content_type"], r["payload"],
+                 len(r["payload"]), None)]
 
-    return (
-        sel.select("filename", "offset", "length")
-        .repartition("filename")
-        .mapInPandas(run, schema=_FETCH_SCHEMA)
+    cols = ["filename", "offset", "length"]
+    return map_rows(
+        sel.select(*cols).repartition("filename")
+        .sortWithinPartitions("filename", "offset"),
+        cols, row, _FETCH_SCHEMA,
+        on_error=lambda v, exc: (
+            v[0], int(v[1]), *[None] * 6, 0, str(exc) or type(exc).__name__
+        ),
+        catch=(ValueError, OSError),
     )

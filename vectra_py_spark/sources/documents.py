@@ -14,7 +14,7 @@ drops lie about names) to the same extractors:
   skip quietly (best-effort corpus builder — the strict per-format
   paths are the ``extract_*_df(on_error='quarantine')`` operators).
 
-Scale shape: one narrow ``mapInPandas`` over the ``binaryFile`` scan;
+Scale shape: one narrow ``map_rows`` pass over the ``binaryFile`` scan;
 file count is the parallelism unit, payloads never shuffle.
 """
 
@@ -75,28 +75,27 @@ def extract_documents_df(df, min_chars: int = 1):
     magic-byte dispatch — the extraction stage of :func:`read_documents`
     factored out so any (path, content) frame (a ``binaryFile`` scan, a
     streaming source, an in-plan synthesized frame) runs the identical
-    production path. Narrow ``mapInPandas``, payloads never shuffle."""
-    from collections.abc import Iterator
+    production path. One narrow ``map_rows`` pass, payloads never
+    shuffle."""
+    return _documents_df(df, extract_any_document, min_chars)
 
-    import pandas as pd
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for batch in batches:
-            rows = {"uri": [], "text": [], "doc_type": []}
-            for fpath, content in zip(batch["path"], batch["content"]):
-                try:
-                    kind, text = extract_any_document(bytes(content))
-                except ValueError:
-                    continue
-                if len(text.strip()) < min_chars:
-                    continue
-                rows["uri"].append(str(fpath))
-                rows["text"].append(text)
-                rows["doc_type"].append(kind)
-            yield pd.DataFrame(rows)
+def _documents_df(df, extract, min_chars: int):
+    """(path, content) rows → (uri, text, doc_type) through ``extract``
+    (bytes → (doc_type, text)); files it refuses with ValueError, or
+    whose text is shorter than ``min_chars``, skip quietly."""
+    from vectra_py_spark.session import map_rows
 
-    return df.select("path", "content").mapInPandas(
-        run, schema="uri STRING, text STRING, doc_type STRING"
+    def row(fpath, content):
+        kind, text = extract(bytes(content))
+        if len(text.strip()) < min_chars:
+            return []
+        return [(str(fpath), text, kind)]
+
+    return map_rows(
+        df, ["path", "content"], row,
+        "uri STRING, text STRING, doc_type STRING",
+        on_error=lambda v, exc: None,
     )
 
 

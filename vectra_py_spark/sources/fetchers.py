@@ -9,7 +9,7 @@
 - :class:`WebFetcher` — HTTP GET with browser-like headers and the
   reference's content-type allowlist (``web_fetcher.py:8-29``);
   import-gated on ``requests``. Fetching is driver-side (or a
-  ``mapInPandas`` over a URI column for bulk) — network I/O is not a
+  ``map_rows`` pass over a URI column for bulk) — network I/O is not a
   relational op.
 - :func:`html_to_markdown` — HTML → markdown-ish text
   (``web_fetcher.py:62-88`` semantics: drop script/style, headings to
@@ -24,7 +24,6 @@ from __future__ import annotations
 import html as _html
 import os
 import re
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -161,35 +160,36 @@ def html_to_markdown(html_text: str, base_url: str | None = None) -> str:
     return s
 
 
+def _fetch_error_row(values, exc):
+    """A failed fetch keeps its input row: NULL results and the failure
+    as ``"<ExceptionType>: <message>"``."""
+    return (*values, None, None, f"{type(exc).__name__}: {exc}")
+
+
 def fetch_uris_df(
     df: DataFrame, uri_col: str = "uri", timeout: float = 30.0
 ) -> DataFrame:
-    """Bulk web ingest: URI column → fetched text via ``mapInPandas``
-    (one worker fetch per row; partition count bounds parallelism —
-    repartition to the polite request rate)."""
-    import pandas as pd
+    """Bulk web ingest: URI column → fetched text via ``map_rows`` (one
+    worker fetch per row; partition count bounds parallelism —
+    repartition to the polite request rate). A failed fetch keeps its
+    row, with the failure in ``fetch_error``."""
+    from vectra_py_spark.session import map_rows
 
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = f"{fields}, text STRING, doc_type STRING, fetch_error STRING"
+    ui = df.columns.index(uri_col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fetcher = WebFetcher(timeout=timeout)
-        for pdf in batches:
-            texts, types, errors = [], [], []
-            for uri in pdf[uri_col]:
-                try:
-                    _, text, doc_type = fetcher.fetch(str(uri))
-                    texts.append(text)
-                    types.append(doc_type)
-                    errors.append(None)
-                except Exception as exc:  # keep the row, record the failure
-                    texts.append(None)
-                    types.append(None)
-                    errors.append(f"{type(exc).__name__}: {exc}")
-            out = pdf.copy()
-            out["text"] = texts
-            out["doc_type"] = types
-            out["fetch_error"] = errors
-            yield out
+    def make_row():
+        fetcher = WebFetcher(timeout=timeout)  # one per task
 
-    return df.mapInPandas(run, schema=schema)
+        def row(*values):
+            _, text, doc_type = fetcher.fetch(str(values[ui]))
+            return [(*values, text, doc_type, None)]
+
+        return row
+
+    return map_rows(
+        df, df.columns, make_row,
+        f"{df.schema.toDDL()}, text STRING, doc_type STRING, "
+        "fetch_error STRING",
+        on_error=_fetch_error_row,
+        catch=(Exception,), per_task=True,
+    )

@@ -24,7 +24,7 @@ Surface:
 - :func:`synth_warc` — generate a valid (optionally gzipped) archive
   for tests/demos.
 
-Scale shape: one narrow ``mapInPandas`` per file batch; records never
+Scale shape: one narrow ``map_rows`` pass; records never
 enter a shuffle; ``binaryFile`` splits by file, so archive count is
 the parallelism unit (Common Crawl segments are ~1 GB each — thousands
 of files saturate any executor fleet).
@@ -37,10 +37,9 @@ import io
 import zlib
 import tarfile
 import zipfile
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from vectra_py_spark.session import map_rows
 
 __all__ = [
     "parse_warc",
@@ -224,45 +223,24 @@ def explode_warc(raw: DataFrame) -> DataFrame:
     and the streaming ingest (`streaming/warc.py`) — identical rows
     either way, the package's streaming-twin discipline."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "archive", "record_idx", "warc_type", "url", "warc_date",
-                "http_status", "content_type", "payload", "n_bytes",
-                "error",
-            )}
+    def rows(fpath, content):
+        return [
+            (fpath, i, r["warc_type"], r["url"], r["warc_date"],
+             r["http_status"], r["content_type"], r["payload"],
+             len(r["payload"]), None)
+            for i, r in enumerate(parse_warc(bytes(content)))
+        ]
 
-            def emit(archive, idx, rec=None, err=None):
-                rows["archive"].append(archive)
-                rows["record_idx"].append(idx)
-                rows["warc_type"].append(rec["warc_type"] if rec else None)
-                rows["url"].append(rec["url"] if rec else None)
-                rows["warc_date"].append(rec["warc_date"] if rec else None)
-                rows["http_status"].append(
-                    rec["http_status"] if rec else None
-                )
-                rows["content_type"].append(
-                    rec["content_type"] if rec else None
-                )
-                rows["payload"].append(rec["payload"] if rec else None)
-                rows["n_bytes"].append(len(rec["payload"]) if rec else 0)
-                rows["error"].append(err)
-
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    for i, rec in enumerate(parse_warc(bytes(content))):
-                        emit(fpath, i, rec=rec)
-                except (ValueError, MemoryError) as exc:
-                    # MemoryError: the capped gunzip bounds expansion,
-                    # but a huge PLAIN archive can still fail to
-                    # allocate — quarantine the file, keep the stage
-                    emit(fpath, -1, err=str(exc) or type(exc).__name__)
-            out = pd.DataFrame(rows)
-            out["record_idx"] = out["record_idx"].astype("Int32")
-            out["http_status"] = out["http_status"].astype("Int32")
-            yield out
-
-    return raw.select("path", "content").mapInPandas(run, schema=WARC_SCHEMA)
+    # MemoryError: the capped gunzip bounds expansion, but a huge PLAIN
+    # archive can still fail to allocate — quarantine the file, keep
+    # the stage
+    return map_rows(
+        raw, ["path", "content"], rows, WARC_SCHEMA,
+        on_error=lambda v, exc: (
+            v[0], -1, *[None] * 6, 0, str(exc) or type(exc).__name__
+        ),
+        catch=(ValueError, MemoryError),
+    )
 
 
 _TEXT_TYPES = (
@@ -308,8 +286,8 @@ def warc_documents(records: DataFrame, min_chars: int = 1) -> DataFrame:
     Text decodes by the Content-Type ``charset=`` parameter when one
     is declared and resolvable, else UTF-8 — always with replacement
     (crawl charsets lie; a mojibake'd document is filterable
-    downstream, a crashed stage is not). Narrow ``mapInPandas``, no
-    shuffle."""
+    downstream, a crashed stage is not). One narrow ``map_rows`` pass,
+    no shuffle."""
     from pyspark.sql import functions as F
 
     from vectra_py_spark.operators.office import OFFICE_MIME_TYPES
@@ -327,50 +305,35 @@ def warc_documents(records: DataFrame, min_chars: int = 1) -> DataFrame:
         & type_pred
     ).select("url", "content_type", "payload")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"uri": [], "text": [], "doc_type": []}
-            for url, ctype, payload in zip(
-                pdf["url"], pdf["content_type"], pdf["payload"]
-            ):
-                if ctype.startswith("application/pdf"):
-                    from vectra_py_spark.operators.pdf import (
-                        pdf_extract_text,
-                    )
+    def row(url, ctype, payload):
+        if ctype.startswith("application/pdf"):
+            from vectra_py_spark.operators.pdf import pdf_extract_text
 
-                    try:
-                        text = "\n\n".join(pdf_extract_text(bytes(payload)))
-                    except ValueError:
-                        continue  # unsupported/corrupt PDFs skip quietly
-                    dt = "pdf"
-                elif any(
-                    ctype.startswith(t) for t in OFFICE_MIME_TYPES
-                ):
-                    from vectra_py_spark.operators.office import (
-                        office_extract_text,
-                    )
+            try:
+                text = "\n\n".join(pdf_extract_text(bytes(payload)))
+            except ValueError:
+                return []  # unsupported/corrupt PDFs skip quietly
+            dt = "pdf"
+        elif any(ctype.startswith(t) for t in OFFICE_MIME_TYPES):
+            from vectra_py_spark.operators.office import office_extract_text
 
-                    try:
-                        dt, text = office_extract_text(bytes(payload))
-                    except ValueError:
-                        continue  # corrupt/legacy-binary docs skip
-                else:
-                    raw = bytes(payload).decode(
-                        _charset_of(ctype), "replace"
-                    )
-                    if ctype.startswith("text/plain"):
-                        text, dt = raw, "txt"
-                    else:
-                        text, dt = html_to_markdown(raw, base_url=url), "md"
-                if len(text.strip()) < min_chars:
-                    continue
-                rows["uri"].append(url)
-                rows["text"].append(text)
-                rows["doc_type"].append(dt)
-            yield pd.DataFrame(rows)
+            try:
+                dt, text = office_extract_text(bytes(payload))
+            except ValueError:
+                return []  # corrupt/legacy-binary docs skip
+        else:
+            raw = bytes(payload).decode(_charset_of(ctype), "replace")
+            if ctype.startswith("text/plain"):
+                text, dt = raw, "txt"
+            else:
+                text, dt = html_to_markdown(raw, base_url=url), "md"
+        if len(text.strip()) < min_chars:
+            return []
+        return [(url, text, dt)]
 
-    return text_like.mapInPandas(
-        run, schema="uri STRING, text STRING, doc_type STRING"
+    return map_rows(
+        text_like, ["url", "content_type", "payload"], row,
+        "uri STRING, text STRING, doc_type STRING",
     )
 
 
@@ -386,7 +349,7 @@ def read_media_archive(spark: SparkSession, path: str) -> DataFrame:
 def explode_archives_df(raw: DataFrame) -> DataFrame:
     """The archive explode factored over any (path, content) frame —
     batch ``binaryFile`` scans and streaming sources run the identical
-    member walk (mapInPandas is streaming-transparent), so the batch
+    member walk (``map_rows`` is streaming-transparent), so the batch
     and continuous ingest paths cannot drift."""
 
     def read_capped(fobj, budget: list[int], name: str) -> bytes:
@@ -435,29 +398,16 @@ def explode_archives_df(raw: DataFrame) -> DataFrame:
         except (tarfile.TarError, OSError, EOFError) as exc:
             raise ValueError(f"corrupt TAR archive: {exc}") from exc
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "archive", "member", "payload", "n_bytes", "error",
-            )}
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    for name, data in members(bytes(content)):
-                        rows["archive"].append(fpath)
-                        rows["member"].append(name)
-                        rows["payload"].append(data)
-                        rows["n_bytes"].append(len(data))
-                        rows["error"].append(None)
-                except (ValueError, MemoryError) as exc:
-                    rows["archive"].append(fpath)
-                    rows["member"].append(None)
-                    rows["payload"].append(None)
-                    rows["n_bytes"].append(0)
-                    rows["error"].append(str(exc) or type(exc).__name__)
-            yield pd.DataFrame(rows)
+    def rows(fpath, content):
+        return [(fpath, name, data, len(data), None)
+                for name, data in members(bytes(content))]
 
-    return raw.select("path", "content").mapInPandas(
-        run, schema=ARCHIVE_SCHEMA
+    return map_rows(
+        raw, ["path", "content"], rows, ARCHIVE_SCHEMA,
+        on_error=lambda v, exc: (
+            v[0], None, None, 0, str(exc) or type(exc).__name__
+        ),
+        catch=(ValueError, MemoryError),
     )
 
 

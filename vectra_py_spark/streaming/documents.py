@@ -8,7 +8,7 @@ streaming-twin discipline: one parser, equivalence-tested) and appends
 id. Unsupported/corrupt files skip in-stream, never a failed query.
 
 Scale: ``binaryFile`` streaming lists new files per trigger; files are
-the parallelism unit inside one narrow ``mapInPandas``, payloads never
+the parallelism unit inside one narrow ``map_rows`` pass, payloads never
 shuffle.
 """
 
@@ -48,7 +48,7 @@ def extract_documents_stream(
 ) -> DataFrame:
     """(path, content) stream → (uri, text, doc_type) stream through
     the batch extractor — literally the batch operator
-    (``sources/documents.py::extract_documents_df``; mapInPandas is
+    (``sources/documents.py::extract_documents_df``; ``mapInArrow`` is
     streaming-transparent), so batch and stream cannot drift. Works on
     static frames too (the equivalence test relies on that)."""
     from vectra_py_spark.sources.documents import extract_documents_df

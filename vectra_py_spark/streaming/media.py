@@ -2,7 +2,7 @@
 directory → decoded feature vectors, as a Structured Streaming query.
 
 The batch path (`operators/multimodal.py::extract_features`) is a
-narrow ``mapInPandas`` over binary payloads; this module runs the SAME
+narrow ``map_rows`` pass over binary payloads; this module runs the SAME
 transformation on Spark's built-in ``binaryFile`` streaming source, so
 a crawl that continuously lands image/audio files becomes a continuous
 feature stream with exactly-once per micro-batch semantics — no new

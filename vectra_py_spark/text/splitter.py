@@ -165,8 +165,8 @@ class SingleSpaceTokenizer:
     token model behind the `chunk_spans_simple` driver oracle: with
     this tokenizer the REAL splitter's recursion/guard/packing become
     exactly predictable in ANSI SQL (split + window cumulative
-    positions), giving the splitter its first cross-engine value check
-    (VERDICT r6 item 5). Token ids carry no meaning (count is the
+    positions), giving the splitter its first cross-engine value check.
+    Token ids carry no meaning (count is the
     contract); decode is intentionally unsupported (overlap=0 regimes
     only)."""
 
