@@ -29,7 +29,7 @@ def _build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--index",
         help="index base path (required for every verb except "
-        "dedup-media, which is a pure folder scan — ADVICE r10)",
+        "dedup-media, which is a pure folder scan)",
     )
     p.add_argument("--chunk-size", type=int, default=512)
     p.add_argument("--vector-dim", type=int, default=64)
@@ -218,7 +218,7 @@ def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
     # dedup-media / mine-pairs / mine-images never touch the document
     # index — don't force a meaningless --index path for a pure folder
-    # scan (ADVICE r10); every other verb still requires it, validated
+    # scan; every other verb still requires it, validated
     # up front.
     if args.verb not in (
         "dedup-media", "mine-pairs", "mine-images",
@@ -503,7 +503,7 @@ def main(argv: list[str] | None = None) -> int:
             v = validate_conversations(turns)
             # dedup among VALID conversations only: an invalid min-id
             # copy must not become the canonical and erase its valid
-            # twin from the output (review r12)
+            # twin from the output
             valid_ids = v.where("valid").select("conv_id")
             d = dedup_conversations(turns.join(valid_ids, "conv_id"))
             verdicts = v.join(

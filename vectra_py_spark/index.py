@@ -48,7 +48,6 @@ second bucket beside the old row.
 
 from __future__ import annotations
 
-import json
 import logging
 import time
 import uuid
@@ -75,7 +74,14 @@ from vectra_py_spark.operators.similarity import (
     DEFAULT_BROADCAST_BYTES,
     _vector_set_bytes,
 )
-from vectra_py_spark.session import local_frame
+from vectra_py_spark.session import (
+    hadoop_fs,
+    hash_buckets,
+    local_frame,
+    read_side_file,
+    write_side_file,
+    xxhash_bucket,
+)
 
 __all__ = ["SparkVectorIndex", "ITEM_SCHEMA", "BUCKET_COL"]
 
@@ -333,41 +339,24 @@ class SparkVectorIndex:
         merge_batch, document ingest) computes the same placement
         JVM-side — no Python copy of the hash."""
         self._ensure_meta()
-        key = F.col(self.bucket_key) if key is None else key
-        return F.pmod(F.xxhash64(key), F.lit(self.n_buckets)).cast("int")
+        return xxhash_bucket(self.bucket_key if key is None else key, self.n_buckets)
 
     def _key_buckets(self, keys: Sequence[Any]) -> set[int]:
         """The buckets of bucket-key values, by Spark's own hash over a
-        local relation of the keys: the projection folds on the driver
-        (``LocalTableScan``), so this runs no job and scans no table."""
+        local relation of the keys (:func:`hash_buckets`): the projection
+        folds on the driver, so this runs no job and scans no table."""
         if not keys:
             return set()
         self._ensure_meta()
-        field = self._schema()[self.bucket_key]
-        schema = T.StructType([T.StructField("k", field.dataType, True)])
-        frame = local_frame(self.spark, [{"k": k} for k in keys], schema)
-        return {int(r[0]) for r in frame.select(self._bucket_expr(F.col("k"))).collect()}
-
-    def _hadoop_path(self, path_str: str):
-        jvm = self.spark.sparkContext._jvm
-        return jvm.org.apache.hadoop.fs.Path(path_str)
-
-    def _hadoop_fs(self, jpath):
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        return jpath.getFileSystem(conf)
+        dtype = self._schema()[self.bucket_key].dataType
+        return set(hash_buckets(self.spark, keys, dtype, self.n_buckets))
 
     def _write_meta(self) -> None:
         """Pin the layout (``n_buckets``, bucket key) in a side-file so a
         reopen with different defaults can't scatter one key across two
-        buckets. Written via the Hadoop FS API — works on any scheme
-        (file/hdfs/s3a), and the ``_`` prefix keeps it out of Spark's
-        parquet file listing."""
-        jpath = self._hadoop_path(f"{self.path}/{META_FILE}")
-        fs = self._hadoop_fs(jpath)
-        out = fs.create(jpath, True)
+        buckets."""
         meta = {"version": 1, "n_buckets": self.n_buckets, "bucket_key": self.bucket_key}
-        out.write(bytearray(json.dumps(meta), "utf-8"))
-        out.close()
+        write_side_file(self.spark, f"{self.path}/{META_FILE}", meta)
         self._meta_loaded = True
 
     def _ensure_meta(self) -> None:
@@ -378,37 +367,22 @@ class SparkVectorIndex:
         key predates keyed layouts: its table is keyed by ``id``."""
         if self._meta_loaded:
             return
-        jpath = self._hadoop_path(f"{self.path}/{META_FILE}")
-        fs = self._hadoop_fs(jpath)
-        if not fs.exists(jpath):
-            self._meta_loaded = True
-            return
-        try:
-            jvm = self.spark.sparkContext._jvm
-            reader = jvm.java.io.BufferedReader(
-                jvm.java.io.InputStreamReader(fs.open(jpath), "UTF-8")
-            )
-            chunks = []
-            while True:
-                line = reader.readLine()
-                if line is None:
-                    break
-                chunks.append(line)
-            reader.close()
-            meta = json.loads("".join(chunks))
-            n_buckets = int(meta["n_buckets"])
-            bucket_key = meta.get("bucket_key", "id")
-            if n_buckets < 1 or not isinstance(bucket_key, str):
-                raise ValueError(f"bad layout {meta!r}")
-        except Exception as e:
-            raise ValueError(f"unreadable index meta file {self.path}/{META_FILE}: {e}") from e
-        self.n_buckets, self.bucket_key = n_buckets, bucket_key
-        self._check_bucket_key()
+        meta_path = f"{self.path}/{META_FILE}"
+        meta = read_side_file(self.spark, meta_path)
+        if meta is not None:
+            try:
+                n_buckets = int(meta["n_buckets"])
+                bucket_key = meta.get("bucket_key", "id")
+                if n_buckets < 1 or not isinstance(bucket_key, str):
+                    raise ValueError(f"bad layout {meta!r}")
+            except (KeyError, TypeError, ValueError) as e:
+                raise ValueError(f"unreadable index meta file {meta_path}: {e}") from e
+            self.n_buckets, self.bucket_key = n_buckets, bucket_key
+            self._check_bucket_key()
         self._meta_loaded = True
 
     def _delete_bucket_dir(self, bucket: int) -> None:
-        jpath = self._hadoop_path(f"{self.path}/{BUCKET_COL}={bucket}")
-        fs = self._hadoop_fs(jpath)
+        fs, jpath = hadoop_fs(self.spark, f"{self.path}/{BUCKET_COL}={bucket}")
         fs.delete(jpath, True)
 
     # -- lifecycle (S2, S3) ----------------------------------------------

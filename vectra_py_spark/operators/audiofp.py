@@ -35,6 +35,9 @@ from __future__ import annotations
 
 import numpy as np
 
+from vectra_py_spark.operators.bands import band_pairs, best_offset, write_band_index
+from vectra_py_spark.session import hash_buckets, local_frame, xxhash_bucket
+
 __all__ = [
     "constellation",
     "fingerprints",
@@ -131,36 +134,15 @@ def audio_match_pairs(fp, min_matches: int = 5, id_col: str = "media_id"):
     ONE anchor-time offset (t_a − t_b). Random hash collisions scatter
     across offsets; true copies pile onto the trim offset — the
     paper's histogram test as one groupBy. Keeps each pair's best
-    offset with ``n_aligned >= min_matches``."""
-    from pyspark.sql import Window
+    offset with ``n_aligned >= min_matches``. Both join sides project
+    the one fingerprint frame, so the decode pass runs once (see
+    :mod:`~vectra_py_spark.operators.bands`)."""
     from pyspark.sql import functions as F
 
-    # NOTE (r12 audit): both self-join sides derive from this frame;
-    # ReuseExchange computes the decode pass once (see
-    # imagehash.phash_neardup_pairs), so no materialization here.
     clean = fp.filter(F.col("hash").isNotNull()).select(id_col, "hash", "t")
-    a = clean.select(
-        F.col(id_col).alias("id_a"), "hash", F.col("t").alias("t_a")
-    )
-    b = clean.select(
-        F.col(id_col).alias("id_b"), "hash", F.col("t").alias("t_b")
-    )
-    aligned = (
-        a.join(b, "hash")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy(
-            "id_a", "id_b",
-            (F.col("t_a") - F.col("t_b")).alias("offset"),
-        )
-        .agg(F.count(F.lit(1)).cast("int").alias("n_aligned"))
-    )
-    w = Window.partitionBy("id_a", "id_b").orderBy(
-        F.desc("n_aligned"), F.asc("offset")
-    )
-    return (
-        aligned.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("n_aligned") >= min_matches))
-        .select("id_a", "id_b", "offset", "n_aligned")
+    return best_offset(
+        band_pairs(clean, ["hash"], id_col, {"t": "t"}),
+        ["id_a", "id_b"], F.col("t_a") - F.col("t_b"), min_matches,
     )
 
 
@@ -181,19 +163,11 @@ def audio_write_index(
     one-task-per-directory at write (small-files discipline)."""
     from pyspark.sql import functions as F
 
-    (
-        fp.filter(F.col("hash").isNotNull())
-        .select(
-            F.col(id_col).alias("media_id"), "hash", "t",
-            F.pmod(F.xxhash64(F.col("hash")), F.lit(n_buckets))
-            .cast("int")
-            .alias("bucket"),
-        )
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
+    rows = fp.filter(F.col("hash").isNotNull()).select(
+        F.col(id_col).alias("media_id"), "hash", "t",
+        xxhash_bucket("hash", n_buckets).alias("bucket"),
     )
+    write_band_index(rows, path, ["bucket"])
 
 
 def audio_probe(
@@ -207,10 +181,10 @@ def audio_probe(
 
     The probe decodes and fingerprints driver-side (one clip — the
     same pure-numpy path as the distributed pass), its hashes' bucket
-    coordinates become partition predicates (one bounded Spark job for
-    the engine's own xxhash64, like ``winnow_probe``), and the scan
-    opens ≤ min(|probe hashes|, ``max_probe_hashes``) directories out
-    of ``n_buckets`` — corpus-size-independent lookup.
+    coordinates become partition predicates (the engine's own xxhash64
+    over a local relation, no Spark job, like ``winnow_probe``), and
+    the scan opens ≤ min(|probe hashes|, ``max_probe_hashes``)
+    directories out of ``n_buckets`` — corpus-size-independent lookup.
 
     ``max_probe_hashes``: a clip emits ~400 hashes/second, so a
     multi-second probe would land in every bucket and defeat the
@@ -229,6 +203,7 @@ def audio_probe(
     ``n_aligned`` (sampled hits), ``stride``, and ``n_aligned_est =
     n_aligned * stride`` (the extrapolated full-unit count)."""
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from vectra_py_spark.operators.audio import decode_audio_payload
 
@@ -245,36 +220,17 @@ def audio_probe(
         probe_fps = probe_fps[::stride]
     eff_min = max(1, min_matches // stride)
     if not probe_fps:
-        return spark.createDataFrame([], _EMPTY)
-    probe_df = spark.createDataFrame(
-        probe_fps, "hash BIGINT, t_probe INT"
-    )
-    buckets = sorted(
-        r["b"]
-        for r in probe_df.select(
-            F.pmod(F.xxhash64(F.col("hash")), F.lit(n_buckets))
-            .cast("int")
-            .alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+        return local_frame(spark, [], _EMPTY)
+    probe_df = local_frame(spark, probe_fps, "hash BIGINT, t_probe INT")
+    buckets = sorted(set(hash_buckets(
+        spark, [h for h, _t in probe_fps], T.LongType(), n_buckets
+    )))
     idx = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    aligned = (
-        idx.join(F.broadcast(probe_df), "hash")
-        .groupBy(
-            "media_id", (F.col("t") - F.col("t_probe")).alias("offset")
-        )
-        .agg(F.count(F.lit(1)).cast("int").alias("n_aligned"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("media_id").orderBy(
-        F.desc("n_aligned"), F.asc("offset")
-    )
     return (
-        aligned.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("n_aligned") >= eff_min))
+        best_offset(
+            idx.join(F.broadcast(probe_df), "hash"), ["media_id"],
+            F.col("t") - F.col("t_probe"), eff_min,
+        )
         .select(
             "media_id", "offset", "n_aligned",
             F.lit(stride).cast("int").alias("stride"),

@@ -124,7 +124,7 @@ def gopher_pass_col(
     rounded-ratio-then-threshold arithmetic of :func:`gopher_quality`
     operation-for-operation. Pass pre-staged ``words``/``lines``
     attribute columns to avoid re-splitting the text per reference
-    (the r12 staging note in ``text_analysis``)."""
+    (the staging note in ``text_analysis``)."""
     if words is None:
         words = words_col(text_col)
     if lines is None:
@@ -652,8 +652,7 @@ def curation_funnel(
 
     docs = df.select(id_col, text_col)
 
-    # r12 restructure (guide §1.2): the old four-branch union scanned
-    # the corpus once PER STAGE (and reached s1 through a doc_id
+    # The old four-branch union scanned the corpus once PER STAGE (and reached s1 through a doc_id
     # semi-join against the Gopher projection — two exchanges to apply
     # a per-row flag). Now ONE tagged pass: each row carries its token
     # count and q/e/n survival flags, and a single aggregate produces

@@ -22,6 +22,11 @@ Scale design (100 TB):
   explode, no shuffle), fingerprint = packed sign bits; near-dups =
   fingerprint equality (or small hamming ball) — no joins.
 
+Every banded pair join here (MinHash bands, SimHash blocks, winnowed
+fingerprints, typo deletions) is one call of the shared band-candidate
+kernel (:mod:`vectra_py_spark.operators.bands`); each operator keeps
+its own verify and its own distinct/aggregate.
+
 MinHash over *hex-string* md5 values: MinHash needs any total order on
 hash values, not integers — lexicographic min over fixed-width hex is
 portable across engines (no int64 conversion games).
@@ -31,8 +36,17 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from vectra_py_spark.session import spread
+from vectra_py_spark.operators.bands import (
+    BLOCK_KEY,
+    band_pairs,
+    block_rows,
+    hamming,
+    pigeonhole,
+    write_band_index,
+)
+from vectra_py_spark.session import hash_buckets, local_frame, spread, xxhash_bucket
 
 __all__ = [
     "exact_dedup",
@@ -374,34 +388,11 @@ def minhash_lsh_pairs(
     Candidates = pairs sharing ≥1 band (equi-join per band — no
     cartesian); estimate = matching-minhash fraction; keep ≥ threshold.
     """
-    rows = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, k, num_hashes).cache()
-    band_struct = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat(*[F.col(f"h{b * rows + r}") for r in range(rows)]).alias(
-                    "val"
-                ),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select(
-        "doc_id", F.explode(band_struct).alias("bv")
-    ).select("doc_id", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
-
-    a, b = banded.alias("a"), banded.alias("b")
+    banded = _band_rows(sig, num_hashes, bands, "doc_id")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
+        band_pairs(banded, ["band", "val"], "doc_id")
+        .select("id_a", "id_b")
         .distinct()
     )
     siga = sig.select(
@@ -529,12 +520,19 @@ def minhash_probe_sql(
 MINHASH_INDEX_BUCKETS = 16  # sub-buckets per band directory
 
 
-def _band_vals(sig_cols: list, num_hashes: int, bands: int):
+def _band_rows(sig: DataFrame, num_hashes: int, bands: int, *cols) -> DataFrame:
+    """One row per LSH band of each MinHash signature: ``cols`` + (band,
+    val), where ``val`` concatenates the band's rows of the signature."""
     rows = num_hashes // bands
-    return [
-        F.concat(*[sig_cols[b * rows + r] for r in range(rows)])
+    bv = F.explode(F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat(*[F.col(f"h{b * rows + r}") for r in range(rows)]).alias("val"),
+        )
         for b in range(bands)
-    ]
+    ])).alias("bv")
+    out = sig.select(*cols, bv)
+    return out.select(*out.columns[:-1], "bv.band", "bv.val")
 
 
 def minhash_write_index(
@@ -563,39 +561,10 @@ def minhash_write_index(
     """
     sig = minhash_signatures(df, id_col, text_col, k, num_hashes)
     sig_arr = F.array(*[F.col(f"h{h}") for h in range(num_hashes)])
-    vals = _band_vals(
-        [F.col(f"h{h}") for h in range(num_hashes)], num_hashes, bands
-    )
-    banded = sig.select(
-        F.col(id_col),
-        sig_arr.alias("sig"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), v.alias("val"))
-                    for b, v in enumerate(vals)
-                ]
-            )
-        ).alias("bv"),
-    ).select(
-        id_col,
-        "sig",
-        F.col("bv.band").alias("band"),
-        F.col("bv.val").alias("val"),
-        F.pmod(F.xxhash64(F.col("bv.val")), F.lit(n_buckets))
-        .cast("int")
-        .alias("bucket"),
-    )
-    # cluster by the partition key first: each (band, bucket) directory
-    # is then written by exactly one task — one file per directory
-    # instead of up-to-32 shards each (the small-files discipline that
-    # matters at real scale; also ~2x faster here)
-    (
-        banded.repartition("band", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("band", "bucket")
-        .parquet(path)
-    )
+    banded = _band_rows(
+        sig, num_hashes, bands, F.col(id_col), sig_arr.alias("sig")
+    ).withColumn("bucket", xxhash_bucket("val", n_buckets))
+    write_band_index(banded, path, ["band", "bucket"])
 
 
 def minhash_probe(
@@ -624,18 +593,8 @@ def minhash_probe(
         raise ValueError("probe text has no k-shingle")
     rows = num_hashes // bands
     vals = ["".join(sig[b * rows : (b + 1) * rows]) for b in range(bands)]
-    # evaluate the engine's own xxhash64 for the bucket coordinates (one
-    # tiny local job — keeps write/probe placement bit-identical)
-    buckets = list(
-        spark.range(1)
-        .select(
-            *[
-                F.pmod(F.xxhash64(F.lit(v)), F.lit(n_buckets)).cast("int")
-                for v in vals
-            ]
-        )
-        .collect()[0]
-    )
+    # the engine's own xxhash64 keeps write/probe placement bit-identical
+    buckets = hash_buckets(spark, vals, T.StringType(), n_buckets)
     idx = spark.read.parquet(path)
     cond = None
     for b, (v, bk) in enumerate(zip(vals, buckets)):
@@ -754,41 +713,13 @@ def simhash_neardup(
     No reference analog (the reference has no dedup); north-star
     operator per the build brief.
     """
-    n_blocks = radius + 1
-    if SIMHASH_BITS % n_blocks:
-        raise ValueError(
-            f"radius+1 ({n_blocks}) must divide SIMHASH_BITS ({SIMHASH_BITS})"
-        )
-    width = SIMHASH_BITS // n_blocks
-    mask = (1 << width) - 1
-    fp = simhash(df, id_col=id_col, text_col=text_col)
-    blocks = fp.select(
-        "doc_id",
-        "simhash16",
-        F.explode(
-            F.array(*[F.lit(i) for i in range(n_blocks)])
-        ).alias("block_idx"),
-    ).withColumn(
-        "block_val",
-        F.expr(f"shiftright(simhash16, {width} * block_idx) & {mask}"),
+    geometry = pigeonhole(radius, SIMHASH_BITS, "SIMHASH_BITS")
+    blocks = block_rows(
+        simhash(df, id_col=id_col, text_col=text_col), "simhash16", geometry
     )
-    a = blocks.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("simhash16").alias("fp_a"),
-        "block_idx",
-        "block_val",
-    )
-    b = blocks.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("simhash16").alias("fp_b"),
-        "block_idx",
-        "block_val",
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("int")
     return (
-        a.join(b, ["block_idx", "block_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", hamming)
+        band_pairs(blocks, BLOCK_KEY, "doc_id", {"simhash16": "fp"})
+        .withColumn("hamming", hamming("fp_a", "fp_b"))
         .filter(F.col("hamming") <= radius)
         .select("id_a", "id_b", "hamming")
         .distinct()
@@ -803,13 +734,7 @@ def simhash_neardup_sql(
     Same divisibility guard as the DataFrame path — without it a
     non-dividing radius would silently band only a prefix of the bits
     here while the DataFrame twin raises (inconsistent twins)."""
-    n_blocks = radius + 1
-    if SIMHASH_BITS % n_blocks:
-        raise ValueError(
-            f"radius+1 ({n_blocks}) must divide SIMHASH_BITS ({SIMHASH_BITS})"
-        )
-    width = SIMHASH_BITS // n_blocks
-    mask = (1 << width) - 1
+    n_blocks, width, mask = pigeonhole(radius, SIMHASH_BITS, "SIMHASH_BITS")
     return f"""
         WITH fp AS ({simhash_sql(table, text_expr)}),
         blocks AS (
@@ -913,13 +838,7 @@ def incremental_dedup_against_store(
     """Like :func:`incremental_dedup` but the corpus side arrives as an
     already-materialized (id, simhash16) fingerprint store — the shape
     every batch of the streaming loop uses (no historical text scan)."""
-    n_blocks = radius + 1
-    if SIMHASH_BITS % n_blocks:
-        raise ValueError(
-            f"radius+1 ({n_blocks}) must divide SIMHASH_BITS ({SIMHASH_BITS})"
-        )
-    width = SIMHASH_BITS // n_blocks
-    mask = (1 << width) - 1
+    geometry = pigeonhole(radius, SIMHASH_BITS, "SIMHASH_BITS")
     batch_fp = simhash(batch, id_col=id_col, text_col=text_col)
     # batch_fp feeds both the banding union and the final anti-join
     # with different exchange shapes, so the Python simhash pass ran
@@ -930,42 +849,17 @@ def incremental_dedup_against_store(
     fp = store.select(
         F.col(id_col), F.col("simhash16"), F.lit(0).alias("is_new")
     ).unionByName(batch_fp.withColumn("is_new", F.lit(1)))
-    blocks = fp.select(
-        id_col,
-        "simhash16",
-        "is_new",
-        F.explode(
-            F.array(*[F.lit(i) for i in range(n_blocks)])
-        ).alias("block_idx"),
-    ).withColumn(
-        "block_val",
-        F.expr(f"shiftright(simhash16, {width} * block_idx) & {mask}"),
+    # a new doc drops against any stored doc, or an earlier new one
+    new_vs_old = (F.col("new_b") == 1) & (
+        (F.col("new_a") == 0)
+        | ((F.col("new_a") == 1) & (F.col("id_a") < F.col("id_b")))
     )
-    a = blocks.select(
-        F.col(id_col).alias("id_a"),
-        F.col("simhash16").alias("fp_a"),
-        F.col("is_new").alias("new_a"),
-        "block_idx",
-        "block_val",
-    )
-    b = blocks.select(
-        F.col(id_col).alias("id_b"),
-        F.col("simhash16").alias("fp_b"),
-        F.col("is_new").alias("new_b"),
-        "block_idx",
-        "block_val",
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("int")
     dropped = (
-        a.join(b, ["block_idx", "block_val"])
-        .filter(
-            (F.col("new_b") == 1)
-            & (
-                (F.col("new_a") == 0)
-                | ((F.col("new_a") == 1) & (F.col("id_a") < F.col("id_b")))
-            )
+        band_pairs(
+            block_rows(fp, "simhash16", geometry), BLOCK_KEY, id_col,
+            {"simhash16": "fp", "is_new": "new"}, rule=new_vs_old,
         )
-        .withColumn("hamming", hamming)
+        .withColumn("hamming", hamming("fp_a", "fp_b"))
         .filter(F.col("hamming") <= radius)
         .select(F.col("id_b").alias("did"))
         .distinct()
@@ -988,13 +882,7 @@ def incremental_dedup_sql(
 
     Same divisibility guard as the DataFrame path — the twins must
     agree on which radii are representable."""
-    n_blocks = radius + 1
-    if SIMHASH_BITS % n_blocks:
-        raise ValueError(
-            f"radius+1 ({n_blocks}) must divide SIMHASH_BITS ({SIMHASH_BITS})"
-        )
-    width = SIMHASH_BITS // n_blocks
-    mask = (1 << width) - 1
+    n_blocks, width, mask = pigeonhole(radius, SIMHASH_BITS, "SIMHASH_BITS")
     return f"""
         WITH fp0 AS ({simhash_sql(table, text_expr)}),
         fp AS (
@@ -1160,18 +1048,9 @@ def winnow_matches(
             .select("h")
         )
         fp = fp.join(F.broadcast(hot), "h", "left_anti")
-    a = fp.alias("a")
-    b = fp.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
+        band_pairs(fp, ["h"], id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
         .orderBy("id_a", "id_b")
@@ -1253,15 +1132,9 @@ def winnow_write_index(
     (small-files discipline).
     """
     fp = winnow_fingerprints(df, k, w, id_col, text_col).withColumn(
-        "bucket",
-        F.pmod(F.xxhash64(F.col("h")), F.lit(n_buckets)).cast("int"),
+        "bucket", xxhash_bucket("h", n_buckets)
     )
-    (
-        fp.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
+    write_band_index(fp, path, ["bucket"])
 
 
 def winnow_probe(
@@ -1282,26 +1155,14 @@ def winnow_probe(
     (:func:`winnow_of_text`); their bucket coordinates become literal
     partition predicates, so the scan opens ≤ |probe fingerprints|
     directories out of ``n_buckets`` (PartitionFilters asserted in
-    tests) — corpus-size-independent probe cost. Bucket ids come from a
-    1-row Spark job (xxhash64 is JVM-side; bounded collect, one row per
-    probe fingerprint — filter-sized like the Bloom bitmap).
+    tests) — corpus-size-independent probe cost. Bucket ids come from
+    the engine's own xxhash64 over a local relation
+    (:func:`~vectra_py_spark.session.hash_buckets`: no Spark job).
     """
     hashes = sorted({h for _, h in winnow_of_text(text, k, w)})
     if not hashes:
-        return spark.createDataFrame(
-            [], f"{id_col} bigint, n_shared bigint"
-        )
-    buckets = sorted(
-        r["b"]
-        for r in spark.createDataFrame([(h,) for h in hashes], "h string")
-        .select(
-            F.pmod(F.xxhash64(F.col("h")), F.lit(n_buckets))
-            .cast("int")
-            .alias("b")
-        )
-        .distinct()
-        .collect()
-    )
+        return local_frame(spark, [], f"{id_col} bigint, n_shared bigint")
+    buckets = sorted(set(hash_buckets(spark, hashes, T.StringType(), n_buckets)))
     idx = spark.read.parquet(path).filter(
         F.col("bucket").isin(buckets) & F.col("h").isin(hashes)
     )
@@ -1731,11 +1592,8 @@ def typo_pairs(
             "i -> concat(substr(t, 1, i-1), substr(t, i+1)))))"
         ).alias("v"),
     )
-    a = var.select(F.col("t").alias("term_a"), "v")
-    b = var.select(F.col("t").alias("term_b"), "v")
     cand = (
-        a.join(b, "v")
-        .filter(F.col("term_a") < F.col("term_b"))
+        band_pairs(var, ["v"], "t", id_stem="term")
         .select("term_a", "term_b")
         .distinct()
     )

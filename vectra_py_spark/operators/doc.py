@@ -140,7 +140,7 @@ def _doc_extract(payload: bytes) -> str:
     # CP axis uses — so the main-document cut must happen in CP space
     # BEFORE decoding: an astral pair is 2 CPs but 1 Python char, and
     # slicing the decoded string would shift the cut past it, bleeding
-    # header/footnote text into the output (ADVICE r8).
+    # header/footnote text into the output.
     pieces: list[tuple[bool, bytes, int]] = []  # (unicode?, raw, cp_count)
     total_cp = 0
     for i in range(n):

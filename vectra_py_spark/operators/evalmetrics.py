@@ -90,7 +90,7 @@ def retrieval_metrics(
             F.col(rel_col).cast("int").alias("rel"),
         )
         # one judgment per (query, doc): duplicate qrels would fan out
-        # the left join below (ADVICE r11) — max grade wins, matching
+        # the left join below — max grade wins, matching
         # the "most informed judgment" convention
         .groupBy("_q", "_d")
         .agg(F.max("rel").alias("rel"))

@@ -25,11 +25,11 @@ factors, and close enough for hash purposes otherwise.
 Spark surface: `media_phash_df` (narrow ``map_rows`` — payloads
 never shuffle, per-row ValueError quarantine like every extractor
 here) and `phash_neardup_pairs` (block-banded Hamming equi-join —
-the pigeonhole construction `dedup.simhash_neardup` uses, generic
-over 64-bit fingerprints: split into ``radius+1`` blocks; any pair
-within Hamming ``radius`` agrees exactly on ≥1 block, so candidates
-are an equi-join on (block_idx, block_val) carrying 8 bytes per row,
-and verify is two codegen'd bit ops).
+the pigeonhole construction of the `bands` kernel, shared with
+`dedup.simhash_neardup` and the video join: split into ``radius+1``
+blocks; any pair within Hamming ``radius`` agrees exactly on ≥1
+block, so candidates are an equi-join on (block_idx, block_val)
+carrying 8 bytes per row, and verify is two codegen'd bit ops).
 
 100 TB notes: the hash pass is embarrassingly parallel over payload
 splits; the near-dup join shuffles only (id, 3×int64) rows. At
@@ -42,6 +42,19 @@ block values (flat images hash alike) split via AQE skew handling.
 from __future__ import annotations
 
 import numpy as np
+
+from vectra_py_spark.operators.bands import (
+    BLOCK_KEY,
+    band_pairs,
+    block_keys,
+    block_predicate,
+    block_rows,
+    hamming,
+    index_geometry,
+    pigeonhole,
+    write_band_index,
+)
+from vectra_py_spark.session import write_side_file
 
 __all__ = [
     "grayscale",
@@ -219,47 +232,19 @@ def phash_neardup_pairs(
     ``popcount(fp_a XOR fp_b) <= radius`` via pigeonhole block-banding
     (``radius + 1`` blocks; agreement on ≥1 exact block is necessary
     within the ball). Equi-join shaped — no cartesian; verify is two
-    codegen'd bit ops. ``radius + 1`` must divide ``bits``."""
+    codegen'd bit ops. ``radius + 1`` must divide ``bits``. Both join
+    sides project the one hash frame, so the decode+hash pass runs once
+    (see :mod:`~vectra_py_spark.operators.bands`)."""
     from pyspark.sql import functions as F
 
-    n_blocks = radius + 1
-    if bits % n_blocks:
-        raise ValueError(
-            f"radius+1 ({n_blocks}) must divide bits ({bits})"
-        )
-    width = bits // n_blocks
-    mask = (1 << width) - 1
+    geometry = pigeonhole(radius, bits)
     fp = hashes.filter(F.col(fp_col).isNotNull()).select(
         F.col(id_col).alias("id"), F.col(fp_col).alias("fp")
     )
-    # NOTE (r12 audit): both self-join sides derive from this frame,
-    # but no materialization is needed — the join shuffles both sides
-    # by the same key over byte-identical subtrees, so ReuseExchange
-    # computes the decode+hash pass once (A/B-measured on the video
-    # twin: an explicit localCheckpoint here is a net LOSS, it adds a
-    # serial barrier without removing work).
-    blocks = fp.select(
-        "id", "fp",
-        F.explode(
-            F.array(*[F.lit(i) for i in range(n_blocks)])
-        ).alias("block_idx"),
-    ).withColumn(
-        "block_val",
-        F.expr(f"shiftright(fp, {width} * block_idx) & {mask}"),
-    )
-    a = blocks.select(
-        F.col("id").alias("id_a"), F.col("fp").alias("fp_a"),
-        "block_idx", "block_val",
-    )
-    b = blocks.select(
-        F.col("id").alias("id_b"), F.col("fp").alias("fp_b"),
-        "block_idx", "block_val",
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("int")
     return (
-        a.join(b, ["block_idx", "block_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", hamming)
+        band_pairs(block_rows(fp, "fp", geometry), BLOCK_KEY, "id",
+                   {"fp": "fp"})
+        .withColumn("hamming", hamming("fp_a", "fp_b"))
         .filter(F.col("hamming") <= radius)
         .select("id_a", "id_b", "hamming")
         .distinct()
@@ -267,41 +252,6 @@ def phash_neardup_pairs(
 
 
 _PHASH_META_FILE = "_phash_meta.json"
-
-
-def _write_side_meta(spark, path: str, payload: dict) -> None:
-    """Side-file via the Hadoop FS API (any scheme; the ``_`` prefix
-    keeps it out of Spark's parquet listing) — same discipline as
-    ``index.py::_write_meta``."""
-    import json
-
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    out.write(bytearray(json.dumps(payload), "utf-8"))
-    out.close()
-
-
-def _read_side_meta(spark, path: str) -> "dict | None":
-    import json
-
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    reader = jvm.java.io.BufferedReader(
-        jvm.java.io.InputStreamReader(fs.open(jpath), "UTF-8")
-    )
-    chunks = []
-    while True:
-        line = reader.readLine()
-        if line is None:
-            break
-        chunks.append(line)
-    reader.close()
-    return json.loads("".join(chunks))
 
 
 def phash_write_index(
@@ -320,36 +270,15 @@ def phash_write_index(
     at write (small-files discipline)."""
     from pyspark.sql import functions as F
 
-    n_blocks = radius + 1
-    if bits % n_blocks:
-        raise ValueError(
-            f"radius+1 ({n_blocks}) must divide bits ({bits})"
-        )
-    width = bits // n_blocks
-    mask = (1 << width) - 1
-    (
-        hashes.filter(F.col(fp_col).isNotNull())
-        .select(F.col(id_col).alias("media_id"), F.col(fp_col).alias("fp"))
-        .select(
-            "media_id", "fp",
-            F.explode(
-                F.array(*[F.lit(i) for i in range(n_blocks)])
-            ).alias("block_idx"),
-        )
-        .withColumn(
-            "block_val",
-            F.expr(f"shiftright(fp, {width} * block_idx) & {mask}")
-            .cast("int"),
-        )
-        .repartition("block_idx", "block_val")
-        .write.mode("overwrite")
-        .partitionBy("block_idx", "block_val")
-        .parquet(path)
+    geometry = pigeonhole(radius, bits)
+    fp = hashes.filter(F.col(fp_col).isNotNull()).select(
+        F.col(id_col).alias("media_id"), F.col(fp_col).alias("fp")
     )
+    write_band_index(block_rows(fp, "fp", geometry, int_val=True), path, BLOCK_KEY)
     # Persist the layout so a probe can't silently under-recall: a
     # radius-R index only guarantees a shared block for probes with
-    # radius <= R, and nothing else records R (ADVICE r10).
-    _write_side_meta(
+    # radius <= R, and nothing else records R.
+    write_side_file(
         hashes.sparkSession, f"{path}/{_PHASH_META_FILE}",
         {"version": 1, "radius": radius, "bits": bits},
     )
@@ -370,57 +299,22 @@ def phash_probe(
     ≤ the index's write radius (pigeonhole still guarantees a shared
     block); exceeding it would silently drop matches, so the write
     radius persisted by :func:`phash_write_index` is validated here
-    and a too-large probe radius raises (ADVICE r10)."""
-    import functools
-
+    and a too-large probe radius raises."""
     from pyspark.sql import functions as F
 
-    n_blocks = radius + 1
-    if bits % n_blocks:
-        raise ValueError(
-            f"radius+1 ({n_blocks}) must divide bits ({bits})"
-        )
-    meta = _read_side_meta(spark, f"{path}/{_PHASH_META_FILE}")
-    if meta is not None:
-        if radius > int(meta["radius"]):
-            raise ValueError(
-                f"phash_probe: probe radius {radius} exceeds the "
-                f"index's write radius {meta['radius']} — the "
-                "pigeonhole guarantee only covers radius <= write "
-                "radius, so matches would be silently dropped. "
-                "Rebuild the index with a larger radius or probe "
-                "within it."
-            )
-        if bits != int(meta.get("bits", bits)):
-            raise ValueError(
-                f"phash_probe: bits {bits} != index bits {meta['bits']}"
-            )
-        # the partition predicates MUST use the INDEX's block geometry
-        # (its directories were cut with width bits//(write_radius+1));
-        # the probe radius applies only in the Hamming verify below —
-        # probing a radius-3 index at radius 1 with 2×32-bit probe
-        # blocks would match nothing (caught by test_imagehash)
-        n_blocks = int(meta["radius"]) + 1
+    geometry = index_geometry(
+        spark, f"{path}/{_PHASH_META_FILE}", radius, bits, "phash_probe"
+    )
     if isinstance(probe, (bytes, bytearray, memoryview)):
         fp = phash64(_decode_pixels(bytes(probe)))
     else:
         fp = int(probe)
-    width = bits // n_blocks
-    mask = (1 << width) - 1
-    ufp = fp & ((1 << bits) - 1)
-    preds = [
-        (F.col("block_idx") == i)
-        & (F.col("block_val") == ((ufp >> (width * i)) & mask))
-        for i in range(n_blocks)
-    ]
     idx = spark.read.parquet(path).filter(
-        functools.reduce(lambda a, b: a | b, preds)
+        block_predicate(block_keys(fp, bits, geometry))
     )
-    hamming = F.bit_count(
-        F.col("fp").bitwiseXOR(F.lit(fp).cast("long"))
-    ).cast("int")
+    dist = hamming("fp", F.lit(fp).cast("long"))
     return (
-        idx.select("media_id", hamming.alias("hamming"))
+        idx.select("media_id", dist.alias("hamming"))
         .filter(F.col("hamming") <= radius)
         .distinct()
         .orderBy("media_id")

@@ -348,7 +348,7 @@ def host_hits(
         # interval phase): the final a_raw/h_raw feed both the loop and
         # the output join, and with an off-phase interval (e.g. 3 over
         # 10 iterations) the output's localCheckpoint job would re-run
-        # the whole un-truncated tail (ADVICE r12).
+        # the whole un-truncated tail.
         last = i == iterations - 1
         do_ckpt = bool(
             checkpoint_interval
@@ -371,7 +371,7 @@ def host_hits(
         # subtrees in ONE job reuse the exchange), so each iteration is
         # ONE checkpoint job carrying ONE host-sized join per phase —
         # half the checkpoint jobs and half the joins of the old
-        # two-checkpoint shape (guide §1.2; measured on the
+        # two-checkpoint shape (measured on the
         # 10-iteration sf0.1 registry query: 96 → 80 driver jobs
         # counting AQE stage materializations; values agree to the
         # last 1–2 ulps — a summation-order effect — and the 6-dp

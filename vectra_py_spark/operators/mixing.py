@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vectra_py_spark.operators.splits import N_BUCKETS, hash_bucket, hash_bucket_sql
+from vectra_py_spark.session import local_frame
 
 __all__ = [
     "epoch_mix",
@@ -62,7 +63,8 @@ def epoch_mix(
     """(id, stratum, copy_idx) with each row repeated per its stratum's
     epoch weight; weights < 1 downsample (some rows appear 0 times)."""
     spark = df.sparkSession
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [(k, *_base_frac(v)) for k, v in sorted(epochs.items())],
         f"{strat_col} string, base int, frac int",
     )

@@ -510,7 +510,7 @@ _WS = b"\x00\t\n\x0c\r "
 # Per-stream inflate output ceiling: a crafted Flate bomb must raise
 # ValueError (→ quarantine row under extract_pdf_text_df) instead of
 # allocating the full expansion and surfacing as MemoryError — a failed
-# Spark stage (ADVICE r7). 256 MiB decompressed is far past any real
+# Spark stage. 256 MiB decompressed is far past any real
 # content/xref stream while bounded per task.
 DECOMPRESS_CEILING = 256 << 20
 
@@ -937,7 +937,7 @@ class _Pdf:
                 # the scan's ObjStm surfacing ran before the file key
                 # existed, so it inflated still-encrypted bytes and
                 # surfaced nothing — re-run it now that stream bytes
-                # decrypt (ADVICE r8); drop any garbage table a
+                # decrypt; drop any garbage table a
                 # coincidental inflate might have cached
                 self._objstm_cache.clear()
                 self._surface_scanned_objstms()
@@ -1943,7 +1943,7 @@ def pdf_extract_text(
         # a crash. MemoryError deliberately NOT caught: the capped
         # inflate bounds attacker-driven expansion, so an allocation
         # failure here is genuine executor memory pressure and must
-        # not be misreported as data corruption (ADVICE r7).
+        # not be misreported as data corruption.
         raise ValueError(f"malformed PDF payload: {exc}") from exc
 
 

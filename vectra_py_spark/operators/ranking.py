@@ -28,9 +28,10 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vectra_py_spark.operators.text_analysis import words_col, _words_sql
-from vectra_py_spark.session import spread
+from vectra_py_spark.session import hash_buckets, local_frame, spread, xxhash_bucket
 
 __all__ = [
     "bm25_scores",
@@ -169,10 +170,7 @@ def _bm25_postings(
     return (
         toks.groupBy("term", id_col, "dl")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"),
-        )
+        .withColumn("bucket", xxhash_bucket("term", n_buckets))
     )
 
 
@@ -259,24 +257,6 @@ def _sql_str(s: str) -> str:
     """Single-quoted SQL string literal with embedded quotes doubled —
     probe terms are user input ("don't" is an ordinary keyword)."""
     return "'" + s.replace("'", "''") + "'"
-
-
-def _probe_buckets(spark, terms: Sequence[str], n_buckets: int) -> list[int]:
-    """The probed terms' bucket ids via a 1-row Spark job (xxhash64 is
-    JVM-side — reimplementing it driver-side risks divergence; bounded
-    collect, one row per term). Shared by single and batched probes."""
-    # dedupe DRIVER-side: .distinct() added a full exchange to a
-    # job whose input is a handful of literal rows (r12, guide §2.4)
-    return sorted({
-        r["b"]
-        for r in spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-            .cast("int")
-            .alias("b")
-        )
-        .collect()
-    })
 
 
 def _index_stats(spark, path: str) -> DataFrame:
@@ -448,7 +428,7 @@ def bm25_probe(
     corpus-size-independent.
     """
     terms = list(dict.fromkeys(terms))
-    buckets = _probe_buckets(spark, terms, n_buckets)
+    buckets = sorted(set(hash_buckets(spark, terms, T.StringType(), n_buckets)))
     stats = _index_stats(spark, path)
     post = spark.read.parquet(path).filter(
         F.col("bucket").isin(buckets) & F.col("term").isin(terms)
@@ -526,9 +506,9 @@ def bm25_probe_batch(
         (qid, t) for qid, terms in queries.items()
         for t in dict.fromkeys(terms)
     ]
-    qdf = spark.createDataFrame(pairs, "query_id string, term string")
+    qdf = local_frame(spark, pairs, "query_id string, term string")
     all_terms = sorted({t for _, t in pairs})
-    buckets = _probe_buckets(spark, all_terms, n_buckets)
+    buckets = sorted(set(hash_buckets(spark, all_terms, T.StringType(), n_buckets)))
     stats = _index_stats(spark, path)
     post = spark.read.parquet(path).filter(
         F.col("bucket").isin(buckets) & F.col("term").isin(all_terms)

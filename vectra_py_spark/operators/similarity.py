@@ -42,6 +42,7 @@ from vectra_py_spark.functions.vector import (
     dot,
     vector_literal,
 )
+from vectra_py_spark.operators.bands import band_pairs
 from vectra_py_spark.session import spread
 
 __all__ = [
@@ -527,13 +528,7 @@ def lsh_similarity_join(
     sig = _lsh_signatures(
         df, planes, bits_per_table, id_col, vector_col
     ).cache()
-    a = sig.select(F.col("vid").alias("id_a"), "key")
-    b = sig.select(F.col("vid").alias("id_b"), "key")
-    cand = (
-        a.join(b, "key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
+    cand = band_pairs(sig, ["key"], "vid").select("id_a", "id_b")
 
     if verify == "join":
         cand = cand.distinct()
@@ -1075,7 +1070,7 @@ def group_centroids(
     return (
         # spread BEFORE the explode: the repartition moves compact
         # vector rows, not the ×dim exploded stream, and the explode +
-        # partial aggregation then run on every core (r12; no-op at
+        # partial aggregation then run on every core (no-op at
         # real scale where the scan arrives as many splits)
         spread(df.select(group_col, vector_col))
         .select(
@@ -1207,23 +1202,9 @@ def semantic_dedup(
             F.col(vector_col).alias("__vec"),
             F.sqrt(dot(F.col(vector_col), F.col(vector_col))).alias("__nrm"),
         )
-        a = slim.select(
-            F.col("cell").alias("ca"),
-            F.col("__id").alias("id_a"),
-            F.col("__vec").alias("va"),
-            F.col("__nrm").alias("na"),
-        )
-        b = slim.select(
-            F.col("cell").alias("cb"),
-            F.col("__id").alias("id_b"),
-            F.col("__vec").alias("vb"),
-            F.col("__nrm").alias("nb"),
-        )
-        cos = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+        cos = dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b"))
         dropped_df = (
-            a.join(
-                b, (F.col("ca") == F.col("cb")) & (F.col("id_a") < F.col("id_b"))
-            )
+            band_pairs(slim, ["cell"], "__id", {"__vec": "v", "__nrm": "n"})
             .filter(F.round(cos, _DP) >= threshold)
             .select(F.col("id_b").alias("did"))
             .distinct()
@@ -1909,11 +1890,11 @@ def margin_bitext_mine_sharded(
     # loop called margin_bitext_mine per pair, which re-ran the size
     # aggregate AND the collect for both sides of every pair — an
     # src_shards×tgt_shards grid paid 2·P·(agg+collect) driver jobs
-    # for P pairs where S+T suffice (guide §1.2: don't recompute what
-    # a pass already produced). Outputs are unchanged: each pair still
+    # for P pairs where S+T suffice (don't recompute what a pass
+    # already produced). Outputs are unchanged: each pair still
     # mines from exactly its shards' vectors with shard-pair margins.
     #
-    # r12 refinement: ONE size aggregate and ONE collect per SIDE —
+    # ONE size aggregate and ONE collect per SIDE —
     # the shard column rides along and the driver splits the arrays —
     # instead of per-shard jobs (n scans of the side each). The driver
     # memory envelope is unchanged: the per-shard variant already held

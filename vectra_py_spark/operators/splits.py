@@ -45,6 +45,7 @@ from vectra_py_spark.operators.dedup import (
     shingle_df,
     shingle_df_with_sizes,
 )
+from vectra_py_spark.session import local_frame
 
 __all__ = [
     "source_quota",
@@ -149,7 +150,8 @@ def stratified_sample(
     the filter stays a narrow map over the scan.
     """
     spark = df.sparkSession
-    cut_df = spark.createDataFrame(
+    cut_df = local_frame(
+        spark,
         [(k, v) for k, v in sorted(cuts.items())],
         f"{strat_col} string, cut int",
     )
@@ -382,7 +384,7 @@ def bloom_decontaminate(
         p = int(r["pos"])
         words[p >> 6] |= 1 << (p & 63)
     words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-    bloom_row = spark.createDataFrame([(words,)], "bloom: array<bigint>")
+    bloom_row = local_frame(spark, [(words,)], "bloom: array<bigint>")
     corpus_sh = shingle_df_with_sizes(corpus, id_col, text_col, k)
     candidates = corpus_sh.crossJoin(F.broadcast(bloom_row)).filter(
         F.expr(bloom_membership_expr())

@@ -142,8 +142,8 @@ def align_cues_to_frames(
     both inputs already carry the id, so this is ONE shuffle on the
     key both tables are naturally partitioned by, never a range scan.
 
-    ``id_col`` names the media id on BOTH sides (ADVICE r11 — it used
-    to apply to frames only). ``cues`` needs (id_col, cue_idx,
+    ``id_col`` names the media id on BOTH sides (it used to apply to
+    frames only). ``cues`` needs (id_col, cue_idx,
     start_ms, end_ms, cue_text); if it also carries an ``error``
     column (``subtitle_cues_df`` output does), errored parses are
     dropped before the join, otherwise all rows participate.

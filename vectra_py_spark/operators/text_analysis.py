@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from vectra_py_spark.session import spread
+from vectra_py_spark.session import local_frame, spread
 
 __all__ = [
     "words_col",
@@ -102,7 +102,7 @@ def bigrams_col(words: Column) -> Column:
     )
 
 
-# Optimization note (r12, guide §1.2 "don't compute things twice"):
+# Optimization note (don't compute things twice):
 # every signal expression below references its words/bigrams arrays
 # several times, and these HOF-bearing expressions are evaluated
 # interpreted (no whole-stage codegen, no runtime subexpression
@@ -1224,8 +1224,8 @@ def bpe_train(
         merges, _seg_rows = _bpe_loop_local(
             [(r.word, r.cnt) for r in rows], n_rounds
         )
-    return df.sparkSession.createDataFrame(
-        merges, "round INT, lhs STRING, rhs STRING, n BIGINT"
+    return local_frame(
+        df.sparkSession, merges, "round INT, lhs STRING, rhs STRING, n BIGINT"
     )
 
 
@@ -1275,9 +1275,7 @@ def bpe_vocab_usage(
             for s in syms:
                 usage[s] = usage.get(s, 0) + cnt
         out = sorted(usage.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-    return df.sparkSession.createDataFrame(
-        out, "sym STRING, n BIGINT"
-    )
+    return local_frame(df.sparkSession, out, "sym STRING, n BIGINT")
 
 
 def _bpe_cte_parts(

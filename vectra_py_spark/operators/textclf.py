@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectra_py_spark.session import local_frame
+
 __all__ = [
     "hashed_features",
     "train_logreg",
@@ -122,7 +124,7 @@ def train_logreg(
     n = y.count()
     if n == 0:
         raise ValueError("train_logreg: empty label set")
-    w = x.sparkSession.createDataFrame([], "idx LONG, w DOUBLE")
+    w = local_frame(x.sparkSession, [], "idx LONG, w DOUBLE")
     for i in range(iterations):
         margins = (
             # the model is active-feature-sized; without the hint the

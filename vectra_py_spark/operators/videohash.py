@@ -21,9 +21,10 @@ Published constructions composed (nothing novel invented here):
   indices instead of STFT frames.
 - **Candidate generation**: pigeonhole block-banding of the 64-bit
   frame hash (split into ``radius+1`` blocks; Hamming ≤ radius ⇒ ≥1
-  exact block match) — the `imagehash.phash_neardup_pairs` /
-  `dedup.simhash_neardup` construction, so the frame-pair join is an
-  EQUI-join carrying 8-byte fingerprints, never a cartesian.
+  exact block match) — the `bands` kernel that
+  `imagehash.phash_neardup_pairs` and `dedup.simhash_neardup` share,
+  so the frame-pair join is an EQUI-join carrying 8-byte
+  fingerprints, never a cartesian.
 
 100 TB notes: the hash pass is a narrow per-payload scan (payloads
 never shuffle; only (id, frame_idx, int64) rows do — ~10⁵-10⁶× smaller
@@ -40,6 +41,20 @@ re-expressed for the video modality.
 from __future__ import annotations
 
 import numpy as np
+
+from vectra_py_spark.operators.bands import (
+    BLOCK_KEY,
+    band_pairs,
+    best_offset,
+    block_keys,
+    block_predicate,
+    block_rows,
+    hamming,
+    index_geometry,
+    pigeonhole,
+    write_band_index,
+)
+from vectra_py_spark.session import local_frame, write_side_file
 
 __all__ = [
     "video_frame_hashes",
@@ -120,36 +135,15 @@ def video_phash_df(
     )
 
 
-def _frame_blocks(fh, radius: int, bits: int, id_col: str):
+def _frame_blocks(fh, geometry, id_col: str):
     """Frame hashes → exploded pigeonhole block rows (id, frame_idx,
     fp, block_idx, block_val)."""
     from pyspark.sql import functions as F
 
-    n_blocks = radius + 1
-    if bits % n_blocks:
-        raise ValueError(
-            f"radius+1 ({n_blocks}) must divide bits ({bits})"
-        )
-    width = bits // n_blocks
-    mask = (1 << width) - 1
-    return (
-        fh.filter(F.col("phash").isNotNull())
-        .select(
-            F.col(id_col).alias("id"), "frame_idx",
-            F.col("phash").alias("fp"),
-        )
-        .select(
-            "id", "frame_idx", "fp",
-            F.explode(
-                F.array(*[F.lit(i) for i in range(n_blocks)])
-            ).alias("block_idx"),
-        )
-        .withColumn(
-            "block_val",
-            F.expr(f"shiftright(fp, {bits // n_blocks} * block_idx) "
-                   f"& {mask}"),
-        )
+    fp = fh.filter(F.col("phash").isNotNull()).select(
+        F.col(id_col).alias("id"), "frame_idx", F.col("phash").alias("fp"),
     )
+    return block_rows(fp, "fp", geometry)
 
 
 def video_match_pairs(
@@ -167,12 +161,17 @@ def video_match_pairs(
 
     Plan: block equi-join on (block_idx, block_val) → codegen'd
     ``bit_count(xor) <= radius`` verify → ONE (pair, offset) aggregate
-    → per-pair argmax window. ``distinct_hashes_only`` keeps each
-    clip's first occurrence of a repeated hash (static-scene skew
-    relief) at the cost of alignment counts for still sections."""
+    → per-pair argmax window. Both join sides project the one
+    decode+hash pass, which ReuseExchange computes once (an explicit
+    ``localCheckpoint`` measured 3.2-3.5 s → 3.6-4.1 s at sf0.1: a
+    serial barrier that removes no work). ``distinct_hashes_only``
+    keeps each clip's first occurrence of a repeated hash
+    (static-scene skew relief) at the cost of alignment counts for
+    still sections."""
     from pyspark.sql import functions as F
     from pyspark.sql import Window
 
+    geometry = pigeonhole(radius, bits)
     if distinct_hashes_only:
         w_first = Window.partitionBy(id_col, "phash").orderBy("frame_idx")
         fh = (
@@ -180,41 +179,19 @@ def video_match_pairs(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-    # NOTE (r12 audit): both sides of the block self-join derive from
-    # the decode+hash pass, but the join shuffles both sides by the
-    # same key over byte-identical subtrees, so ReuseExchange computes
-    # the pass once. A/B-measured: an explicit localCheckpoint here is
-    # a net LOSS (3.2-3.5 s -> 3.6-4.1 s at sf0.1) — it adds a serial
-    # materialization barrier without removing any work.
-    blocks = _frame_blocks(fh, radius, bits, id_col)
-    a = blocks.select(
-        F.col("id").alias("id_a"), F.col("frame_idx").alias("f_a"),
-        F.col("fp").alias("fp_a"), "block_idx", "block_val",
-    )
-    b = blocks.select(
-        F.col("id").alias("id_b"), F.col("frame_idx").alias("f_b"),
-        F.col("fp").alias("fp_b"), "block_idx", "block_val",
-    )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
     cand = (
-        a.join(b, ["block_idx", "block_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(hamming <= radius)
+        band_pairs(
+            _frame_blocks(fh, geometry, id_col), BLOCK_KEY, "id",
+            {"frame_idx": "f", "fp": "fp"},
+        )
+        .filter(hamming("fp_a", "fp_b") <= radius)
         # one frame pair may share several blocks — dedupe before the
         # offset count or multi-block agreement inflates n_aligned
         .select("id_a", "id_b", "f_a", "f_b")
         .distinct()
     )
-    aligned = cand.groupBy(
-        "id_a", "id_b", (F.col("f_a") - F.col("f_b")).alias("offset")
-    ).agg(F.count(F.lit(1)).cast("int").alias("n_aligned"))
-    w = Window.partitionBy("id_a", "id_b").orderBy(
-        F.desc("n_aligned"), F.asc("offset")
-    )
-    return (
-        aligned.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("n_aligned") >= min_aligned))
-        .select("id_a", "id_b", "offset", "n_aligned")
+    return best_offset(
+        cand, ["id_a", "id_b"], F.col("f_a") - F.col("f_b"), min_aligned
     )
 
 
@@ -231,20 +208,15 @@ def video_write_index(
     and are validated at probe time (the imagehash discipline)."""
     from pyspark.sql import functions as F
 
-    from vectra_py_spark.operators.imagehash import _write_side_meta
-
-    blocks = _frame_blocks(fh, radius, bits, id_col)
-    (
+    blocks = _frame_blocks(fh, pigeonhole(radius, bits), id_col)
+    write_band_index(
         blocks.select(
             F.col("id").alias("media_id"), "frame_idx", "fp",
             "block_idx", F.col("block_val").cast("int").alias("block_val"),
-        )
-        .repartition("block_idx", "block_val")
-        .write.mode("overwrite")
-        .partitionBy("block_idx", "block_val")
-        .parquet(path)
+        ),
+        path, BLOCK_KEY,
     )
-    _write_side_meta(
+    write_side_file(
         fh.sparkSession, f"{path}/{_VIDEO_META_FILE}",
         {"version": 1, "radius": radius, "bits": bits},
     )
@@ -269,35 +241,11 @@ def video_probe(
     with :func:`video_match_pairs` — scaled internally by the probe
     stride; the output reports the stride and the extrapolated count
     (the audiofp probe accounting, applied from day one here)."""
-    import functools
-
     from pyspark.sql import functions as F
-    from pyspark.sql import Window
 
-    from vectra_py_spark.operators.imagehash import _read_side_meta
-
-    n_blocks = radius + 1
-    if bits % n_blocks:
-        raise ValueError(
-            f"radius+1 ({n_blocks}) must divide bits ({bits})"
-        )
-    meta = _read_side_meta(spark, f"{path}/{_VIDEO_META_FILE}")
-    if meta is not None:
-        if radius > int(meta["radius"]):
-            raise ValueError(
-                f"video_probe: probe radius {radius} exceeds the "
-                f"index's write radius {meta['radius']} — matches "
-                "would be silently dropped. Rebuild the index with a "
-                "larger radius or probe within it."
-            )
-        if bits != int(meta.get("bits", bits)):
-            raise ValueError(
-                f"video_probe: bits {bits} != index bits {meta['bits']}"
-            )
-        # partition predicates use the INDEX's block geometry; the
-        # probe radius applies only in the Hamming verify (see
-        # imagehash.phash_probe)
-        n_blocks = int(meta["radius"]) + 1
+    geometry = index_geometry(
+        spark, f"{path}/{_VIDEO_META_FILE}", radius, bits, "video_probe"
+    )
     _EMPTY = (
         "media_id STRING, offset INT, n_aligned INT, "
         "stride INT, n_aligned_est INT"
@@ -309,45 +257,27 @@ def video_probe(
         probe_fps = probe_fps[::probe_stride]
     eff_min = max(1, min_aligned // (probe_stride * stride))
     if not probe_fps:
-        return spark.createDataFrame([], _EMPTY)
+        return local_frame(spark, [], _EMPTY)
 
-    width = bits // n_blocks
-    mask = (1 << width) - 1
     # block predicates are pure driver arithmetic — no Spark job
-    wanted = set()
-    for _fi, fp in probe_fps:
-        ufp = fp & ((1 << bits) - 1)
-        for i in range(n_blocks):
-            wanted.add((i, (ufp >> (width * i)) & mask))
-    preds = [
-        (F.col("block_idx") == i) & (F.col("block_val") == v)
-        for i, v in sorted(wanted)
-    ]
-    idx = spark.read.parquet(path).filter(
-        functools.reduce(lambda x, y: x | y, preds)
-    )
-    probe_df = spark.createDataFrame(
+    wanted = {k for _fi, fp in probe_fps for k in block_keys(fp, bits, geometry)}
+    idx = spark.read.parquet(path).filter(block_predicate(sorted(wanted)))
+    probe_df = local_frame(
+        spark,
         [(int(fi), int(np.int64(fp))) for fi, fp in probe_fps],
         "f_probe INT, fp_probe BIGINT",
     )
-    hamming = F.bit_count(F.col("fp").bitwiseXOR(F.col("fp_probe")))
-    aligned = (
-        idx.join(F.broadcast(probe_df), hamming <= radius)
+    matches = (
+        idx.join(F.broadcast(probe_df), hamming("fp", "fp_probe") <= radius)
         .select("media_id", "frame_idx", "f_probe", "fp", "fp_probe")
         .distinct()  # a frame pair can share several blocks
-        .groupBy(
-            "media_id",
-            (F.col("frame_idx") - F.col("f_probe")).alias("offset"),
-        )
-        .agg(F.count(F.lit(1)).cast("int").alias("n_aligned"))
-    )
-    w = Window.partitionBy("media_id").orderBy(
-        F.desc("n_aligned"), F.asc("offset")
     )
     total_stride = probe_stride * stride
     return (
-        aligned.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("n_aligned") >= eff_min))
+        best_offset(
+            matches, ["media_id"], F.col("frame_idx") - F.col("f_probe"),
+            eff_min,
+        )
         .select(
             "media_id", "offset", "n_aligned",
             F.lit(total_stride).cast("int").alias("stride"),

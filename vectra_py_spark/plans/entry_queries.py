@@ -46,7 +46,7 @@ from vectra_py_spark.plans.relational import (
     RELATIONAL_ORACLES,
     RELATIONAL_QUERIES,
 )
-from vectra_py_spark.session import spread
+from vectra_py_spark.session import local_frame, spread
 from vectra_py_spark.streaming import events as ev
 from vectra_py_spark.streaming.events import event_time_col as _t_us
 from vectra_py_spark.text.splitter import split_documents
@@ -494,7 +494,7 @@ def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     w = Window.partitionBy(F.md5(F.col("text")))
-    # Stage the words/bigrams arrays ONCE per row (r12, guide §1.2):
+    # Stage the words/bigrams arrays ONCE per row:
     # the three signal expressions reference them ~25 times between
     # them, and HOF-bearing projections evaluate interpreted with no
     # subexpression elimination — inlining re-split the text per
@@ -850,7 +850,7 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output is posexploded to scalar ``(vec_id, dim, value)`` rows: the
     driver's canonicalizer row-sorts a pandas frame and cannot hash
-    array cells (r2 recorded an ``err`` for the array-shaped output).
+    array cells (the array-shaped output recorded an ``err``).
     ``project_expr`` itself still returns the array column for library
     users."""
     from vectra_py_spark.functions.vector import project_expr
@@ -1723,8 +1723,7 @@ def q_mp4_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     :mod:`operators.mp4`) and sampled with
     :func:`sample_mp4_frames`. Both containers must hit the SAME
     closed-form oracle — container-independence of the frame pipeline,
-    value-checked cross-engine. Registered below the driver window
-    (rotation budget spent); rotates in r8."""
+    value-checked cross-engine. Registered below the driver window."""
     docs = (
         load(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < _MJPEG_DOCS)
@@ -1890,7 +1889,7 @@ def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     and byte sums. The oracle recomputes the pattern in SQL — record
     framing, Content-Length bookkeeping, the HTTP header peel, and the
     multi-member gzip path are value-checked cross-engine. Registered
-    below the driver window; rotates in r8.
+    below the driver window.
 
     Plan shape: pushed-down filter → one narrow ``mapInPandas``;
     bounded per-row work, linear scale-out (binaryFile-per-archive is
@@ -2317,10 +2316,8 @@ def q_recrawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, the tz-free epoch arithmetic, and the
     change_rate·ln(1+age) priority are value-checked cross-engine.
 
-    PRE-STAGED for the round-10 registry window (round 9's ≤2
-    new-entry budget was spent on office_documents/url_canonical);
-    validated now by tests/test_prestaged_oracle.py through the
-    driver's exact compare harness.
+    Validated by tests/test_prestaged_oracle.py through the driver's
+    exact compare harness.
 
     Plan shape: pushed-down filter → explode(sequence) → ONE hash
     aggregate on the surt key; index-sized, never archive-sized."""
@@ -2433,9 +2430,8 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     damping mix are value-checked cross-engine, iteration by
     iteration in one statement.
 
-    PRE-STAGED for the round-10 registry window (round 9's ≤2
-    new-entry budget spent); validated by
-    tests/test_prestaged_oracle.py via the driver's compare harness.
+    Validated by tests/test_prestaged_oracle.py via the driver's
+    compare harness.
 
     Plan shape: projection → host-pair aggregate → N (join + agg)
     rounds on the HOST-sized graph; the corpus never re-enters."""
@@ -2550,8 +2546,8 @@ def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     segmentation, every density feature, the context pass, and the
     heading rescue are value-checked cross-engine on every row.
 
-    PRE-STAGED for the round-10 registry window; validated by
-    tests/test_prestaged_oracle.py via the driver's compare harness.
+    Validated by tests/test_prestaged_oracle.py via the driver's
+    compare harness.
 
     Plan shape: projection → one narrow Arrow pass; payloads never
     shuffle (the 100 TB shape of every extractor here)."""
@@ -2641,8 +2637,8 @@ def q_page_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag are value-checked cross-engine without the oracle touching a
     regex.
 
-    PRE-STAGED for the round-10 registry window; validated by
-    tests/test_prestaged_oracle.py via the driver's compare harness.
+    Validated by tests/test_prestaged_oracle.py via the driver's
+    compare harness.
 
     Plan shape: one codegen'd projection (plan-pinned UDF-free in
     test_pagemeta.py); nothing shuffles."""
@@ -2923,7 +2919,7 @@ def q_textclf_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, margin, prob, predicted). Weights are dyadic rationals,
     so margin = 2·g − 1.5·p + 0.25 is EXACT on both engines; prob
     rounds the one transcendental (sigmoid) to 6 dp — the float-parity
-    discipline COVERAGE's r9 note asked for.
+    discipline COVERAGE.md asks for.
 
     Plan shape: projection → explode → count aggregate → broadcast
     join with the feature-sized model → one margin aggregate — the
@@ -2948,14 +2944,15 @@ def q_textclf_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     feat = hashed_features(docs, n_features=_CLF_FEATURES)
     spark_ = docs.sparkSession
-    weights = spark_.createDataFrame(
-        [("good", _CLF_W_GOOD), ("spam", _CLF_W_SPAM)], "g STRING, w DOUBLE"
+    weights = local_frame(
+        spark_, [("good", _CLF_W_GOOD), ("spam", _CLF_W_SPAM)],
+        "g STRING, w DOUBLE",
     ).select(
         F.pmod(F.xxhash64("g"), F.lit(_CLF_FEATURES)).cast("long").alias("idx"),
         "w",
     ).union(
-        spark_.createDataFrame([(int(BIAS_IDX), _CLF_W_BIAS)],
-                               "idx LONG, w DOUBLE")
+        local_frame(spark_, [(int(BIAS_IDX), _CLF_W_BIAS)],
+                    "idx LONG, w DOUBLE")
     )
     scored = score_logreg(feat, weights)
     return scored.select(
@@ -3791,7 +3788,7 @@ def q_audio_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole chain in SQL — the downmix mean, the half-away rounding, the
     pre-round trim comparison (|c0+c1| ≥ 66), and the kept-range
     bookkeeping are all value-checked cross-engine. Registered below
-    the driver window; rotates in r8.
+    the driver window.
 
     Plan shape: pushed-down filter → two narrow ``mapInPandas`` stages
     around the transform; bounded per-row work, linear scale-out."""
@@ -3984,7 +3981,7 @@ def q_media_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     GIF block-skip frame counter and the MP3 frame-chain walk) are
     value-checked cross-engine in one entry. Missing fields use a −1
     sentinel (NULL-free cross-engine hashing). Registered below the
-    driver window; rotates in r8.
+    driver window.
 
     Plan shape: pushed-down filter → two chained narrow ``mapInPandas``
     stages; bounded per-row work, linear scale-out."""
@@ -5856,9 +5853,9 @@ def q_content_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PRE-STAGED round-12 entries, continued (round-11 operators): written
-# and harness-validated (tests/test_prestaged_oracle.py) one round
-# before registration, per the COVERAGE.md budget policy.
+# Pre-staged entries, continued: written and harness-validated
+# (tests/test_prestaged_oracle.py) before registration, per the
+# COVERAGE.md budget policy.
 # ---------------------------------------------------------------------------
 
 _PAIR_DOCS = 300
@@ -6897,9 +6894,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "host_pagerank": q_host_pagerank,
     "main_content": q_main_content,
     "page_metadata": q_page_metadata,
-    # round-11 registrations — all pre-staged + harness-validated at
-    # both SFs in round 10 (tests/test_prestaged_oracle.py), so exempt
-    # from the unstaged ≤2-new-entry cap (COVERAGE.md budget policy)
+    # pre-staged + harness-validated at both SFs before registration
+    # (tests/test_prestaged_oracle.py; COVERAGE.md budget policy)
     "html_tables": q_html_tables,
     "mojibake_repair": q_mojibake_repair,
     "textclf_score": q_textclf_score,
@@ -6911,11 +6907,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "image_neardup": q_image_neardup,
     "audio_neardup": q_audio_neardup,
     "fetch_schedule": q_fetch_schedule,
-    # round-12 registrations — all pre-staged + harness-validated at
-    # both SFs in round 11 (tests/test_prestaged_oracle.py), so exempt
-    # from the unstaged ≤2-new-entry cap (COVERAGE.md budget policy);
-    # each is paired with a subsumption retirement below (the r11
-    # pairing policy): 6 in, 3 out → registry 175.
+    # pre-staged the same way; each is paired with a subsumption
+    # retirement below (COVERAGE.md pairing policy)
     "video_neardup": q_video_neardup,
     "bitext_shards": q_bitext_shards,
     "image_text_pairs": q_image_text_pairs,
@@ -6926,48 +6919,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 # ---------------------------------------------------------------------------
-# Retired registry entries.
-#
-# At 180 registered entries a 50-slot driver window can no longer honor
-# the N−3 staleness SLO once anything new is added (the rotation backlog
-# grows by one permanently per net addition). Resolution, recorded in
-# COVERAGE.md's ledger: retire the eight entries whose driver evidence is
-# STRICTLY SUBSUMED by a registered superset entry — the operator, its
-# unit/property tests, and its local oracle sweep all stay; only the
-# driver-window slot is released (precedent: lsh_neardup's r7 demotion).
-#
-#   mp4_sample          — oracle literally shared with mjpeg_sample
-#                         (registered); MP4 container walk evidenced by
-#                         media_probe + media_triage
-#   bm25_probe          — the n=1 special case of bm25_batch_probe
-#   pq_topk             — the oversample=1, no-rerank prefix of pq_rerank
-#                         (same ADC scan); IVF-PQ variant registered
-#   simhash_fingerprint — consumed verbatim by simhash_neardup
-#   winnow_fingerprints — consumed verbatim by winnow_matches /
-#                         winnow_probe / winnow_contamination / span_cut
-#   bpe_pair_counts     — round 0 of bpe_train_rounds
-#   lm_quality          — consumed verbatim by lm_quality_cut
-#   events_windowed     — tumbling = sliding with step == width
-#                         (events_sliding registered)
-#
-# Further retirements (the pairing policy's
-# three named candidates, each strictly subsumed by a registered
-# superset entry; ledger rows in COVERAGE.md):
-#
-#   winnow_probe  — the probe's fingerprint math is consumed verbatim
-#                   by winnow_matches / winnow_contamination / span_cut
-#                   (all registered); the index-prune plan shape stays
-#                   pinned in PLANS.json + test_operators.py
-#   minhash_probe — ⊂ minhash_lsh_neardup (registered) + the index
-#                   plan pins; probe-vs-full-scan equivalence tested in
-#                   test_operators.py::test_minhash_index_probe_*
-#   ann_topk      — hyperplane-LSH top-k; ANN serving evidence carried
-#                   by ivf_topk / ivfpq_topk / quantized_topk / pq_rerank
-#                   (all registered), recall-vs-exact in test_operators
-#
-# tests/test_entry_oracle.py sweeps these at both SFs every round with
-# the driver's exact compare harness, so their correctness evidence
-# continues uninterrupted — it is just local, not driver-recorded.
+# Retired registry entries: each one's answer is strictly subsumed by a
+# registered superset entry (COVERAGE.md keeps the ledger row naming
+# it). The operator, its tests and its local oracle sweep
+# (tests/test_entry_oracle.py, both scale factors) all stay; only the
+# driver-window slot is released.
 # ---------------------------------------------------------------------------
 RETIRED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "mp4_sample": QUERIES.pop("mp4_sample"),
@@ -6978,50 +6934,19 @@ RETIRED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "bpe_pair_counts": QUERIES.pop("bpe_pair_counts"),
     "lm_quality": QUERIES.pop("lm_quality"),
     "events_windowed": QUERIES.pop("events_windowed"),
-    # round 12
     "winnow_probe": QUERIES.pop("winnow_probe"),
     "minhash_probe": QUERIES.pop("minhash_probe"),
     "ann_topk": QUERIES.pop("ann_topk"),
 }
 
 # ---------------------------------------------------------------------------
-# Driver check-window ordering.
-#
-# The correctness driver oracles only the FIRST 50 registry entries per
-# round, so registry order is evidence policy: queries that most need a
-# fresh driver row go first. The rotation leads with the 28 surviving
-# r9-vintage rows — the
-# staleness-SLO edge at round 13 (r9 = N−4 without a fresh row) — in
-# CORRECTNESS_r09 recording order, then the NINE queries whose plans
-# were restructured in the r12 optimization round without landing in
-# the r12 driver window (so every r12 restructure gets driver
-# hash-match evidence), then the first 13 remaining r10-vintage rows
-# in CORRECTNESS_r10 recording order.
-# Registry arithmetic after this round (artifact-derived: vintages are
-# "newest CORRECTNESS_rNN containing the entry"): 175 registered
-# (173 oracle-able, doc_chunks/ingest_pipeline rows-only) = 50 r13 +
-# 50 r12-vintage + 42 r11 + 31 r10. The 31 r10 rows (big_spenders'
-# block tail: recrawl_priority, main_content, page_metadata,
-# mjpeg_sample, chunk_spans_simple, batch_topk, excess_suppliers,
-# minhash_lsh_neardup, gopher_quality, c4_line_stats, line_dedup,
-# length_trim, unimax_mix, domain_mix, oov_rate, nfc_normalize,
-# ivfpq_topk, label_outliers, word_entropy, dup_rate_by_source,
-# pq_rerank, corpus_diff, content_checksum, local_supplier_volume,
-# skew_report, embedding_coverage, tokenizer_fertility, span_cut,
-# encoding_report, bm25_batch_probe, hybrid_probe) are exactly N−3 at
-# round 13 and MUST lead round 14's window; the remaining 19 r14
-# slots start the 42-row r11 block, whose tail needs either the
-# standing 60-slot driver ask or round 15 (arithmetic in COVERAGE.md).
-# This round registers NOTHING (optimization round — the five
-# pre-staged r13 entries stay pre-staged; registration is feature
-# work).
-# Staleness SLO: see COVERAGE.md — no entry's newest evidence older
-# than N-3 rounds.
+# Driver check-window ordering. The correctness driver oracles only the
+# first 50 registry entries, so registry order is evidence policy: the
+# entries whose newest driver evidence is oldest go first. COVERAGE.md
+# keeps the ledger (each entry's vintage, the staleness SLO and the
+# rotation arithmetic) that decides this order.
 # ---------------------------------------------------------------------------
 _CHECK_FIRST: list[str] = [
-    # The check window, in order:
-    # (a) the 28 r9-vintage survivors — exactly N−3 at r12, the SLO
-    # edge this round — in CORRECTNESS_r09 recording order;
     "lloyd_kmeans",
     "tfidf_top_terms",
     "pmi_collocations",
@@ -7050,12 +6975,6 @@ _CHECK_FIRST: list[str] = [
     "viewers_not_purchasers",
     "daily_rolling",
     "late_ship_priority",
-    # (b) the nine queries whose load-bearing plans were restructured
-    # in the r12 optimization round but sat OUTSIDE the r12 driver
-    # window — their r12 oracle evidence is builder-local only, and
-    # the restructures need driver hash-match confirmation
-    # (host_pagerank and curation_funnel are additionally r10-vintage,
-    # so their slots also advance the r10 block);
     "host_hits",
     "host_pagerank",
     "lsh_neardup_strict",
@@ -7065,9 +6984,6 @@ _CHECK_FIRST: list[str] = [
     "textclf_score",
     "bitext_mine",
     "winnow_contamination",
-    # (c) the first 13 remaining r10-vintage rows in CORRECTNESS_r10
-    # recording order (r10 block: 46 live rows − 2 covered via (b) −
-    # these 13 = 31 left, which MUST lead round 14's window).
     "big_spenders",
     "dml_insert",
     "dml_upsert",
@@ -7260,7 +7176,7 @@ ORACLES: dict[str, str] = {
     "host_pagerank": _sql_host_pagerank(),
     "main_content": _sql_main_content(),
     "page_metadata": _sql_page_metadata(),
-    # round-11 registrations (pre-staged + harness-validated in r10)
+    # pre-staged + harness-validated before registration
     "html_tables": _sql_html_tables(),
     "mojibake_repair": _sql_mojibake_repair(),
     "textclf_score": _sql_textclf_score(),
@@ -7272,7 +7188,7 @@ ORACLES: dict[str, str] = {
     "image_neardup": _sql_image_neardup(),
     "audio_neardup": _sql_audio_neardup(),
     "fetch_schedule": _sql_fetch_schedule(),
-    # round-12 registrations (pre-staged + harness-validated in r11)
+    # pre-staged + harness-validated before registration
     "video_neardup": _sql_video_neardup(),
     "bitext_shards": _sql_bitext_shards(),
     "image_text_pairs": _sql_image_text_pairs(),

@@ -79,10 +79,12 @@ def get_spark(
 
 
 def local_frame(spark: SparkSession, rows, schema):
-    """Driver rows (dicts, or an Arrow table whose columns are already in
-    the schema's order) + a declared schema → a DataFrame that plans as
+    """Driver rows (dicts, tuples in the schema's order, or an Arrow
+    table whose columns are already in that order) + a declared schema
+    (a ``StructType`` or DDL string) → a DataFrame that plans as
     ``LocalTableScan``, so projections over it fold on the driver and
-    collecting them runs no job.
+    collecting them runs no job. This is the one driver-rows → DataFrame
+    path in the package.
 
     Dict rows become an Arrow table with the schema's own types (nullable
     int64 for BIGINT, maps as maps), which Spark plans as a local
@@ -96,10 +98,89 @@ def local_frame(spark: SparkSession, rows, schema):
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     if not isinstance(rows, pa.Table):
-        rows = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
+        rows = pa.Table.from_pylist(
+            [r if isinstance(r, dict) else dict(zip(schema.names, r))
+             for r in rows],
+            schema=to_arrow_schema(schema),
+        )
     return spark.createDataFrame(rows, schema)
+
+
+def xxhash_bucket(col, n_buckets: int):
+    """``pmod(xxhash64(col), n_buckets)`` as INT: the bucket every
+    hashed layout (the vector index, the band and postings indexes)
+    partitions by. A deterministic Spark built-in, so every writer
+    computes the same placement JVM-side."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+
+
+def hash_buckets(spark: SparkSession, values, data_type, n_buckets: int) -> list[int]:
+    """:func:`xxhash_bucket` of each driver value, in input order,
+    projected over a :func:`local_frame`, which folds on the driver: no
+    Spark job runs and no Python copy of the hash can diverge. This is
+    how a probe turns its keys into partition coordinates."""
+    from pyspark.sql.types import StructField, StructType
+
+    schema = StructType([StructField("k", data_type, True)])
+    frame = local_frame(spark, [{"k": v} for v in values], schema)
+    return [int(r[0]) for r in frame.select(xxhash_bucket("k", n_buckets)).collect()]
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` through the Hadoop FS API, so
+    side files and directory deletes work on any scheme."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
+
+
+def write_side_file(spark: SparkSession, path: str, payload: dict) -> None:
+    """A table's JSON side file (layout pins, index geometry), written
+    via the Hadoop FS API so any scheme works (file/hdfs/s3a); a ``_``
+    name prefix keeps it out of Spark's parquet listing."""
+    import json
+
+    fs, jpath = hadoop_fs(spark, path)
+    out = fs.create(jpath, True)
+    try:
+        out.write(bytearray(json.dumps(payload), "utf-8"))
+    finally:
+        out.close()
+
+
+def read_side_file(spark: SparkSession, path: str) -> "dict | None":
+    """The JSON object a :func:`write_side_file` left at ``path``, or
+    ``None`` when there is no file (a table written before its side
+    file existed). A file that does not parse as a JSON object raises
+    ``ValueError`` naming the file."""
+    import json
+
+    fs, jpath = hadoop_fs(spark, path)
+    if not fs.exists(jpath):
+        return None
+    jvm = spark.sparkContext._jvm
+    reader = jvm.java.io.BufferedReader(
+        jvm.java.io.InputStreamReader(fs.open(jpath), "UTF-8")
+    )
+    try:
+        chunks = []
+        while (line := reader.readLine()) is not None:
+            chunks.append(line)
+    finally:
+        reader.close()
+    try:
+        meta = json.loads("".join(chunks))
+    except ValueError as e:
+        raise ValueError(f"unreadable side file {path}: {e}") from e
+    if not isinstance(meta, dict):
+        raise ValueError(f"unreadable side file {path}: not a JSON object: {meta!r}")
+    return meta
 
 
 def map_rows(df, in_cols, row_fn, schema, on_error=None,

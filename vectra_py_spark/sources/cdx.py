@@ -370,8 +370,7 @@ def recrawl_priority(df, now_ts: str):
     - ``priority`` = change_rate × ln(1 + age_days), rounded to 6 dp
 
     Pure Catalyst over the index; ORDER BY priority DESC is the
-    recrawl queue. Deterministic closed form → SQL-twinnable (r10
-    oracle candidate)."""
+    recrawl queue. Deterministic closed form → SQL-twinnable."""
     from pyspark.sql import functions as F
 
     def _epoch(col):

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from vectra_py_spark.functions.urls import canonical_url, host_of
+from vectra_py_spark.session import local_frame
 
 __all__ = ["stream_frontier"]
 
@@ -35,7 +36,7 @@ def _read_store(spark, store_path: str) -> DataFrame:
     try:
         return spark.read.schema(_STORE_SCHEMA).parquet(store_path)
     except Exception:
-        return spark.createDataFrame([], _STORE_SCHEMA)
+        return local_frame(spark, [], _STORE_SCHEMA)
 
 
 def stream_frontier(

@@ -14,8 +14,11 @@ match needs the pigeonhole banding join (a doc probes ``radius+1``
 block keys), and banding + the drop decision is a two-stage aggregation
 — more than one stateful operator per streaming query is where
 Structured Streaming's state composition ends. ``foreachBatch`` gets
-the full batch planner per micro-batch (the SAME equi-join plan the
-batch operator uses, AQE included), and the store-append is the state,
+the full batch planner per micro-batch: each batch runs
+:func:`~vectra_py_spark.operators.dedup.incremental_dedup_against_store`,
+whose band join is the shared :mod:`~vectra_py_spark.operators.bands`
+kernel with its store-vs-batch pair rule (AQE included), and the
+store-append is the state,
 checkpointed by batch id for exactly-once. This is also the shape that
 swaps Parquet for Delta on a production deployment.
 
@@ -33,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from vectra_py_spark.operators.dedup import incremental_dedup_against_store
+from vectra_py_spark.session import local_frame
 
 __all__ = ["stream_neardup_dedup"]
 
@@ -43,7 +47,7 @@ def _read_store(spark, store_path: str) -> DataFrame:
     try:
         return spark.read.schema(_STORE_SCHEMA).parquet(store_path)
     except Exception:
-        return spark.createDataFrame([], _STORE_SCHEMA)
+        return local_frame(spark, [], _STORE_SCHEMA)
 
 
 def stream_neardup_dedup(

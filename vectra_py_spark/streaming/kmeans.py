@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from vectra_py_spark.operators.cluster import _assign_expr
+from vectra_py_spark.session import local_frame
 
 __all__ = ["stream_kmeans"]
 
@@ -57,7 +58,7 @@ def _read_km_store(spark, store_path: str) -> DataFrame:
     except AnalysisException as exc:
         msg = str(exc)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return spark.createDataFrame([], _KM_STORE_SCHEMA)
+            return local_frame(spark, [], _KM_STORE_SCHEMA)
         raise
 
 

@@ -362,7 +362,7 @@ def split_documents(
     if tokenizer == "space" and chunk_overlap > 0:
         # SingleSpaceTokenizer is count-only: its token lists are all-1
         # placeholders, so overlap context attached from them would be
-        # meaningless. Refuse on the driver (ADVICE r7).
+        # meaningless. Refuse on the driver.
         raise ValueError(
             "tokenizer='space' is count-only and cannot supply overlap "
             "context; use chunk_overlap=0 or tokenizer='bpe'"
