@@ -56,13 +56,18 @@ def warm_serving(spark, sf_dir: str) -> dict:
     - ``adhoc``: a fresh single-query plan per request (honest
       per-request latency — dominated by plan analysis + codegen, the
       'Spark is not an online ANN server' floor), and
-    - ``batch``: Q queries served in one pass via the broadcast-Q-matrix
-      matmul (`cosine_topk_batch`) — the design answer, amortizing the
-      fixed plan cost across the batch.
+    - ``batch``: Q queries served in one call of `cosine_topk_batch`.
+      ``emb`` is cached and fits the broadcast budget, so this measures
+      the DRIVER placement: one matmul over a driver copy of the cached
+      rows (loaded by the untimed warm-up call), handed back as a local
+      relation. Before the driver placement it measured one Spark pass
+      (a broadcast Q matrix, one matmul per Arrow batch, one merge task),
+      which is what an uncached or over-budget input still runs.
     """
     # Serving cache layout: ~50k rows per partition (≈25 MB BLAS blocks
-    # at dim 64) — cosine_topk_batch runs at the input's partitioning,
-    # so the cache layout IS the matmul parallelism knob.
+    # at dim 64): the Spark placement of cosine_topk_batch runs at the
+    # input's partitioning, so there the cache layout is the matmul
+    # parallelism knob.
     raw = load(spark, sf_dir, "embeddings")
     n_rows = raw.count()
     emb = raw.repartition(max(1, min(32, n_rows // 50_000 + 1))).cache()
@@ -76,7 +81,7 @@ def warm_serving(spark, sf_dir: str) -> dict:
     adhoc_ms = (time.perf_counter() - t0) * 1000.0 / n_adhoc
 
     # -- batched: Q queries in one pass (warm-up pass first so we
-    #    measure steady state, not Python-worker spin-up). The gate
+    #    measure steady state, not the driver copy's load). The gate
     #    metric is the MEDIAN of three full passes: the r5 artifact
     #    recorded 2.157 ms/q while three quiet-box re-runs of the same
     #    code sat at 1.84–2.24 (median 1.88) — a single-pass number

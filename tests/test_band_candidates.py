@@ -269,6 +269,39 @@ def test_block_index_layout_and_legacy_probe(spark, tmp_path):
     assert {d.split("=")[0] for d in _dirs(vpath)} == {"block_idx"}
 
 
+
+def test_band_index_writers_refuse_blocks_wider_than_int(spark, tmp_path):
+    """At radius 1 a 64-bit hash splits into 32-bit blocks, which the
+    INT ``block_val`` partition column cannot hold: both writers refuse
+    before any job runs, naming the limit."""
+    hashes = local_frame(spark, [("m0", 0x0123456789ABCDEF), ("m1", -77)],
+                         "media_id STRING, phash BIGINT")
+    assert bands.index_pigeonhole(3, 64) == bands.pigeonhole(3, 64)
+    for name, write in (
+        ("phash", lambda p: phash_write_index(hashes, p, radius=1)),
+        ("video", lambda p: video_write_index(hashes.withColumn("frame_idx", F.lit(0)), p, radius=1)),
+    ):
+        path = str(tmp_path / name)
+        with pytest.raises(ValueError, match=r"radius 1 on 64-bit hashes makes 32-bit blocks; "
+                                             r"a band index holds blocks of at most 31 bits"):
+            write(path)
+        assert not os.path.exists(path)
+
+
+def test_incremental_dedup_keeps_a_custom_id_column(spark):
+    """``id_col`` names the id of every intermediate frame, so an
+    ``id``-keyed corpus dedups to the same survivors as ``doc_id``."""
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select("doc_id", "text")
+    corpus, batch = docs.filter(F.col("doc_id") % 5 != 0), docs.filter(F.col("doc_id") % 5 == 0)
+    want = dd.incremental_dedup(corpus, batch, radius=1)
+    got = dd.incremental_dedup(
+        corpus.withColumnRenamed("doc_id", "id"), batch.withColumnRenamed("doc_id", "id"),
+        radius=1, id_col="id",
+    )
+    assert got.columns == ["id", "simhash16"]
+    rows = [tuple(r) for r in want.collect()]
+    assert rows and [tuple(r) for r in got.collect()] == rows
+
 def _chirps(seed: int, seconds: float = 1.0, sr: int = 8000) -> np.ndarray:
     rng = np.random.default_rng(seed)
     n = int(seconds * sr) // 8

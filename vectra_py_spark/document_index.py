@@ -61,6 +61,7 @@ from pyspark.sql import types as T
 from vectra_py_spark.embeddings import DeterministicEmbedder, embed_chunks, scrub_newlines
 from vectra_py_spark.filters import NotExact
 from vectra_py_spark.index import SparkVectorIndex
+from vectra_py_spark.operators.similarity import broadcast_budget
 from vectra_py_spark.render import RenderedSection, ScoredChunk, render_sections
 from vectra_py_spark.session import local_frame
 from vectra_py_spark.text.splitter import split_documents
@@ -200,7 +201,7 @@ class SparkDocumentIndex:
         of ``(document_id, uri, text)``. Raises :class:`NotExact` when it
         is over the budget or a uri or id repeats; that answer stands
         until the next write."""
-        budget = self.index._budget()
+        budget = broadcast_budget(self.spark)
         if self._catalog is not None:
             if chunk_bytes + self._catalog.nbytes <= budget:
                 return self._catalog
@@ -255,7 +256,7 @@ class SparkDocumentIndex:
         try:
             delta(cat)
             total = cat.nbytes + self._chunk_bytes()
-            if total > self.index._budget():
+            if total > broadcast_budget(self.spark):
                 raise NotExact(f"growing to {total} bytes with the chunks, over the broadcast budget")
         except NotExact as e:
             log.info("catalog of %s dropped by %s", self.base_path, e)
@@ -444,7 +445,7 @@ class SparkDocumentIndex:
         if cat is not None:
             # never collect a batch that cannot fit beside both snapshots
             size = staged.agg(F.sum(_row_bytes())).head()[0] or 0
-            chunk_bytes, budget = self._chunk_bytes(), self.index._budget()
+            chunk_bytes, budget = self._chunk_bytes(), broadcast_budget(self.spark)
             if cat.nbytes + size + chunk_bytes > budget:
                 log.info(
                     "catalog of %s dropped by a staged batch of %d bytes: %s", self.base_path,

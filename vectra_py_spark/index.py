@@ -69,11 +69,7 @@ from vectra_py_spark.filters import (
     compile_mask,
 )
 from vectra_py_spark.functions.vector import cosine_to_query, l2_norm, query_norm
-from vectra_py_spark.operators.similarity import (
-    BROADCAST_BYTES_CONF,
-    DEFAULT_BROADCAST_BYTES,
-    _vector_set_bytes,
-)
+from vectra_py_spark.operators.similarity import _vector_set_bytes, broadcast_budget
 from vectra_py_spark.session import (
     hadoop_fs,
     hash_buckets,
@@ -440,9 +436,6 @@ class SparkVectorIndex:
             self._cached = None
 
     # -- serving snapshot ---------------------------------------------------
-    def _budget(self) -> int:
-        return int(self.spark.conf.get(BROADCAST_BYTES_CONF, str(DEFAULT_BROADCAST_BYTES)))
-
     def _mask_kinds(self) -> dict[str, str]:
         """The columns a filter mask can read exactly: ``id`` and the
         BIGINT/INT/STRING indexed fields (a DOUBLE column is left out:
@@ -466,7 +459,7 @@ class SparkVectorIndex:
         if self._snap_refused is not None:
             raise NotExact(self._snap_refused)
         items = self.items()
-        size, budget = _vector_set_bytes(items, "vector"), self._budget()
+        size, budget = _vector_set_bytes(items, "vector"), broadcast_budget(self.spark)
         if size > budget:
             self._snap_refused = f"{size} bytes over the broadcast budget of {budget}"
             log.info("snapshot of %s refused: %s", self.path, self._snap_refused)
@@ -494,7 +487,7 @@ class SparkVectorIndex:
             if delta is None:
                 raise NotExact("a write with no known delta")
             new = delta(snap)
-            if new.nbytes() > self._budget():
+            if new.nbytes() > broadcast_budget(self.spark):
                 raise NotExact(f"growing to {new.nbytes()} bytes, over the broadcast budget")
         except NotExact as e:
             log.info("snapshot of %s dropped by %s", self.path, e)
@@ -820,7 +813,7 @@ class SparkVectorIndex:
             if staged is None:
                 return snap.take(keep)
             grown = snap.nbytes() + n_staged * ((self.vector_dim or 0) * 8 + 24)
-            if grown > self._budget():  # never collect a batch that cannot fit
+            if grown > broadcast_budget(self.spark):  # never collect a batch that cannot fit
                 raise NotExact(f"a batch of {n_staged} rows, over the broadcast budget")
             # the batch as written, norms included: collected only here,
             # while a snapshot is loaded

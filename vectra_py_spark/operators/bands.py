@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "BLOCK_KEY",
     "pigeonhole",
+    "index_pigeonhole",
     "block_rows",
     "block_keys",
     "block_predicate",
@@ -53,6 +54,8 @@ __all__ = [
 
 # the band key of pigeonhole block rows, in plans and in index directories
 BLOCK_KEY = ["block_idx", "block_val"]
+# widest block a band index holds: its block_val partition column is INT
+INDEX_BLOCK_BITS = 31
 
 
 def pigeonhole(radius: int, bits: int, bits_name: str = "bits"):
@@ -67,6 +70,22 @@ def pigeonhole(radius: int, bits: int, bits_name: str = "bits"):
         )
     width = bits // n_blocks
     return n_blocks, width, (1 << width) - 1
+
+
+def index_pigeonhole(radius: int, bits: int):
+    """:func:`pigeonhole` for a band-index write, whose ``block_val``
+    partition column is INT: raises ``ValueError`` before any job when
+    a block is wider than :data:`INDEX_BLOCK_BITS` (radius 0 or 1 on
+    64-bit hashes), whose values would overflow the cast partway
+    through the write."""
+    geometry = pigeonhole(radius, bits)
+    if geometry[1] > INDEX_BLOCK_BITS:
+        raise ValueError(
+            f"radius {radius} on {bits}-bit hashes makes {geometry[1]}-bit "
+            f"blocks; a band index holds blocks of at most "
+            f"{INDEX_BLOCK_BITS} bits (its block_val is INT)"
+        )
+    return geometry
 
 
 def block_rows(df: DataFrame, fp_col: str, geometry,

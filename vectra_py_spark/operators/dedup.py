@@ -631,7 +631,8 @@ def minhash_probe(
 def simhash(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Frequency-weighted 16-bit SimHash fingerprint per document.
+    """Frequency-weighted 16-bit SimHash fingerprint per document:
+    ``(id_col, simhash16)``.
 
     Bit b of a word's hash comes from nibble b//4 of its md5 hex; doc
     bit = sign of the summed ±1 votes; fingerprint = packed bits.
@@ -678,10 +679,10 @@ def simhash(
                 fp = sum(1 << b for b in range(SIMHASH_BITS) if votes[b] > 0)
                 ids_out.append(i)
                 fp_out.append(fp)
-            yield pd.DataFrame({"doc_id": ids_out, "simhash16": fp_out})
+            yield pd.DataFrame({id_col: ids_out, "simhash16": fp_out})
 
     return spread(df.select(id_col, text_col)).mapInPandas(
-        gen, schema=f"doc_id {id_type}, simhash16 bigint"
+        gen, schema=f"{id_col} {id_type}, simhash16 bigint"
     )
 
 
@@ -718,7 +719,7 @@ def simhash_neardup(
         simhash(df, id_col=id_col, text_col=text_col), "simhash16", geometry
     )
     return (
-        band_pairs(blocks, BLOCK_KEY, "doc_id", {"simhash16": "fp"})
+        band_pairs(blocks, BLOCK_KEY, id_col, {"simhash16": "fp"})
         .withColumn("hamming", hamming("fp_a", "fp_b"))
         .filter(F.col("hamming") <= radius)
         .select("id_a", "id_b", "hamming")

@@ -51,6 +51,7 @@ from vectra_py_spark.operators.bands import (
     block_rows,
     hamming,
     index_geometry,
+    index_pigeonhole,
     pigeonhole,
     write_band_index,
 )
@@ -270,7 +271,7 @@ def phash_write_index(
     at write (small-files discipline)."""
     from pyspark.sql import functions as F
 
-    geometry = pigeonhole(radius, bits)
+    geometry = index_pigeonhole(radius, bits)
     fp = hashes.filter(F.col(fp_col).isNotNull()).select(
         F.col(id_col).alias("media_id"), F.col(fp_col).alias("fp")
     )

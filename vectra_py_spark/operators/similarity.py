@@ -3,6 +3,9 @@ LSH-bucketed ANN (SURVEY.md §2.3 V8, BASELINE.json north star).
 
 - :func:`cosine_topk` — exact 1×N search: HOF cosine →
   ``TakeOrderedAndProject`` (the reference's query, distributed).
+- :func:`cosine_topk_batch` — exact Q×N search, one block scorer in two
+  placements: a driver matmul over a cached, in-budget frame, else one
+  Spark pass of Arrow-batch blocks and a merge.
 - :func:`cosine_similarity_join` — exact N×M ≥-threshold pair join.
   Quadratic: the oracle/recall baseline, fine at test scale, NOT the
   100 TB path.
@@ -29,12 +32,19 @@ partitioning by bucket prefix gives partition pruning per query.
 
 from __future__ import annotations
 
+import logging
+import math
+import threading
+import time
 from collections.abc import Sequence
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vectra_py_spark.functions.vector import (
     cosine_to_query,
@@ -43,10 +53,11 @@ from vectra_py_spark.functions.vector import (
     vector_literal,
 )
 from vectra_py_spark.operators.bands import band_pairs
-from vectra_py_spark.session import spread
+from vectra_py_spark.session import local_frame, spread
 
 __all__ = [
     "cosine_topk",
+    "broadcast_budget",
     "resolve_similarity_strategy",
     "kmeans_centroids",
     "cosine_topk_sql",
@@ -78,6 +89,9 @@ __all__ = [
 ]
 
 _DP = 6
+
+# the engine's broadcast-budget decisions (strategy, batch placement)
+log = logging.getLogger("vectra_py_spark.similarity")
 
 
 def _round_half_away(a: "np.ndarray", dp: int = _DP) -> "np.ndarray":
@@ -113,6 +127,13 @@ BROADCAST_BYTES_CONF = "vectra_py_spark.similarity.broadcastBytes"
 DEFAULT_BROADCAST_BYTES = 256 * 1024 * 1024
 
 
+def broadcast_budget(spark: SparkSession) -> int:
+    """Bytes of vectors the driver may collect or broadcast:
+    :data:`BROADCAST_BYTES_CONF`, else :data:`DEFAULT_BROADCAST_BYTES`.
+    Every size-aware choice in the package reads the budget here."""
+    return int(spark.conf.get(BROADCAST_BYTES_CONF, str(DEFAULT_BROADCAST_BYTES)))
+
+
 def _vector_set_bytes(df: DataFrame, vector_col: str) -> int:
     """Estimated driver-side size of the collected id+vector set: one
     cheap count/max-dim aggregation job (the scan is column-pruned to the
@@ -146,12 +167,13 @@ def resolve_similarity_strategy(
     """
     if strategy != "auto":
         return strategy
-    limit = int(
-        df.sparkSession.conf.get(
-            BROADCAST_BYTES_CONF, str(DEFAULT_BROADCAST_BYTES)
-        )
+    size, budget = _vector_set_bytes(df, vector_col), broadcast_budget(df.sparkSession)
+    picked = small if size <= budget else large
+    log.info(
+        "strategy auto resolved to %s: %d bytes of vectors against the "
+        "broadcast budget of %d", picked, size, budget,
     )
-    return small if _vector_set_bytes(df, vector_col) <= limit else large
+    return picked
 
 
 # ---------------------------------------------------------------------------
@@ -188,6 +210,203 @@ def cosine_topk_sql(
     """
 
 
+# ---------------------------------------------------------------------------
+# Batched exact top-k: one block scorer, two placements
+# ---------------------------------------------------------------------------
+_SCALE = 10.0 ** _DP
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_BLOCK_CELLS = 1 << 22  # scores per driver block: 32 MB of float64
+
+
+def _unit_rows(M: "np.ndarray") -> "np.ndarray":
+    """Rows scaled to unit L2 norm; a zero row stays zero."""
+    mn = np.linalg.norm(M, axis=1)
+    mn[mn == 0.0] = 1.0
+    return M / mn[:, None]
+
+
+def _rounded_dots(S: "np.ndarray", Mu: "np.ndarray", Qu: "np.ndarray", r, c) -> "np.ndarray":
+    """``_round_half_away(S)`` of the BLAS dots ``S[i]`` of the unit (or
+    zero) rows ``Mu[r[i]]`` and ``Qu[c[i]]``, with the same bits
+    whatever order BLAS summed them in.
+
+    A BLAS dot's last bits depend on the block's row count and on the
+    BLAS thread count (a Python worker runs one thread, the driver
+    several). Two summation orders of ``d`` unit-vector products differ
+    by at most ``d·eps``, so only a dot within twice that of a 6-dp half
+    step, or of zero (whose sign the rounding keeps), can round two
+    ways. Those few are recomputed as ``math.fsum`` of the products,
+    which is correctly rounded in any order."""
+    R = _round_half_away(S)
+    t = np.abs(S) * _SCALE
+    frac = t + 0.5 - np.floor(t + 0.5)
+    tol = 2 * Mu.shape[1] * np.finfo(np.float64).eps * _SCALE
+    near = np.flatnonzero((t < tol) | (np.abs(frac - 0.5) > 0.5 - tol))
+    # a zero vector's products are all zero: its dot is 0.0 in any order
+    near = near[Mu[r[near]].any(axis=1) & Qu[c[near]].any(axis=1)]
+    for i in near.tolist():
+        R[i] = _round_half_away(math.fsum(Mu[r[i]] * Qu[c[i]]) + 0.0)
+    return R
+
+
+def _first_k(qid: "np.ndarray", ids: "np.ndarray", score: "np.ndarray", k: int):
+    """The first ``k`` rows of each query in (query_id, score DESC, id
+    ASC) order: a block's selection and the merge of blocks' survivors."""
+    order = np.lexsort((ids, -score, qid))
+    qid, ids, score = qid[order], ids[order], score[order]
+    start = np.flatnonzero(np.diff(qid, prepend=-1))
+    rank = np.arange(len(qid)) - np.repeat(start, np.diff(np.append(start, len(qid))))
+    keep = rank < k
+    return qid[keep], ids[keep], score[keep]
+
+
+def _topk_block(ids: "np.ndarray", Mu: "np.ndarray", Qu: "np.ndarray", k: int):
+    """Exact top-``k`` of every query over one block of rows — a Python
+    worker's Arrow batch or a whole driver copy: ``(query_id, id,
+    score)`` arrays in (query_id, score DESC, id ASC) order, each score
+    ``_round_half_away`` of the cosine (:func:`_rounded_dots`).
+
+    One product ``Mu @ Qu.T`` scores the block. Per query, the ``k``-th
+    largest dot bounds the candidates: every row whose dot is within 3.5
+    rounding steps of it, a superset of the rows whose rounded score can
+    reach the ``k``-th rounded score (a rounded score is within half a
+    step of its dot, and re-rounding a dot near a half step moves it by
+    one step at most), so a tie at the boundary keeps the smaller id. A
+    NaN dot never qualifies."""
+    n = len(ids)
+    take = min(k, n)
+    if not take:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.float64)
+    S = Mu @ Qu.T  # n × Q
+    nan = np.isnan(S)
+    kth = np.partition(np.where(nan, -np.inf, S) if nan.any() else S, n - take, axis=0)[n - take]
+    r, c = np.nonzero(S >= kth - 3.5 / _SCALE)
+    return _first_k(c, ids[r], _rounded_dots(S[r, c], Mu, Qu, r, c), take)
+
+
+class _DriverCopy(NamedTuple):
+    """A cached frame's ``(id, vector)`` rows on the driver: int64
+    ``ids`` and the unit rows ``Mu``, keyed on the cache entry they were
+    read from, with their size as the budget check measured it."""
+
+    key: tuple
+    ids: "np.ndarray"
+    Mu: "np.ndarray"
+    size: int
+
+
+# the one driver copy, and the last refusal with the budget it was made
+# against: at most one copy is held, so memory stays within the budget.
+# Concurrent callers check and replace it under the lock.
+_batch_slot: dict = {"copy": None, "refused": None}
+_batch_lock = threading.Lock()
+
+
+def _cache_key(df: DataFrame, id_col: str, vector_col: str):
+    """``(application id, RDD id, id_col, vector_col)`` of ``df``'s
+    in-memory cache entry, or None when ``df`` is not cached. The RDD
+    of the entry's column buffers is its identity: another DataFrame of
+    the same plan shares it, and a write that recaches the source path,
+    or an ``unpersist()``, ends it."""
+    spark = df.sparkSession
+    entry = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    if entry.isEmpty():
+        return None
+    rdd = entry.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers()
+    return (spark.sparkContext.applicationId, rdd.id(), id_col, vector_col)
+
+
+def _cache_live(spark: SparkSession, key) -> bool:
+    sc = spark.sparkContext
+    return key[0] == sc.applicationId and sc._jsc.sc().getPersistentRDDs().contains(key[1])
+
+
+def _drop_copy(why: str) -> None:
+    held, _batch_slot["copy"] = _batch_slot["copy"], None
+    log.info("driver copy of cache entry %d dropped: %s", held.key[1], why)
+
+
+def _copy_arrays(table: "pa.Table", id_col: str, vector_col: str):
+    """``(ids, Mu)`` of a collected ``(id, vector)`` table, else the
+    reason its rows cannot be scored on the driver as a worker scores
+    them."""
+    import pyarrow.compute as pc
+
+    ids, vecs = table.column(0), table.column(1).combine_chunks()
+    if ids.null_count:
+        return None, f"a null {id_col}"
+    if vecs.null_count:
+        return None, f"a null {vector_col}"
+    values = vecs.flatten()
+    if values.null_count:
+        return None, f"a null element in {vector_col}"
+    lengths = pc.list_value_length(vecs).to_numpy()
+    d = int(lengths[0]) if len(lengths) else 0
+    if (lengths != d).any():
+        return None, f"ragged {vector_col} ({lengths.min()} to {lengths.max()} elements)"
+    M = values.to_numpy().astype(np.float64).reshape(len(lengths), d)
+    return (ids.to_numpy().astype(np.int64), _unit_rows(M)), None
+
+
+def _load_copy(df: DataFrame, key, budget: int):
+    """Read ``df``'s rows into the driver slot: one size check against
+    the budget, then one ``toArrow()`` of ``(id_col, vector_col)``. A
+    refusal stands until the cache entry or the budget changes."""
+    t0 = time.perf_counter()
+    id_col, vector_col = key[2], key[3]
+    pair = df.select(id_col, vector_col)
+    id_type, vec_type = (f.dataType for f in pair.schema.fields)
+    size = reason = None
+    if not isinstance(id_type, _INTEGRAL):
+        reason = f"{id_col} is {id_type.simpleString()}, not an integer"
+    elif not (isinstance(vec_type, T.ArrayType)
+              and isinstance(vec_type.elementType, (T.FloatType, T.DoubleType))):
+        reason = f"{vector_col} is {vec_type.simpleString()}, not an array of floats"
+    else:
+        size = _vector_set_bytes(pair, vector_col)
+        if size > budget:
+            reason = f"{size} bytes over the broadcast budget of {budget}"
+    if reason is None:
+        arrays, reason = _copy_arrays(pair.toArrow(), id_col, vector_col)
+    if reason is not None:
+        _batch_slot["refused"] = ((key, budget), reason)
+        log.info("cosine_topk_batch keeps the Spark plan on cache entry %d: %s", key[1], reason)
+        return None, reason
+    copy = _batch_slot["copy"] = _DriverCopy(key, *arrays, size)
+    log.info(
+        "cosine_topk_batch scores cache entry %d on the driver: %d rows, %d bytes "
+        "within the broadcast budget of %d, loaded in %.0f ms",
+        key[1], len(copy.ids), size, budget, (time.perf_counter() - t0) * 1e3,
+    )
+    return copy, None
+
+
+def _driver_copy(df: DataFrame, id_col: str, vector_col: str):
+    """``(copy, None)`` when :func:`cosine_topk_batch` can score ``df``
+    on the driver, else ``(None, reason)``. A held copy of another
+    entry is dropped once that entry is gone."""
+    if not hasattr(df, "_jdf"):
+        return None, "no py4j gateway (Spark Connect)"
+    spark = df.sparkSession
+    key = _cache_key(df, id_col, vector_col)
+    with _batch_lock:
+        held = _batch_slot["copy"]
+        if held is not None and held.key != key and not _cache_live(spark, held.key):
+            _drop_copy("its cache entry is gone")
+            held = None
+        if key is None:
+            return None, "the input is not cached"
+        budget = broadcast_budget(spark)
+        if held is not None and held.key == key:
+            if held.size <= budget:
+                return held, None
+            _drop_copy(f"{held.size} bytes over the broadcast budget of {budget}")
+        refused = _batch_slot["refused"]
+        if refused is not None and refused[0] == (key, budget):
+            return None, refused[1]
+        return _load_copy(df, key, budget)
+
+
 def cosine_topk_batch(
     df: DataFrame,
     queries: Sequence[Sequence[float]],
@@ -195,68 +414,79 @@ def cosine_topk_batch(
     id_col: str = "vec_id",
     vector_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k for a BATCH of query vectors in one job.
+    """Exact top-k for a BATCH of query vectors: one block scorer
+    (:func:`_topk_block`) in one of two placements, chosen by the input.
 
-    The per-query cost of a literal-vector plan is dominated by
-    analysis + codegen (~180 ms hot on local[32]); serving Q queries as
-    one broadcast matrix amortizes that to one matmul block per Arrow
-    batch (N×d @ d×Q) + per-partition partial top-k, then one narrow
-    shuffle on query_id for the global top-k. At 100 TB this is the
-    pattern for offline retrieval: thousands of queries per pass over
-    the items table instead of thousands of passes.
+    - **Driver.** When ``df`` is cached (``.cache()``/``.persist()``)
+      and its id+vector set fits :func:`broadcast_budget`, its rows are
+      read once into a driver copy (one size check, one ``toArrow()``)
+      and every call is one matmul over the copy, handed back as a local
+      relation: collecting the result runs no Spark job. The copy is
+      keyed on the Spark cache entry, not the Python object: another
+      DataFrame of the same cached plan shares it, a write that recaches
+      the source path reloads it, and ``unpersist()`` drops it. One copy
+      is held at a time. The load's decision is logged at INFO under
+      ``vectra_py_spark.similarity``; an over-budget refusal stands until
+      the cache entry or the budget changes.
+    - **Spark.** Otherwise — an uncached input, one over the budget, a
+      null id, a null or ragged vector, a non-integer ``id_col``, queries
+      of another dimension, or no py4j gateway (Spark Connect) — the
+      query matrix is broadcast and each Arrow batch of the input is one
+      block (N×d @ d×Q), then one narrow shuffle into one pandas task
+      merges the blocks' survivors. Each such call logs its reason at
+      DEBUG. At 100 TB this is the offline retrieval pattern: thousands
+      of queries per pass over the items table.
 
-    The matmul stage runs at the INPUT's partitioning — no ``spread()``:
-    big file sources arrive pre-split by ``maxPartitionBytes``, and a
-    serving deployment picks its cache layout deliberately (≈50k rows
-    per partition keeps each BLAS block ~25 MB at dim 64). Forcing a
-    fan-out exchange here costs more than the matmul it parallelizes
-    whenever the table is small enough that per-task overhead dominates
-    (measured 5.1 → 1.9 ms/query at sf0.1 by dropping it), and at scale
-    it would re-shuffle data the scan already split correctly.
+    The Spark placement runs at the INPUT's partitioning — no
+    ``spread()``: big file sources arrive pre-split by
+    ``maxPartitionBytes``, and a serving deployment picks its cache
+    layout deliberately (≈50k rows per partition keeps each BLAS block
+    ~25 MB at dim 64). Forcing a fan-out exchange here costs more than
+    the matmul it parallelizes whenever the table is small enough that
+    per-task overhead dominates (measured 5.1 → 1.9 ms/query at sf0.1 by
+    dropping it), and at scale it would re-shuffle data the scan already
+    split correctly.
 
-    Output: (query_id, id_col, score) — exact cosine, ties broken by id.
+    Both placements return the same rows and score bits whatever the
+    block shapes, the partitioning or the BLAS thread count: the
+    scores are rounded so that the summation order cannot show
+    (:func:`_rounded_dots`), and a rounded tie at the k boundary keeps
+    the smaller id. Rows with a NaN score are never returned.
+
+    Output: (query_id INT, id_col BIGINT, score DOUBLE) in (query_id,
+    score DESC, id ASC) order — exact cosine, ties broken by id.
     """
-    Q = np.array([[float(x) for x in q] for q in queries], dtype=np.float64)
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0.0] = 1.0
-    Qu = Q / qn[:, None]
+    if k < 1:
+        raise ValueError(f"k must be at least 1, got {k}")
+    Qu = _unit_rows(np.array([[float(x) for x in q] for q in queries], dtype=np.float64))
+    schema = f"query_id INT, {id_col} BIGINT, score DOUBLE"
+    copy, reason = _driver_copy(df, id_col, vector_col)
+    if copy is not None and len(copy.ids) and copy.Mu.shape[1] != Qu.shape[1]:
+        copy, reason = None, f"queries of dimension {Qu.shape[1]} against vectors of {copy.Mu.shape[1]}"
+    if copy is not None:
+        # blocks of rows bound the driver's score matrix; their survivors
+        # merge as the Spark placement's finisher merges them
+        step = max(1, _BLOCK_CELLS // len(Qu))
+        blocks = [_topk_block(copy.ids[s:s + step], copy.Mu[s:s + step], Qu, k)
+                  for s in range(0, max(1, len(copy.ids)), step)]
+        qid, ids, score = _first_k(*(np.concatenate(a) for a in zip(*blocks)), k)
+        rows = pa.table({"query_id": qid.astype(np.int32), id_col: ids, "score": score})
+        return local_frame(df.sparkSession, rows, schema)
+    log.debug("cosine_topk_batch runs the Spark plan: %s", reason)
     bc = df.sparkSession.sparkContext.broadcast(Qu)
-    nq = Q.shape[0]
 
     def block(batches):
         Qmat = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
             M = np.array(list(pdf[vector_col]), dtype=np.float64)
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0.0] = 1.0
-            sim = _round_half_away((M / mn[:, None]) @ Qmat.T)  # n×Q
-            take = min(k, len(ids))
-            out_q, out_id, out_s = [], [], []
-            for qi in range(Qmat.shape[0]):
-                col = sim[:, qi]
-                # exact (score DESC, id ASC) partial top-k: a plain
-                # argpartition on the ROUNDED score breaks boundary
-                # ties arbitrarily, which can drop the smaller-id row
-                # the global contract (and the oracle) requires before
-                # the finisher sees it. Select every row tied with the
-                # take-th score, then order the candidate set exactly.
-                kth = np.partition(col, len(col) - take)[len(col) - take]
-                cand = np.flatnonzero(col >= kth)
-                cand = cand[np.lexsort((ids[cand], -col[cand]))][:take]
-                out_q.extend([qi] * take)
-                out_id.extend(ids[cand])
-                out_s.extend(col[cand])
-            yield pd.DataFrame(
-                {"query_id": out_q, id_col: out_id, "score": out_s}
+            qid, ids, score = _topk_block(
+                pdf[id_col].to_numpy(dtype=np.int64), _unit_rows(M), Qmat, k
             )
+            yield pd.DataFrame({"query_id": qid, id_col: ids, "score": score})
 
-    schema = f"query_id INT, {id_col} BIGINT, score DOUBLE"
-    partial = df.select(id_col, vector_col).mapInPandas(
-        block, schema=schema
-    )
+    partial = df.select(id_col, vector_col).mapInPandas(block, schema=schema)
 
     # Global top-k finisher: the survivor set is k·Q·partitions rows, so
     # ONE round-robin exchange into one pandas task replaces the window
@@ -270,13 +500,10 @@ def cosine_topk_batch(
         if not chunks:
             return
         pdf = pd.concat(chunks, ignore_index=True)
-        if not len(pdf):
-            yield pdf
-            return
-        pdf = pdf.sort_values(
-            ["query_id", "score", id_col], ascending=[True, False, True]
+        qid, ids, score = _first_k(
+            pdf["query_id"].to_numpy(), pdf[id_col].to_numpy(), pdf["score"].to_numpy(), k
         )
-        yield pdf.groupby("query_id", sort=True).head(k)
+        yield pd.DataFrame({"query_id": qid, id_col: ids, "score": score})
 
     return partial.repartition(1).mapInPandas(finish, schema=schema)
 
@@ -1653,8 +1880,8 @@ def margin_bitext_mine(
         raise ValueError(f"unknown strategy {strategy!r}")
     if strategy != "hof":
         fits = (
-            _vector_set_bytes(src, vector_col) <= _broadcast_budget(src)
-            and _vector_set_bytes(tgt, vector_col) <= _broadcast_budget(tgt)
+            _vector_set_bytes(src, vector_col) <= broadcast_budget(src.sparkSession)
+            and _vector_set_bytes(tgt, vector_col) <= broadcast_budget(tgt.sparkSession)
         )
         if not fits:
             if strategy == "matmul":
@@ -1824,14 +2051,6 @@ def _margin_select(fwd, bwd, fwd_mean, bwd_mean, direction, threshold):
     return out.filter(F.col("margin") >= threshold)
 
 
-def _broadcast_budget(df) -> int:
-    return int(
-        df.sparkSession.conf.get(
-            BROADCAST_BYTES_CONF, str(DEFAULT_BROADCAST_BYTES)
-        )
-    )
-
-
 def _shard_pred(id_col: str, n: int, i: int, assign: str):
     if assign == "hash":
         return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n)) == F.lit(i)
@@ -1904,7 +2123,7 @@ def margin_bitext_mine_sharded(
             df if n == 1 else df.filter(_shard_pred(id_col, n, i, assign))
             for i in range(n)
         ]
-        budget = _broadcast_budget(df)
+        budget = broadcast_budget(df.sparkSession)
         if n == 1:
             if _vector_set_bytes(df, vector_col) > budget:
                 raise ValueError(

@@ -51,6 +51,7 @@ from vectra_py_spark.operators.bands import (
     block_rows,
     hamming,
     index_geometry,
+    index_pigeonhole,
     pigeonhole,
     write_band_index,
 )
@@ -208,7 +209,7 @@ def video_write_index(
     and are validated at probe time (the imagehash discipline)."""
     from pyspark.sql import functions as F
 
-    blocks = _frame_blocks(fh, pigeonhole(radius, bits), id_col)
+    blocks = _frame_blocks(fh, index_pigeonhole(radius, bits), id_col)
     write_band_index(
         blocks.select(
             F.col("id").alias("media_id"), "frame_idx", "fp",
