@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import logging
 import math
-import sys
 import threading
 import time
 import uuid
@@ -364,41 +363,37 @@ def test_the_copy_follows_the_cache_entry(spark, tmp_path, budget, caplog):
     assert info[3].endswith("dropped: its cache entry is gone") and len(info) == 4
 
 
-def test_concurrent_callers_share_one_slot(spark, budget):
-    """Threads alternating between two cached frames keep replacing the
-    one driver copy; each call still answers from its own frame."""
-    budget(1 << 30)
-    frames = []
-    for seed in (6, 7):
-        df = spark.createDataFrame(_rows(_vectors(50, seed)), SCHEMA).coalesce(1).cache()
-        df.count()
-        frames.append(df)
-    q = _queries(_vectors(50, 6), 4)
-    want = [_bits(cosine_topk_batch(_uncached(df), q, 3).collect()) for df in frames]
-    errors, switch = [], sys.getswitchinterval()
+def test_a_gone_copy_is_dropped_once_by_concurrent_callers(spark, monkeypatch, caplog):
+    """Callers that all find the held copy's cache entry gone check and
+    drop it one at a time: it is dropped once, and no caller sees it
+    half-dropped."""
+    df = spark.createDataFrame([(1, [1.0, 0.0])], SCHEMA)  # not cached
+    gone = sim._DriverCopy((spark.sparkContext.applicationId, -1, "vec_id", "embedding"),
+                           np.zeros(0, np.int64), np.zeros((0, 2)), 0)
+    sim._batch_slot["copy"] = gone
 
-    def caller(t: int) -> None:
+    def checked_slowly(spark, key) -> bool:
+        time.sleep(0.05)  # long enough for every caller to reach the check
+        return False
+
+    monkeypatch.setattr(sim, "_cache_live", checked_slowly)
+    answers = []
+
+    def caller() -> None:
         try:
-            for i in range(4):
-                f = (t + i) % 2
-                if _bits(cosine_topk_batch(frames[f], q, 3).collect()) != want[f]:
-                    errors.append((t, i))
+            answers.append(sim._driver_copy(df, "vec_id", "embedding"))
         except Exception as e:  # reported by the assertion below
-            errors.append(repr(e))
+            answers.append(repr(e))
 
-    threads = [threading.Thread(target=caller, args=(t,)) for t in range(6)]
-    sys.setswitchinterval(1e-5)
-    try:
+    threads = [threading.Thread(target=caller) for _ in range(4)]
+    with caplog.at_level(logging.INFO, logger=LOGGER):
         for th in threads:
             th.start()
         for th in threads:
-            th.join(timeout=120)
-    finally:
-        sys.setswitchinterval(switch)
-        for df in frames:
-            df.unpersist()
+            th.join(timeout=30)
     assert not any(th.is_alive() for th in threads)
-    assert errors == []
+    assert answers == [(None, "the input is not cached")] * 4
+    assert _messages(caplog) == ["driver copy of cache entry -1 dropped: its cache entry is gone"]
 
 
 def test_auto_strategy_choice_is_logged(spark, budget, caplog):
